@@ -91,9 +91,6 @@ object Hashing {
   // -------------------------------------------------------------- minhash
 
   /** i-th minhash of a hash-array expression `hArr`. */
-  def minhashSpark(hArr: String, i: Int): String =
-    s"array_min(transform($hArr, h -> (${A(i)}*h + ${B(i)}) % $P))"
-
   def minhashDuck(hArr: String, i: Int): String =
     s"list_min(list_transform($hArr, h -> (${A(i)}*h + ${B(i)}) % $P))"
 
@@ -104,9 +101,6 @@ object Hashing {
   def combine(ms: Seq[String]): String =
     ms.reduceLeft((acc, m) => s"(($acc)*31 + $m) % $P")
 
-  def bandSigSpark(hArr: String, band: Int): String =
-    combine((band * RowsPerBand until (band + 1) * RowsPerBand).map(minhashSpark(hArr, _)))
-
   def bandSigDuck(hArr: String, band: Int): String =
     combine((band * RowsPerBand until (band + 1) * RowsPerBand).map(minhashDuck(hArr, _)))
 
@@ -114,12 +108,6 @@ object Hashing {
 
   /** 32-bit SimHash over a token-hash-array expression `hArr`: bit b is set
     * iff sum over tokens of ±1 (by bit b of the token hash) is positive. */
-  def simhashSpark(hArr: String): String =
-    s"aggregate(transform(sequence(0, 31), b -> " +
-      s"IF(aggregate($hArr, CAST(0 AS BIGINT), (a, h) -> a + ((shiftright(h, b) & 1)*2 - 1)) > 0, " +
-      s"shiftleft(CAST(1 AS BIGINT), b), CAST(0 AS BIGINT))), " +
-      s"CAST(0 AS BIGINT), (a, x) -> a + x)"
-
   def simhashDuck(hArr: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 32), b -> " +
       s"CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform($hArr, h -> ((h >> b) & 1)*2 - 1)), " +

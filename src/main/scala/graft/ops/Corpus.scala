@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Corpus-construction operators for training-data pipelines: benchmark
   * decontamination and weighted mixture sampling. Absent from the reference
@@ -531,26 +532,6 @@ object Corpus {
     s"(((CAST(n_docs AS DOUBLE) - $df + 0.5) / ($df + 0.5)) * " +
       s"(($tf * $Bm25K1p1) / ($tf + $Bm25K1 * (0.25 + 0.75 * (dl / avgdl)))))"
 
-  /** The full impact-ordered posting table for `docs(textCol)`:
-    * (bkt, term, doc_id, dl, tf, impact, irank) where `impact` is the exact
-    * BM25 contribution of (term, doc) and `irank` ranks a term's postings by
-    * (impact DESC, doc_id ASC) — the impact ORDER a WAND-style serve reads
-    * prefixes of. `bkt` = polyhash(term) mod `buckets` is the partition key:
-    * a query's scan prunes to its terms' buckets before any posting is read.
-    *
-    * Scale shape: one explode + one (doc, term) count aggregate, one
-    * vocabulary-keyed df aggregate joined back on `term` (shuffle bounded by
-    * |postings|), one 1-row totals broadcast, and a per-term rank window —
-    * the window's sort is the same (term, impact) order the layout needs on
-    * disk anyway. No driver state, no driver collect. */
-  def bm25ImpactPostings(docs: DataFrame, textCol: String,
-      buckets: Int): DataFrame = {
-    val tf = bm25TermFreqs(docs, textCol)
-    bm25PostingsWith(tf,
-      tf.groupBy("term").agg(count(lit(1)).as("df")),
-      bm25CorpusStats(docs, textCol), buckets)
-  }
-
   /** Per-(doc, term) frequencies with doc length: (doc_id, dl, term, tf). */
   def bm25TermFreqs(docs: DataFrame, textCol: String): DataFrame =
     docs.select(col("doc_id"), expr(s"split($textCol, ' ')").as("w"))
@@ -564,12 +545,17 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
   /** Impact postings from EXPLICIT statistics sources — the segment-build
-    * primitive: the base build passes its own (df, stats); an APPEND
-    * segment passes the BASE index's persisted statistics, producing
-    * frozen-stats impacts (the Lucene-segment discipline: global stats go
-    * stale until compaction). A term absent from the stats source (brand-
-    * new vocabulary in a delta) scores with df = 0 — the maximal-idf
-    * convention, deterministic in both engines. */
+    * primitive. Output (bkt, term, doc_id, dl, tf, impact, irank):
+    * `impact` is the exact BM25 contribution of (term, doc), `irank` ranks
+    * a term's postings by (impact DESC, doc_id ASC) — the impact ORDER a
+    * WAND-style serve reads prefixes of — and `bkt` = polyhash(term) mod
+    * `buckets` is the partition key, so a query's scan prunes to its
+    * terms' buckets before any posting is read. The base build passes its
+    * own (df, stats); an APPEND segment passes the BASE index's persisted
+    * statistics, producing frozen-stats impacts (the Lucene-segment
+    * discipline: global stats go stale until compaction). A term absent
+    * from the stats source (brand-new vocabulary in a delta) scores with
+    * df = 0 — the maximal-idf convention, deterministic in both engines. */
   def bm25PostingsWith(tf: DataFrame, dfT: DataFrame, stats: DataFrame,
       buckets: Int): DataFrame = {
     import graft.functions.Hashing.polyHashSpark
@@ -585,8 +571,34 @@ object Corpus {
       .withColumn("irank", row_number().over(w))
       .withColumn("bkt",
         expr(s"CAST(${polyHashSpark("term")} % $buckets AS INT)"))
-      .select("bkt", "term", "doc_id", "dl", "tf", "impact", "irank")
+      .select(col("bkt"), col("term"), col("doc_id").cast("long").as("doc_id"),
+        col("dl"), col("tf"), col("impact"), col("irank"))
   }
+
+  /** The on-disk schemas of an impact index's tables: `postings` (what
+    * [[bm25PostingsWith]] writes, `bkt` being the partition directory),
+    * `df`, `stats` and `tombstones`. Readers pass them to
+    * `spark.read.schema`, so opening the index launches no
+    * schema-inference job. */
+  val Bm25PostingsSchema: StructType = StructType(Seq(
+    StructField("bkt", IntegerType), StructField("term", StringType),
+    StructField("doc_id", LongType), StructField("dl", IntegerType),
+    StructField("tf", LongType), StructField("impact", DoubleType),
+    StructField("irank", IntegerType)))
+  val Bm25DfSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+  val Bm25StatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType), StructField("sum_dl", LongType)))
+  val Bm25TombstoneSchema: StructType =
+    StructType(Seq(StructField("doc_id", LongType)))
+
+  /** Every segment's postings as one DataFrame: one pinned-schema scan per
+    * segment directory (each is its own partitioned table), unioned. */
+  private def readBm25Postings(spark: org.apache.spark.sql.SparkSession,
+      segPaths: Seq[String]): DataFrame =
+    segPaths
+      .map(p => spark.read.schema(Bm25PostingsSchema).parquet(s"$p/postings"))
+      .reduce(_.unionByName(_))
 
   /** Persist the impact index partitioned by term bucket, each file sorted
     * by (term, impact DESC): directory pruning kills non-query buckets and
@@ -634,34 +646,45 @@ object Corpus {
       deltaPath: String, buckets: Int): Unit =
     writePostings(
       bm25PostingsWith(bm25TermFreqs(deltaDocs, textCol),
-        spark.read.parquet(s"$basePath/df"),
-        spark.read.parquet(s"$basePath/stats"), buckets),
+        spark.read.schema(Bm25DfSchema).parquet(s"$basePath/df"),
+        spark.read.schema(Bm25StatsSchema).parquet(s"$basePath/stats"),
+        buckets),
       s"$deltaPath/postings", buckets)
 
   /** WAND-style threshold-pruned BM25 top-k over a persisted impact index —
     * the serving path whose results are PROVABLY identical to the exact
-    * full-corpus ranker, so its oracle is the exact SQL itself:
+    * full-corpus ranker, so its oracle is the exact SQL itself. It runs in
+    * two phases over the bucket- and term-pruned postings of the m query
+    * terms:
     *
-    *   1. Candidate seed: the top-`k` impact PREFIX of each query term's
-    *      posting list (irank <= k — a row-group-pruned prefix read), fully
-    *      scored. theta = the k-th best full score among them (fewer than k
-    *      seeds => theta = -inf, degrading to exact full scoring).
-    *   2. Safe prune: any doc outside {exists term with impact >= theta/m}
-    *      has ALL m query-term impacts strictly below theta/m, so its score
-    *      is strictly below theta and it cannot displace the seed top-k.
-    *      The surviving candidate set provably contains the true top-k.
-    *   3. Exact rescore of the survivors, top-k.
+    *   1. Threshold: the top-`k` impact PREFIX of each query term's posting
+    *      list (irank <= k, a row-group-pruned prefix read, at most m·k
+    *      rows) is collected to the driver EAGERLY, while the DataFrame is
+    *      built — the same bounded pull the batched serve makes for its
+    *      terms. θ = the k-th best PARTIAL score among the prefix docs:
+    *      their prefix impacts summed in query-term order, a term outside
+    *      the doc's prefixes adding 0.0. Fewer than k prefix docs ⇒
+    *      θ = -inf, degrading to exact full scoring. No shuffle runs here.
+    *   2. Prune and rescore: the postings scan keeps only `impact >= θ/m`,
+    *      a literal the Parquet reader gets, so row groups whose max impact
+    *      is below θ/m never leave disk — on the impact-sorted layout this
+    *      is ANOTHER prefix read, the set-oriented restatement of WAND's
+    *      pointer walk. The surviving doc ids semi-join back to their full
+    *      postings, which are rescored exactly, top-k.
     *
-    * At 100 TB the work is: a prefix read per query term (k postings), one
-    * bounded candidate-set scoring join, then a threshold scan of the query
-    * terms' lists that the impact-sorted layout turns into ANOTHER prefix
-    * read (row groups whose max impact < theta/m never leave disk) — the
-    * set-oriented restatement of WAND's pointer walk. theta itself rides a
-    * 1-row broadcast; no driver collect anywhere. */
+    * Safety rests on every stored impact being POSITIVE: the ratio idf
+    * (n_docs - df + 0.5) / (df + 0.5) is positive because df <= n_docs in
+    * the statistics the impact was computed with, and so is the saturated
+    * tf of a posting (tf >= 1). A partial score then sums, term by term,
+    * values no larger than the full score's, and floating-point addition is
+    * monotone, so partial <= full for every doc: the k prefix docs with
+    * partial >= θ have full scores >= θ, and θ is a lower bound on the true
+    * k-th score. A doc with no posting at `impact >= θ/m` has all m
+    * query-term impacts below θ/m, so its score is below θ and it cannot
+    * displace the top-k; the survivors contain the true top-k. */
   def bm25ImpactTopK(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String], k: Int, buckets: Int): DataFrame =
-    bm25ImpactTopKFrom(spark.read.parquet(s"$path/postings"),
-      terms, k, buckets)
+    bm25ImpactTopKFrom(spark, Seq(path), None, terms, k, buckets)
 
   /** Serve base ∪ delta segments: per-term prefixes come from EACH
     * segment (`irank` is segment-local — the union of both prefixes seeds
@@ -685,23 +708,22 @@ object Corpus {
     bm25ImpactTopKMultiseg(spark, basePath, Seq(deltaPath), terms, k, buckets)
 
   /** Serve base ∪ N delta segments — the general form of
-    * [[bm25ImpactTopKAppended]] (its N = 1 case delegates here): per-term
-    * impact prefixes are read from EVERY segment (iranks are segment-local;
-    * θ from ANY seed set is a valid k-th-best lower bound, so the safety
-    * proof is segment-count-independent) and the survivor threshold scans
-    * every segment's impact-ordered postings. All segments must carry
-    * pairwise-disjoint doc_id sets (the append precondition above). Serve
-    * cost is flat in segment count at fixed total size: each segment
-    * contributes the same bucket-pruned prefix + threshold reads the single
-    * index pays, just split across directories — measured by the bench's
-    * bm25_seg_sweep section. */
+    * [[bm25ImpactTopKAppended]] (its N = 1 case delegates here), in the two
+    * phases of [[bm25ImpactTopK]] over every segment's postings. Phase 1 collects each segment's `irank <= k` prefix rows
+    * (iranks are segment-local, so at most m·k rows per segment); a doc
+    * lives in one segment, so its partial score is still a sum of its own
+    * impacts and θ is a valid k-th-best lower bound for any segment count.
+    * Phase 2's `impact >= θ/m` threshold scans every segment's
+    * impact-ordered postings. All segments must carry pairwise-disjoint
+    * doc_id sets (the append precondition above). Serve cost is flat in
+    * segment count at fixed total size: each segment contributes the same
+    * bucket-pruned prefix + threshold reads the single index pays, just
+    * split across directories — measured by the bench's bm25_seg_sweep
+    * section. */
   def bm25ImpactTopKMultiseg(spark: org.apache.spark.sql.SparkSession,
       basePath: String, segPaths: Seq[String], terms: Seq[String], k: Int,
       buckets: Int): DataFrame =
-    bm25ImpactTopKFrom(
-      (basePath +: segPaths).map(p => spark.read.parquet(s"$p/postings"))
-        .reduce(_.unionByName(_)),
-      terms, k, buckets)
+    bm25ImpactTopKFrom(spark, basePath +: segPaths, None, terms, k, buckets)
 
   /** Persist a DELETE tombstone set against an impact index — the Lucene
     * `.liv` analog: a doc_id table under the index's own directory, the
@@ -710,32 +732,28 @@ object Corpus {
     * statistics until compaction physically drops it — serve-time filtering
     * ([[bm25ImpactTopKMultisegDeleted]]) is what hides it. */
   def writeBm25Tombstones(docIds: DataFrame, basePath: String): Unit =
-    docIds.select("doc_id").write.mode("overwrite")
+    docIds.select(col("doc_id").cast("long").as("doc_id")).write.mode("overwrite")
       .option("compression", "zstd").parquet(s"$basePath/tombstones")
 
-  /** Serve base ∪ N segments honoring the base index's TOMBSTONES: the
-    * postings view is filtered to live docs (one anti-join against the
-    * tombstone table — deletes ≪ corpus, so the build side is the small
-    * one) BEFORE the seed/θ/rescore pipeline, i.e. the serve runs over
-    * exactly the live index. The θ-prune safety proof is unaffected:
-    * `irank` prefixes may now hold fewer than k live seeds, but θ from ANY
-    * seed subset is a valid k-th-best lower bound (fewer than k seeds ⇒
-    * θ = -inf, exact scoring), and removing docs can only RAISE the true
-    * k-th score's bar — a tombstoned doc can never appear at any k because
-    * no posting of it survives the filter. Impacts stay AS STORED (the
-    * deleted docs still count in df/n_docs/avgdl — Lucene's stale-stats
-    * semantics until compaction). Bucket/term pruning still reaches every
-    * segment scan: the filters push through the anti-join's left side. */
+  /** Serve base ∪ N segments honoring the base index's TOMBSTONES: both
+    * phases of [[bm25ImpactTopKMultiseg]] read the LIVE postings, i.e. the
+    * postings anti-joined with the tombstone table (deletes ≪ corpus, so
+    * the build side is the small one). Phase 1's prefixes may then hold
+    * fewer than k live docs — every prefix posting of a term may be
+    * tombstoned — and θ = -inf then scores the live index exactly. With
+    * k or more live prefix docs, θ is the k-th best partial score among
+    * LIVE docs, a lower bound on the k-th best live score by the
+    * positive-impact argument of [[bm25ImpactTopK]]. Phase 2's survivors
+    * are live docs, so a tombstoned doc can never appear at any k. Impacts
+    * stay AS STORED (the deleted docs still count in df/n_docs/avgdl —
+    * Lucene's stale-stats semantics until compaction). Bucket, term and
+    * impact filters still reach every segment scan: they push through the
+    * anti-join's left side. */
   def bm25ImpactTopKMultisegDeleted(spark: org.apache.spark.sql.SparkSession,
       basePath: String, segPaths: Seq[String], terms: Seq[String], k: Int,
-      buckets: Int): DataFrame = {
-    val tomb = spark.read.parquet(s"$basePath/tombstones").select("doc_id")
-    val live = (basePath +: segPaths)
-      .map(p => spark.read.parquet(s"$p/postings"))
-      .reduce(_.unionByName(_))
-      .join(tomb, Seq("doc_id"), "left_anti")
-    bm25ImpactTopKFrom(live, terms, k, buckets)
-  }
+      buckets: Int): DataFrame =
+    bm25ImpactTopKFrom(spark, basePath +: segPaths,
+      Some(s"$basePath/tombstones"), terms, k, buckets)
 
   /** BATCHED WAND-style serve — the workload axis, set-oriented: ONE job
     * serves a whole query TABLE `queries(q_id, term)` against the impact
@@ -744,7 +762,8 @@ object Corpus {
     * plan instead of a driver loop). Differences from the single-query
     * serve:
     *   - the static bucket prune comes from ONE bounded driver pull — the
-    *     batch's distinct terms (workload-sized, like θ's 1-row broadcast);
+    *     batch's distinct terms (workload-sized, like the single-query
+    *     serve's prefix pull);
     *   - per-(q, doc) scores fold in TERM-SORTED order (both engines sort
     *     the (term, impact) structs, so the IEEE sum order is deterministic
     *     without per-query literal expressions);
@@ -767,7 +786,7 @@ object Corpus {
     require(terms.forall(_.forall(_ < 128)),
       "query terms must be ASCII (bucket hash is ascii-codepoint-based)")
     val bkts = terms.map(t => (polyHashLocal(t) % buckets).toInt).distinct
-    val idx = spark.read.parquet(s"$path/postings")
+    val idx = readBm25Postings(spark, Seq(path))
       .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
     // Per-query postings: the bucket-pruned index joined to the broadcast
     // workload — each posting row fans out only to the queries whose term
@@ -847,34 +866,34 @@ object Corpus {
     * postings COUNTS — the deterministic, engine-portable proxy for segment
     * bytes (postings rows × a fixed row width): fire when the accumulated
     * segments exceed `ratioPct`/100 of the base segment. Returns ONE row
-    * (n_base, n_segs, n_segments, should_compact) computed from the
-    * persisted indexes' Parquet metadata (a count() per path — no data
-    * columns are read). The decision is consumed driver-side at BUILD time
-    * (a 1-row pull, the merge-policy analog) — never in a serve path. */
+    * (n_base, n_segs, n_segments, should_compact) from the segments'
+    * postings scans with no data column read — only the Parquet footers'
+    * row counts. The scans run as one task, so the decision costs one
+    * Spark job; its file count is buckets × (1 + segments), which the
+    * trigger itself keeps bounded. The decision is consumed driver-side at
+    * BUILD time (a 1-row pull, the merge-policy analog) — never in a serve
+    * path. */
   def bm25CompactionTrigger(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, segPaths: Seq[String], ratioPct: Int): DataFrame = {
-    def n(p: String) =
-      spark.read.parquet(s"$p/postings").groupBy().agg(count(lit(1)).as("n"))
-    // Zero accumulated segments is a state the multiseg serve supports —
-    // give it the defined no-compact decision instead of reduce()'s bare
-    // UnsupportedOperationException (round-12 advice).
-    if (segPaths.isEmpty)
-      return n(basePath).select(col("n").as("n_base"),
-        lit(0L).as("n_segs"), lit(0).as("n_segments"),
-        lit(false).as("should_compact"))
-    val segs = segPaths.map(n).reduce(_.unionByName(_))
-      .agg(sum(col("n")).as("n_segs"))
-    n(basePath).select(col("n").as("n_base"))
-      .crossJoin(broadcast(segs))
+      basePath: String, segPaths: Seq[String], ratioPct: Int): DataFrame =
+    (basePath +: segPaths).zipWithIndex
+      .map { case (p, i) =>
+        spark.read.schema(Bm25PostingsSchema).parquet(s"$p/postings")
+          .select(lit(i == 0).as("_base"))
+      }
+      .reduce(_.unionByName(_))
+      .coalesce(1)
+      .agg(count_if(col("_base")).as("n_base"),
+        count_if(!col("_base")).as("n_segs"))
       .select(col("n_base"), col("n_segs"),
         lit(segPaths.size).as("n_segments"),
         (col("n_segs") * lit(100L) > col("n_base") * lit(ratioPct.toLong))
           .as("should_compact"))
-  }
 
-  private def bm25ImpactTopKFrom(postings: DataFrame, terms: Seq[String],
+  private def bm25ImpactTopKFrom(spark: org.apache.spark.sql.SparkSession,
+      segPaths: Seq[String], tombstones: Option[String], terms: Seq[String],
       k: Int, buckets: Int): DataFrame = {
     import graft.functions.Hashing.polyHashLocal
+    require(k > 0, s"k must be positive: $k")
     require(terms.nonEmpty && terms.distinct == terms, "distinct query terms")
     // polyHashLocal folds UTF-16 code units while the build side's
     // polyHashSpark folds ascii() code points — identical ONLY for ASCII
@@ -884,34 +903,39 @@ object Corpus {
       s"query terms must be ASCII (bucket hash is ascii-codepoint-based): " +
         terms.filter(!_.forall(_ < 128)).mkString(","))
     val bkts = terms.map(t => (polyHashLocal(t) % buckets).toInt).distinct
-    val idx = postings
+    val idx = readBm25Postings(spark, segPaths)
       .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
-    // Fixed-order rescore: one conditional MAX per query term (a doc has at
-    // most one posting per term), summed in QUERY order — the identical
-    // IEEE sequence the exact ranker's term1 + term2 + term3 evaluates, so
-    // scores hash-match the oracle bit-for-bit (a missing term contributes
-    // +0.0 exactly as a tf=0 term does in the exact ranker).
-    def rescore(cands: DataFrame): DataFrame = {
-      val perTerm = terms.zipWithIndex.map { case (t, i) =>
-        max(when(col("term") === t, col("impact"))).as(s"_i$i")
-      }
-      cands.join(idx, "doc_id")
-        .groupBy("doc_id", "dl")
-        .agg(perTerm.head, perTerm.tail: _*)
-        .withColumn("score", terms.indices
-          .map(i => coalesce(col(s"_i$i"), lit(0.0))).reduce(_ + _))
-        .select("doc_id", "dl", "score")
+    val live = tombstones.fold(idx) { t =>
+      idx.join(spark.read.schema(Bm25TombstoneSchema).parquet(t),
+        Seq("doc_id"), "left_anti")
     }
-    val seeds = idx.filter(col("irank") <= k).select("doc_id").distinct()
-    val theta = rescore(seeds)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .agg(count(lit(1)).as("_n"), min(col("score")).as("_kth"))
-      .select(when(col("_n") < k, lit(Double.MinValue))
-        .otherwise(col("_kth")).as("theta"))
-    val survivors = idx.crossJoin(broadcast(theta))
-      .filter(col("impact") >= col("theta") / lit(terms.size.toDouble))
-      .select("doc_id").distinct()
-    rescore(survivors)
+    // Phase 1: θ from the live prefixes' partial scores, summed in query
+    // order like the rescore below (see the safety argument on
+    // bm25ImpactTopK).
+    val partial = live.filter(col("irank") <= k)
+      .select("doc_id", "term", "impact").collect()
+      .groupBy(_.getLong(0)).values.map { rows =>
+        val byTerm = rows.groupMapReduce(_.getString(1))(_.getDouble(2))(math.max)
+        terms.map(byTerm.getOrElse(_, 0.0)).reduce(_ + _)
+      }.toSeq.sorted(Ordering[Double].reverse)
+    val theta = if (partial.size < k) Double.MinValue else partial(k - 1)
+    // Phase 2: threshold scan, then the fixed-order rescore: one
+    // conditional MAX per query term (a doc has at most one posting per
+    // term), summed in QUERY order — the identical IEEE sequence the exact
+    // ranker's term1 + term2 + term3 evaluates, so scores hash-match the
+    // oracle bit-for-bit (a missing term contributes +0.0 exactly as a
+    // tf=0 term does in the exact ranker).
+    val survivors = live
+      .filter(col("impact") >= lit(theta / terms.size)).select("doc_id")
+    val perTerm = terms.zipWithIndex.map { case (t, i) =>
+      max(when(col("term") === t, col("impact"))).as(s"_i$i")
+    }
+    idx.join(survivors, Seq("doc_id"), "left_semi")
+      .groupBy("doc_id", "dl")
+      .agg(perTerm.head, perTerm.tail: _*)
+      .withColumn("score", terms.indices
+        .map(i => coalesce(col(s"_i$i"), lit(0.0))).reduce(_ + _))
+      .select("doc_id", "dl", "score")
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
 }

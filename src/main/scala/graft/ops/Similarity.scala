@@ -10,7 +10,7 @@ import graft.expressions.DotProduct.dot
   * (`array<float>`). North-star operator — absent from the reference.
   *
   * Determinism: the dot product folds left-to-right over the array in both
-  * Spark (`aggregate`) and DuckDB (`list_reduce`), each term widened
+  * Spark ([[DotProduct]]) and DuckDB (`list_reduce`), each term widened
   * float→double (exact), so cosine values are bit-identical across engines
   * and oracle-checkable. Ranks tie-break on the neighbor id.
   *
@@ -23,18 +23,11 @@ import graft.expressions.DotProduct.dot
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two array-typed SQL expressions. */
-  def dotSpark(a: String, b: String): String =
-    s"aggregate(transform(sequence(1, size($a)), i -> " +
-      s"CAST(element_at($a, i) AS DOUBLE) * CAST(element_at($b, i) AS DOUBLE)), " +
-      s"CAST(0 AS DOUBLE), (x, y) -> x + y)"
-
+  /** Sequential-fold dot product of two array-typed SQL expressions
+    * (oracle dialect of the codegen'd [[DotProduct]]). */
   def dotDuck(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($a)+1), i -> " +
       s"CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"
-
-  def cosSpark(a: String, b: String): String =
-    s"${dotSpark(a, b)} / sqrt(${dotSpark(a, a)}) / sqrt(${dotSpark(b, b)})"
 
   def cosDuck(a: String, b: String): String =
     s"${dotDuck(a, b)} / sqrt(${dotDuck(a, a)}) / sqrt(${dotDuck(b, b)})"

@@ -1,10 +1,45 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Corpus
 
 class CorpusSpec extends SparkSpec {
+
+  /** Exact BM25 top-k by full scoring of every doc in `scored` under the
+    * statistics (n_docs, avgdl, per-term df) of `statsFrom`: passing the
+    * same corpus twice gives the refreshed-stats ranker, passing an
+    * index's base corpus as `statsFrom` gives the frozen-stats ranking of
+    * its appended segments. Rows (doc_id, dl, score) for docs with a
+    * query term, ordered (score desc, doc_id asc). */
+  private def exactBm25(scored: DataFrame, statsFrom: DataFrame,
+      terms: Seq[String], k: Int): Seq[(Long, Int, Double)] = {
+    val tfCols = terms.zipWithIndex.map { case (t, i) =>
+      sum(when(col("t") === t, 1L).otherwise(0L)).as(s"tf$i")
+    }
+    def tfs(docs: DataFrame) =
+      docs.select(col("doc_id"), expr("split(text, ' ')").as("w"))
+        .select(col("doc_id"), size(col("w")).as("dl"), explode(col("w")).as("t"))
+        .groupBy("doc_id", "dl").agg(tfCols.head, tfCols.tail: _*)
+    val stats = tfs(statsFrom).agg(
+      count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl") +:
+        terms.indices.map(i =>
+          sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i")): _*)
+    tfs(scored).crossJoin(broadcast(stats))
+      .withColumn("avgdl",
+        expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)"))
+      .withColumn("score", expr(terms.indices
+        .map(i => Corpus.bm25Term(s"tf$i", s"df$i")).mkString(" + ")))
+      .filter(col("score") > 0)
+      .select("doc_id", "dl", "score")
+      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+  }
+
+  private def scoredRows(df: DataFrame): Seq[(Long, Int, Double)] =
+    df.orderBy(col("score").desc, col("doc_id").asc)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
 
   test("decontaminate: cloned benchmark doc is fully contaminated, unrelated doc clean") {
     import spark.implicits._
@@ -216,35 +251,9 @@ class CorpusSpec extends SparkSpec {
     val tmp = graft.engine.TempDirs.create("graft_bm25spec")
     Corpus.writeBm25ImpactIndex(docs, "text", tmp, buckets = 4)
     val terms = Seq("spark", "vector", "customer")
-    def exact(k: Int) = {
-      val d = docs.select(col("doc_id"), expr("split(text, ' ')").as("w"))
-        .select(col("doc_id"), size(col("w")).as("dl"), col("w"))
-      val tf = d.select(col("doc_id"), col("dl"), explode(col("w")).as("t"))
-        .groupBy("doc_id", "dl")
-        .agg(
-          sum(when(col("t") === "spark", 1L).otherwise(0L)).as("tf1"),
-          sum(when(col("t") === "vector", 1L).otherwise(0L)).as("tf2"),
-          sum(when(col("t") === "customer", 1L).otherwise(0L)).as("tf3"))
-      val stats = tf.agg(
-        count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"),
-        sum(when(col("tf1") > 0, 1L).otherwise(0L)).as("df1"),
-        sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("df2"),
-        sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
-      tf.crossJoin(broadcast(stats))
-        .withColumn("avgdl",
-          expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)"))
-        .withColumn("score", expr(
-          s"${Corpus.bm25Term("tf1", "df1")} + ${Corpus.bm25Term("tf2", "df2")} + " +
-            Corpus.bm25Term("tf3", "df3")))
-        .filter(col("score") > 0)
-        .select("doc_id", "dl", "score")
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    }
+    def exact(k: Int) = exactBm25(docs, docs, terms, k)
     def served(k: Int) =
-      Corpus.bm25ImpactTopK(spark, tmp, terms, k, buckets = 4)
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+      scoredRows(Corpus.bm25ImpactTopK(spark, tmp, terms, k, buckets = 4))
     // k=2: theta prunes (6 scoring docs, only 2 survive) — BIT-equal scores.
     assert(served(2) === exact(2))
     // k=3 and k=5: intermediate prune depths.
@@ -398,6 +407,67 @@ class CorpusSpec extends SparkSpec {
       assert(got.forall(r => !deleted.contains(r._1)), s"k=$k: $got")
       assert(got === rows(Corpus.bm25ImpactTopKMultiseg(spark, pLive,
         Seq(p1), terms, k, buckets = 4)), s"k=$k")
+    }
+  }
+
+  test("bm25 two-phase serve edge cases: a fully tombstoned term prefix, " +
+      "a base/segment tie at the k-th score, k past the live doc count") {
+    import spark.implicits._
+    val terms = Seq("vector", "spark")
+    // (a) vector's impact order in the base is 0, 1, 2, 4 (tf, then dl
+    // saturation), so at k = 3 its whole prefix {0, 1, 2} is tombstoned:
+    // the live prefixes hold only docs 3 and 10, fewer than k, θ = -inf,
+    // and doc 4 — in no prefix — must still surface by full scoring.
+    val base = Seq(
+      (0L, "vector vector x"),
+      (1L, "vector x"),
+      (2L, "vector x x"),
+      (3L, "spark x"),
+      (4L, "vector x x x x x x"),
+      (5L, "x x")
+    ).toDF("doc_id", "text")
+    val seg = Seq((10L, "spark y")).toDF("doc_id", "text")
+    val deleted = Seq(0L, 1L, 2L)
+    val basePath = graft.engine.TempDirs.create("graft_bmedge_base")
+    val segPath = graft.engine.TempDirs.create("graft_bmedge_seg")
+    Corpus.writeBm25ImpactIndex(base, "text", basePath, buckets = 4)
+    Corpus.writeBm25Delta(spark, seg, "text", basePath, segPath, buckets = 4)
+    Corpus.writeBm25Tombstones(deleted.toDF("doc_id"), basePath)
+    val live = base.filter(!col("doc_id").isin(deleted: _*)).unionByName(seg)
+    def deletedServe(k: Int) = scoredRows(Corpus.bm25ImpactTopKMultisegDeleted(
+      spark, basePath, Seq(segPath), terms, k, buckets = 4))
+    val under = deletedServe(3)
+    assert(under === exactBm25(live, base, terms, 3))
+    assert(under.map(_._1).toSet === Set(3L, 4L, 10L), under)
+    // (c) k = 50 exceeds the 4 live docs (3 of them scoring): every
+    // scoring live doc, nothing else.
+    val past = deletedServe(50)
+    assert(past === exactBm25(live, base, terms, 50))
+    assert(past === under)
+
+    // (b) Under the base's frozen stats spark and vector share df = 2, so
+    // base doc 1 ('vector filler') and segment doc 10 ('spark aa') score
+    // bit-identically, behind doc 3 which carries both terms. At k = 2 the
+    // tie sits exactly at θ and doc_id breaks it for the base doc.
+    val tBase = Seq(
+      (0L, "spark filler filler"),
+      (1L, "vector filler"),
+      (2L, "filler filler filler filler"),
+      (3L, "spark vector")
+    ).toDF("doc_id", "text")
+    val tSeg = Seq((10L, "spark aa")).toDF("doc_id", "text")
+    val tBasePath = graft.engine.TempDirs.create("graft_bmtie_base")
+    val tSegPath = graft.engine.TempDirs.create("graft_bmtie_seg")
+    Corpus.writeBm25ImpactIndex(tBase, "text", tBasePath, buckets = 4)
+    Corpus.writeBm25Delta(spark, tSeg, "text", tBasePath, tSegPath, buckets = 4)
+    val tAll = tBase.unionByName(tSeg)
+    val full = exactBm25(tAll, tBase, terms, 10)
+    assert(full.map(_._1).take(3) === Seq(3L, 1L, 10L) &&
+      full(1)._3 == full(2)._3, full)
+    for (k <- Seq(1, 2, 3, 10)) {
+      assert(scoredRows(Corpus.bm25ImpactTopKMultiseg(spark, tBasePath,
+        Seq(tSegPath), terms, k, buckets = 4)) === exactBm25(tAll, tBase, terms, k),
+        s"k=$k")
     }
   }
 }

@@ -736,21 +736,49 @@ class PlanShapeSpec extends SparkSpec with SlowSuite {
     assert(!p.contains("dynamicpruningexpression(true)"), p)
   }
 
-  test("BM25 impact serve: bucket partition-pruned scans, prefix filter " +
-      "pushed, one theta broadcast, no cartesian") {
+  test("BM25 impact serve: bkt-pruned scans, impact bound pushed, no cartesian") {
     // The whole point of the impact index: serving never reads a bucket
-    // outside the query terms' (static partition pruning on bkt), the
-    // prefix read (irank <= k) and term filter reach the parquet reader,
-    // and theta rides the suite's standard 1-row scalar broadcast.
-    val p = plan(SparkEntry.queries("text_bm25_impact_topk")(spark, dir))
-    assert(!p.contains("CartesianProduct"), p)
+    // outside the query terms' (static partition pruning on bkt), and the
+    // term filter and the θ/m impact bound reach the parquet reader, so
+    // row groups below the bound never leave disk. θ comes from phase 1,
+    // the eager prefix collect made while the DataFrame is built: its plan
+    // reads only the irank <= k prefixes and runs no shuffle.
+    val collects = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.synchronized {
+          collects += qe.explainString(ExplainMode.fromString("formatted"))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    // The first construction builds the session's index; the second,
+    // under the listener, makes only the serve's own phase-1 collect.
+    SparkEntry.queries("text_bm25_impact_topk")(spark, dir)
+    spark.listenerManager.register(listener)
+    val p =
+      try {
+        val p = plan(SparkEntry.queries("text_bm25_impact_topk")(spark, dir))
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (collects.synchronized(collects.isEmpty) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        p
+      } finally spark.listenerManager.unregister(listener)
+    assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"), p)
     val scans = p.linesIterator.filter(_.contains("PartitionFilters")).toSeq
     assert(scans.nonEmpty && scans.forall(_.contains("bkt")), p)
-    assert(p.contains("LessThanOrEqual(irank,20)"), p)
-    assert(p.linesIterator.exists(l =>
-      l.contains("PushedFilters") && l.contains("In(term, [")), p)
-    assert(p.linesIterator.count(
-      l => l.contains("- BroadcastNestedLoopJoin")) == 1, p)
+    assert(p.linesIterator.exists(l => l.contains("PushedFilters") &&
+      l.contains("In(term, [") && l.contains("GreaterThanOrEqual(impact,")), p)
+    val phase1 = collects.synchronized(collects.toSeq)
+    assert(phase1.nonEmpty, "phase-1 collect never observed")
+    phase1.foreach { q =>
+      assert(q.linesIterator.exists(l => l.contains("PushedFilters") &&
+        l.contains("LessThanOrEqual(irank,20)") && l.contains("In(term, [")), q)
+      assert(q.linesIterator.exists(l =>
+        l.contains("PartitionFilters") && l.contains("bkt")), q)
+      assert(!q.contains("Exchange"), q)
+    }
   }
 
   test("BATCHED BM25 impact serve: bucket-pruned scans, workload joins " +
