@@ -1,30 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // AQE runtime conversions judge by compressed shuffle bytes — cap
-      // them conservatively (see GraftSession for the q21-at-100x OOM).
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "8m")
-      // One file per bucket is guaranteed by Bucketing.writeBucketed, so
-      // bucketed scans may report their sortBy order (see GraftSession).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Keep the bounded top-k aggregates on the hash path past 128 query
-      // groups per task (see GraftSession for sizing rationale).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local("graft-bench")
     // Absorb session bootstrap (codegen, JIT, shuffle service) outside the
     // per-query timings.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -40,15 +18,20 @@ object Bench {
     // first) consumer happens to trigger the materialization — round 4's
     // corpus_refinery at 9.3 s was ~80% this attribution artifact. Dev
     // subsets (SPARK_GRAFT_ONLY) skip the fronting, so a lone family
-    // measurement still sees its own build cost.
-    val pipelineTimes: Seq[(String, Double)] =
-      if (only.isEmpty)
-        SparkEntry.pipelines.map { case (name, build) =>
-          val t0 = System.nanoTime()
-          try build(spark, sfDir) catch { case _: Throwable => () }
-          name -> (System.nanoTime() - t0) / 1e9
+    // measurement still sees its own build cost. A build that throws is
+    // reported as `pipeline:<name>` in the `failed` list and left out of
+    // the times, never timed as a fast success.
+    val pipelineRuns = if (only.nonEmpty) Seq.empty else
+      SparkEntry.pipelines.map { case (name, build) =>
+        val t0 = System.nanoTime()
+        val ok = try { build(spark, sfDir); true } catch { case e: Throwable =>
+          println(s"[bench] pipeline:$name failed: ${e.getMessage}")
+          false
         }
-      else Seq.empty
+        (name, (System.nanoTime() - t0) / 1e9, ok)
+      }
+    val pipelineTimes = pipelineRuns.collect { case (k, t, true) => k -> t }
+    val pipelineFailures = pipelineRuns.collect { case (k, _, false) => s"pipeline:$k" }
     // Fixed (sorted) execution order: Map iteration order scatters the
     // session's cold-start costs (codegen/JIT of the first big expression
     // trees) onto arbitrary queries each build, which round 3 showed as a
@@ -899,6 +882,7 @@ object Bench {
     pipelineTimes.foreach { case (k, v) =>
       println(f"BENCH_DETAIL pipeline:$k ${v}%.3f")
     }
+    pipelineFailures.foreach(k => println(s"BENCH_DETAIL $k FAILED"))
     finalResults.toSeq.sortBy(-_._2._1).foreach { case (k, (med, spread, failed)) =>
       val tag = if (healApplied.contains(k) || secondHeal.contains(k)) " healed"
         else ""
@@ -1014,8 +998,8 @@ object Bench {
     println(s"""BENCH_QUERIES {"queries":{$fullMap}}""")
     val ps = pipelineTimes.map { case (k, v) => s"\"$k\":${r3(v)}" }
       .mkString("{", ",", "}")
-    val failedNames = finalResults.collect { case (k, (_, _, true)) => s"\"$k\"" }
-      .toSeq.sorted.mkString("[", ",", "]")
+    val failedNames = (finalResults.collect { case (k, (_, _, true)) => k }.toSeq ++
+      pipelineFailures).sorted.map(k => s"\"$k\"").mkString("[", ",", "]")
     // Only APPLIED heals ride the headline (round 15): spread-trips whose
     // retry confirmed the original median are heal_noop detail lines.
     val healedNames = (healApplied.keySet ++ secondHeal.keySet).toSeq.sorted

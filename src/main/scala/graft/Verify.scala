@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,25 +10,7 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.engine.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // AQE runtime conversions judge by compressed shuffle bytes — cap
-      // them conservatively (see GraftSession for the q21-at-100x OOM).
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "8m")
-      // One file per bucket is guaranteed by Bucketing.writeBucketed, so
-      // bucketed scans may report their sortBy order (see GraftSession).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -52,7 +33,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // A subset run lists only its own queries' oracles, so the compare
+    // counts every listed key without a result as missing.
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   *     left to AQE's coalescing with a high initial value).
   */
 object GraftSession {
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS` when set (the deployment setting), else every
+    * core the JVM sees. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def builder(appName: String = "graft", cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession.builder()

@@ -344,9 +344,7 @@ object AnnSweep {
     books.select(col("subspace"), col("code"), col("cent"))
       .write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$path/books")
-    enc.repartition(col("cluster"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cluster").parquet(s"$path/cells")
+    Layout.writeCells(enc, "cluster", s"$path/cells")
     // Epoch LAST — the stamp marks a complete layout ([[Layout.stampEpoch]]).
     Layout.stampEpoch(enc.sparkSession, path)
   }

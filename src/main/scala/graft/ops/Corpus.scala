@@ -577,8 +577,8 @@ object Corpus {
 
   /** The on-disk schemas of an impact index's tables: `postings` (what
     * [[bm25PostingsWith]] writes, `bkt` being the partition directory),
-    * `df`, `stats` and `tombstones`. Readers pass them to
-    * `spark.read.schema`, so opening the index launches no
+    * `df` and `stats` ([[Layout.tombstones]] pins `tombstones`). Readers
+    * pass them to `spark.read.schema`, so opening the index launches no
     * schema-inference job. */
   val Bm25PostingsSchema: StructType = StructType(Seq(
     StructField("bkt", IntegerType), StructField("term", StringType),
@@ -589,16 +589,12 @@ object Corpus {
     StructField("term", StringType), StructField("df", LongType)))
   val Bm25StatsSchema: StructType = StructType(Seq(
     StructField("n_docs", LongType), StructField("sum_dl", LongType)))
-  val Bm25TombstoneSchema: StructType =
-    StructType(Seq(StructField("doc_id", LongType)))
 
-  /** Every segment's postings as one DataFrame: one pinned-schema scan per
-    * segment directory (each is its own partitioned table), unioned. */
-  private def readBm25Postings(spark: org.apache.spark.sql.SparkSession,
+  /** Every segment's postings ([[Layout.live]] with the pinned schema). */
+  private def bm25Postings(spark: org.apache.spark.sql.SparkSession,
       segPaths: Seq[String]): DataFrame =
-    segPaths
-      .map(p => spark.read.schema(Bm25PostingsSchema).parquet(s"$p/postings"))
-      .reduce(_.unionByName(_))
+    Layout.live(spark, segPaths.map(p => s"$p/postings"), "doc_id", None,
+      Some(Bm25PostingsSchema))
 
   /** Persist the impact index partitioned by term bucket, each file sorted
     * by (term, impact DESC): directory pruning kills non-query buckets and
@@ -622,17 +618,9 @@ object Corpus {
   }
 
   private def writePostings(postings: DataFrame, path: String,
-      buckets: Int): Unit = {
-    val n = postings.sparkSession.sessionState.conf.numShufflePartitions
-    postings
-      // Explicit-count repartition (the AQE single-partition trap): the
-      // bucket key has only `buckets` distinct values, and sorting within
-      // partitions needs real parallelism behind it.
-      .repartition(math.min(n, buckets), col("bkt"))
-      .sortWithinPartitions(col("bkt"), col("term"), col("impact").desc)
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("bkt").parquet(path)
-  }
+      buckets: Int): Unit =
+    Layout.writeCells(postings, "bkt", path,
+      Seq(col("term"), col("impact").desc), maxCells = buckets)
 
   /** Append a DELTA segment to a [[writeBm25ImpactIndex]] index under
     * FROZEN base statistics (df, n_docs, avgdl read from the index's own
@@ -732,8 +720,7 @@ object Corpus {
     * statistics until compaction physically drops it — serve-time filtering
     * ([[bm25ImpactTopKMultisegDeleted]]) is what hides it. */
   def writeBm25Tombstones(docIds: DataFrame, basePath: String): Unit =
-    docIds.select(col("doc_id").cast("long").as("doc_id")).write.mode("overwrite")
-      .option("compression", "zstd").parquet(s"$basePath/tombstones")
+    Layout.writeTombstones(docIds, "doc_id", basePath)
 
   /** Serve base ∪ N segments honoring the base index's TOMBSTONES: both
     * phases of [[bm25ImpactTopKMultiseg]] read the LIVE postings, i.e. the
@@ -752,8 +739,8 @@ object Corpus {
   def bm25ImpactTopKMultisegDeleted(spark: org.apache.spark.sql.SparkSession,
       basePath: String, segPaths: Seq[String], terms: Seq[String], k: Int,
       buckets: Int): DataFrame =
-    bm25ImpactTopKFrom(spark, basePath +: segPaths,
-      Some(s"$basePath/tombstones"), terms, k, buckets)
+    bm25ImpactTopKFrom(spark, basePath +: segPaths, Some(basePath), terms, k,
+      buckets)
 
   /** BATCHED WAND-style serve — the workload axis, set-oriented: ONE job
     * serves a whole query TABLE `queries(q_id, term)` against the impact
@@ -786,7 +773,7 @@ object Corpus {
     require(terms.forall(_.forall(_ < 128)),
       "query terms must be ASCII (bucket hash is ascii-codepoint-based)")
     val bkts = terms.map(t => (polyHashLocal(t) % buckets).toInt).distinct
-    val idx = readBm25Postings(spark, Seq(path))
+    val idx = bm25Postings(spark, Seq(path))
       .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
     // Per-query postings: the bucket-pruned index joined to the broadcast
     // workload — each posting row fans out only to the queries whose term
@@ -890,7 +877,7 @@ object Corpus {
           .as("should_compact"))
 
   private def bm25ImpactTopKFrom(spark: org.apache.spark.sql.SparkSession,
-      segPaths: Seq[String], tombstones: Option[String], terms: Seq[String],
+      segPaths: Seq[String], tombstonesOf: Option[String], terms: Seq[String],
       k: Int, buckets: Int): DataFrame = {
     import graft.functions.Hashing.polyHashLocal
     require(k > 0, s"k must be positive: $k")
@@ -903,12 +890,12 @@ object Corpus {
       s"query terms must be ASCII (bucket hash is ascii-codepoint-based): " +
         terms.filter(!_.forall(_ < 128)).mkString(","))
     val bkts = terms.map(t => (polyHashLocal(t) % buckets).toInt).distinct
-    val idx = readBm25Postings(spark, segPaths)
+    val idx = bm25Postings(spark, segPaths)
       .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
-    val live = tombstones.fold(idx) { t =>
-      idx.join(spark.read.schema(Bm25TombstoneSchema).parquet(t),
-        Seq("doc_id"), "left_anti")
-    }
+    // One postings read serves the rescore (`idx`) and both phases (`live`,
+    // the pruned `idx` minus tombstones).
+    val live = tombstonesOf.fold(idx)(ix =>
+      Layout.dropTombstoned(idx, Layout.tombstones(spark, ix, "doc_id"), "doc_id"))
     // Phase 1: θ from the live prefixes' partial scores, summed in query
     // order like the rescore below (see the safety argument on
     // bm25ImpactTopK).

@@ -1,21 +1,71 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.expressions.ZOrderValue
 
 /** Physical-layout writers beyond hash bucketing ([[Bucketing]]): Z-order
-  * clustering for multi-dimensional pruning — plus the layout EPOCH
-  * stamp/guard pair the materializing serves use against stale frames. */
+  * clustering, the layout EPOCH stamp/guard pair the materializing serves
+  * use against stale frames, and the ONE segment layer of the three index
+  * families (BM25 impact, dense IVF/IVF-PQ, token-IVF MaxSim):
+  * [[writeCells]] writes a base, segment or compacted table,
+  * [[writeTombstones]] records deletes without rewriting any segment (the
+  * Lucene `.liv` analog), and [[live]] reads base ∪ segments − tombstones,
+  * so compaction is `writeCells` over `live`. */
 object Layout {
+
+  /** The one writer of a cell-partitioned index table: an explicit-count
+    * repartition on `cell` (AQE coalesces a bare `repartition(col)` of a
+    * low-cardinality key), a sort on `cell +: sortBy`, zstd, `partitionBy`.
+    * Each cell lands in one task, so each cell directory holds ONE file;
+    * written straight from the input tasks, tasks × cells small files made
+    * cell reads dominate the MaxSim serve at 100× data. `maxCells` caps the
+    * task count when the cell domain is smaller than the shuffle width. */
+  def writeCells(df: DataFrame, cell: String, path: String,
+      sortBy: Seq[Column] = Nil, maxCells: Int = Int.MaxValue): Unit = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    df.repartition(math.min(n, maxCells), col(cell))
+      .sortWithinPartitions(col(cell) +: sortBy: _*)
+      .write.mode("overwrite").option("compression", "zstd")
+      .partitionBy(cell).parquet(path)
+  }
+
+  /** Persist a delete set against the index at `index`: its ids, as longs,
+    * in `<index>/tombstones` — an O(|deletes|) write. */
+  def writeTombstones(ids: DataFrame, idCol: String, index: String): Unit =
+    ids.select(col(idCol).cast("long").as(idCol)).write.mode("overwrite")
+      .option("compression", "zstd").parquet(s"$index/tombstones")
+
+  /** The tombstones of the index at `index`, read with their pinned schema. */
+  def tombstones(spark: SparkSession, index: String, idCol: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField(idCol, LongType))))
+      .parquet(s"$index/tombstones")
+
+  /** `df` without the rows whose `idCol` is in `tomb`. */
+  def dropTombstoned(df: DataFrame, tomb: DataFrame, idCol: String): DataFrame =
+    df.join(tomb, Seq(idCol), "left_anti")
+
+  /** The LIVE rows of a segmented index: the `tables` (base and segments,
+    * each its own partitioned directory) unioned by name, minus the
+    * tombstones of the index at `tombstonesOf`. A given `schema` pins the
+    * tables' schema, so no schema-inference job runs. Filters on the result
+    * push through the anti-join and the union into every table scan. */
+  def live(spark: SparkSession, tables: Seq[String], idCol: String,
+      tombstonesOf: Option[String], schema: Option[StructType] = None): DataFrame = {
+    val all = tables
+      .map(t => schema.fold(spark.read)(spark.read.schema).parquet(t))
+      .reduce(_.unionByName(_))
+    tombstonesOf.fold(all)(ix =>
+      dropTombstoned(all, tombstones(spark, ix, idCol), idCol))
+  }
 
   /** Stamp a layout with a fresh epoch (a random UUID written as a one-row
     * parquet beside the data). Index writers call this LAST, so an epoch is
     * only present once the layout is complete; [[epochGuard]] is the read
     * side. Returns the epoch. */
-  def stampEpoch(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String): String = {
+  def stampEpoch(spark: SparkSession, layoutPath: String): String = {
     val epoch = java.util.UUID.randomUUID.toString
     import spark.implicits._
     Seq(epoch).toDF("epoch").coalesce(1)
@@ -32,8 +82,7 @@ object Layout {
     * a stale frame fails loud instead of answering from a dead layout.
     * None when the layout carries no epoch (hand-built fixtures) — guard
     * becomes a no-op, not a requirement. Attach via [[withEpochGuard]]. */
-  def epochGuard(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String): Option[DataFrame] = {
+  def epochGuard(spark: SparkSession, layoutPath: String): Option[DataFrame] = {
     val p = s"$layoutPath/layout_epoch"
     if (!new java.io.File(p).exists()) None
     else {

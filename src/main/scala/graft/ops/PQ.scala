@@ -190,29 +190,30 @@ object PQ {
       .select(col("q_vec"), col("rank"), col("neighbor"), col("adist"))
   }
 
-  /** Persist an IVF-PQ index — the train-once / serve-many artifact:
-    * encoded cells (id + m codes, PARTITIONED BY the coarse cell so a
-    * probe's cells are whole directories), the coarse centroids, and the
-    * codebooks as scalar rows. The cells table stores NO raw vectors —
-    * serving reads m small ints per candidate, the 16-32× scan shrink that
-    * is PQ's whole point at 100 TB. */
   /** Encode an ALREADY-ASSIGNED batch with EXISTING codebooks and write it
     * as a cells table (id + m codes, partitioned by the coarse cell — the
     * exact layout [[writeIvfPqIndex]] uses). This is the append-only index
     * MAINTENANCE path: a daily ingest encodes only its own rows (map-side,
-    * no shuffle beyond the partitioned write) and lands as a delta cells
-    * directory beside the base index — no retraining, nothing rewritten. */
+    * no shuffle beyond the one-file-per-cell write, [[Layout.writeCells]])
+    * and lands as a delta cells directory beside the base index — no
+    * retraining, nothing rewritten. */
   def writeCells(
       assigned: DataFrame, books: Seq[Seq[(Int, Seq[Double])]],
       idCol: String, vecCol: String, dims: Int, path: String): Unit = {
     val m = books.size
-    encode(assigned.select(col(idCol), col("cluster"), col(vecCol)),
-        vecCol, books, dims / m)
-      .select(col(idCol) +: (0 until m).map(j => col(s"code$j")) :+ col("cluster"): _*)
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cluster").parquet(path)
+    Layout.writeCells(
+      encode(assigned.select(col(idCol), col("cluster"), col(vecCol)),
+          vecCol, books, dims / m)
+        .select(col(idCol) +: (0 until m).map(j => col(s"code$j")) :+ col("cluster"): _*),
+      "cluster", path, Seq(col(idCol)))
   }
 
+  /** Persist an IVF-PQ index — the train-once / serve-many artifact:
+    * encoded cells (id + m codes, PARTITIONED BY the coarse cell, one file
+    * per cell, so a probe's cells are whole directories), the coarse
+    * centroids, and the codebooks as scalar rows. The cells table stores
+    * NO raw vectors — serving reads m small ints per candidate, the 16-32×
+    * scan shrink that is PQ's whole point at 100 TB. */
   def writeIvfPqIndex(
       assigned: DataFrame, cents: DataFrame,
       books: Seq[Seq[(Int, Seq[Double])]], idCol: String, vecCol: String,

@@ -177,15 +177,17 @@ object Similarity {
   }
 
   /** Persist the IVF index: cell members written PARTITIONED BY the cell
-    * label — a probe's nprobe cells are whole partition DIRECTORIES, so
-    * the serving scan reads nprobe/|cells| of the corpus via partition
-    * pruning instead of filtering after a full scan — plus the min-id
+    * label, one file per cell ([[Layout.writeCells]]) — a probe's nprobe
+    * cells are whole partition DIRECTORIES, so the serving scan reads
+    * nprobe/|cells| of the corpus via partition pruning instead of
+    * filtering after a full scan — plus the min-id
     * representative table. Norms are precomputed into the index (pay once
     * at build, never at query time). */
   def writeIvfIndex(vecs: DataFrame, idCol: String, vecCol: String,
       labelCol: String, path: String): Unit = {
-    vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col(labelCol))
-      .write.mode("overwrite").option("compression", "zstd").partitionBy(labelCol).parquet(s"$path/cells")
+    Layout.writeCells(
+      vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col(labelCol)),
+      labelCol, s"$path/cells", Seq(col(idCol)))
     // min_by, not a corpus-wide row_number window — see [[knnIvf]].
     vecs.groupBy(col(labelCol))
       .agg(min_by(col(vecCol), col(idCol)).as("rep_emb"))
@@ -203,9 +205,9 @@ object Similarity {
     * pays training. `assigned`/`cents` are [[KMeans.lloyd]]'s outputs. */
   def writeKmeansIvfIndex(assigned: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, path: String): Unit = {
-    assigned
-      .select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col("cluster"))
-      .write.mode("overwrite").option("compression", "zstd").partitionBy("cluster").parquet(s"$path/cells")
+    Layout.writeCells(
+      assigned.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col("cluster")),
+      "cluster", s"$path/cells", Seq(col(idCol)))
     cents.select(col("cluster"), col("cent"))
       .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/cents")
     // Epoch LAST — the stamp marks a complete layout ([[Layout.stampEpoch]]).

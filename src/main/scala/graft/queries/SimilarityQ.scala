@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.engine.Catalog
-import graft.ops.Similarity
+import graft.ops.{Layout, Similarity}
 import graft.ops.Similarity.cosDuck
 
 /** Oracle-checked similarity-search queries over `embeddings`. Probes are
@@ -357,7 +357,7 @@ object SimilarityQ {
     // construction: dropping a doc from the candidates drops exactly its
     // fetched rows.
     val candLive = tomb.fold(candSide)(t =>
-      candSide.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      Layout.dropTombstoned(candSide, broadcast(t), "doc_id"))
     // MULTI-SEGMENT fetch is ONE join (round 18; the r18 before-bench
     // measured the two-segment lifecycle serves ~+1.0 s over their union
     // siblings while the ONE-part compacted_fwd ran FASTER than its union
@@ -385,7 +385,7 @@ object SimilarityQ {
     // candidate side: one-row cross joins evaluated at EVERY execution, so
     // a frame whose layout was rewritten after materialization fails loud
     // (round 18 — see [[graft.ops.Layout.epochGuard]]).
-    val candGuarded = graft.ops.Layout.withEpochGuard(
+    val candGuarded = Layout.withEpochGuard(
       candLive, fwd.flatMap(_.guard))
     // Same finite-candT guard as always: a full-probe serve must not
     // broadcast the unbounded candidate set.
@@ -551,17 +551,15 @@ object SimilarityQ {
   private val maxsimFwdCache = new SessionCache[String](_ => ())
 
   /** One linear pass: token rows → fb = pmod(doc_id, buckets) → one file
-    * per bucket dir (the ivf_pq_compact discipline; pmod keeps negative
+    * per bucket dir ([[graft.ops.Layout.writeCells]]; pmod keeps negative
     * delta doc_ids in range, matching the serve's candidate-side fb). */
   private def writeForwardBuckets(df: org.apache.spark.sql.DataFrame,
       tag: String, buckets: Int): String = {
     val tmp = graft.engine.TempDirs.create(tag)
-    df.select(col("doc_id"), col("v0"), col("v1"), col("v2"), col("v3"))
-      .withColumn("fb", pmod(col("doc_id"), lit(buckets)).cast("int"))
-      .repartition(col("fb"))
-      .sortWithinPartitions("fb", "doc_id")
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("fb").parquet(s"$tmp/forward")
+    Layout.writeCells(
+      df.select(col("doc_id"), col("v0"), col("v1"), col("v2"), col("v3"))
+        .withColumn("fb", pmod(col("doc_id"), lit(buckets)).cast("int")),
+      "fb", s"$tmp/forward", Seq(col("doc_id")), maxCells = buckets)
     // The modulus is PART OF THE LAYOUT (advice r15): a serve whose
     // candidate-side fb disagrees with the modulus the buckets were
     // written with silently matches nothing — candidate docs would drop
@@ -572,7 +570,7 @@ object SimilarityQ {
     Seq(buckets).toDF("buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/forward_meta")
     // Epoch LAST — the stamp marks a complete layout ([[graft.ops.Layout]]).
-    graft.ops.Layout.stampEpoch(s, tmp)
+    Layout.stampEpoch(s, tmp)
     tmp
   }
 
@@ -588,28 +586,21 @@ object SimilarityQ {
       // selection at construction, so each bucketed part carries an
       // execution-time epoch assertion — a frame reused across a layout
       // rewrite fails loud instead of serving the stale selection.
-      graft.ops.Layout.epochGuard(s, layoutPath))
+      Layout.epochGuard(s, layoutPath))
 
-  private def maxsimForwardBucketed(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimFwdCache.getOrElseUpdate(s, dir) {
-      writeForwardBuckets(
-        s.read.parquet(s"${maxsimIndex(s, dir)}/cells"),
-        "graft_msfwd", MsFwdBuckets)
-    }
-
-  /** Forward component of the BIGVOCAB base index — the lifecycle serves'
-    * base segment (round 15: the append/delete/compacted serves previously
-    * forward-read the cells union, correct but corpus-linear at serve
-    * time — the exact shape the base serve's fwd row escaped in r14). */
   private val maxsimFwdBigCache = new SessionCache[String](_ => ())
 
-  private def maxsimForwardBig(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimFwdBigCache.getOrElseUpdate(s, dir) {
+  /** `big` = the forward component of the BIGVOCAB base index — the
+    * lifecycle serves' base segment (round 15: the append/delete/compacted
+    * serves previously forward-read the cells union, correct but
+    * corpus-linear at serve time — the exact shape the base serve's fwd row
+    * escaped in r14). */
+  private def maxsimForwardBucketed(s: org.apache.spark.sql.SparkSession,
+      dir: String, big: Boolean = false): String =
+    (if (big) maxsimFwdBigCache else maxsimFwdCache).getOrElseUpdate(s, dir) {
       writeForwardBuckets(
-        s.read.parquet(s"${maxsimIndexBig(s, dir)}/cells"),
-        "graft_msfwd_big", MsFwdBuckets)
+        s.read.parquet(s"${maxsimIndex(s, dir, big)}/cells"),
+        if (big) "graft_msfwd_big" else "graft_msfwd", MsFwdBuckets)
     }
 
   /** Forward component of the DELTA segment, written beside the base with
@@ -634,11 +625,10 @@ object SimilarityQ {
   private def maxsimForwardCompacted(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     maxsimFwdCompactCache.getOrElseUpdate(s, dir) {
-      val tomb = s.read.parquet(s"${maxsimTombstoned(s, dir)}/tombstones")
-      val live = Seq(maxsimForwardBig(s, dir), maxsimForwardDelta(s, dir))
-        .map(p => s.read.parquet(s"$p/forward").drop("fb"))
-        .reduce(_.unionByName(_))
-        .join(tomb, Seq("doc_id"), "left_anti")
+      val live = Layout.live(s,
+        Seq(maxsimForwardBucketed(s, dir, big = true), maxsimForwardDelta(s, dir))
+          .map(p => s"$p/forward"),
+        "doc_id", Some(maxsimTombstoned(s, dir)))
       writeForwardBuckets(live, "graft_msfwd_compact", MsFwdBuckets)
     }
 
@@ -650,27 +640,30 @@ object SimilarityQ {
     * index's own cells — or, for the bounded-at-scale variant, the
     * doc_id-bucketed [[maxsimForwardBucketed]] component (round 14). */
   private val maxsimIndexCache = new SessionCache[String](_ => ())
+  private val maxsimIndexBigCache = new SessionCache[String](_ => ())
 
-  private def maxsimIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    maxsimIndexCache.getOrElseUpdate(s, dir) {
-      val (assigned, cents) = maxsimIvf(s, dir)
-      val tmp = graft.engine.TempDirs.create("graft_msivf")
-      // One file per cell (the ivf_pq_compact discipline): the cluster
-      // repartition lands each cell in exactly one task, so each partition
-      // dir gets a single doc-ordered file. Without it every input task
-      // writes into every cell dir — kc x tasks tiny files, which at the
-      // 100x sweep made cell-read overhead dominate the serve (x71.7).
-      corpusTokens(s, dir)
-        .join(assigned.select(col("tid"), col("cluster")), col("h") === col("tid"))
-        .select("cluster", "doc_id", "v0", "v1", "v2", "v3")
-        .repartition(col("cluster"))
-        .sortWithinPartitions("cluster", "doc_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(s"$tmp/cells")
+  /** `big` = the same layout over [[bigVocabDocs]] with the big quantizer:
+    * the lifecycle's base segment (see below). */
+  private[graft] def maxsimIndex(s: org.apache.spark.sql.SparkSession, dir: String,
+      big: Boolean = false): String =
+    (if (big) maxsimIndexBigCache else maxsimIndexCache).getOrElseUpdate(s, dir) {
+      val (assigned, cents) = if (big) maxsimIvfBig(s, dir) else maxsimIvf(s, dir)
+      val tmp = graft.engine.TempDirs.create(
+        if (big) "graft_msivf_big" else "graft_msivf")
+      writeMaxsimCells(corpusTokens(s, dir, big), assigned, s"$tmp/cells")
       cents.write.mode("overwrite").option("compression", "zstd")
         .parquet(s"$tmp/cents")
       tmp
     }
+
+  /** Token rows → their trained cell → one doc-ordered file per cell
+    * ([[graft.ops.Layout.writeCells]]), for the base and delta cells. */
+  private def writeMaxsimCells(tokens: org.apache.spark.sql.DataFrame,
+      assigned: org.apache.spark.sql.DataFrame, path: String): Unit =
+    Layout.writeCells(
+      tokens.join(assigned.select(col("tid"), col("cluster")), col("h") === col("tid"))
+        .select("cluster", "doc_id", "v0", "v1", "v2", "v3"),
+      "cluster", path, Seq(col("doc_id")))
 
   // ---- token-IVF index LIFECYCLE (round 13): append / delete / compact —
   // the same segment discipline the BM25 impact index and the IVF-PQ index
@@ -684,28 +677,6 @@ object SimilarityQ {
   // rows unreachable. On the salted corpus scores discriminate, so the
   // oracle genuinely exercises both the appended and the deleted docs
   // (clones tie ONLY with their source and land adjacent to it).
-
-  /** The PERSISTED bigvocab token-IVF index (the [[maxsimIndex]] layout
-    * over [[bigVocabDocs]] with the big quantizer) — the lifecycle's base
-    * segment. */
-  private val maxsimIndexBigCache = new SessionCache[String](_ => ())
-
-  private def maxsimIndexBig(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimIndexBigCache.getOrElseUpdate(s, dir) {
-      val (assigned, cents) = maxsimIvfBig(s, dir)
-      val tmp = graft.engine.TempDirs.create("graft_msivf_big")
-      corpusTokens(s, dir, big = true)
-        .join(assigned.select(col("tid"), col("cluster")), col("h") === col("tid"))
-        .select("cluster", "doc_id", "v0", "v1", "v2", "v3")
-        .repartition(col("cluster"))
-        .sortWithinPartitions("cluster", "doc_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(s"$tmp/cells")
-      cents.write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$tmp/cents")
-      tmp
-    }
 
   /** The append batch: re-identified clones of the mod-3 BIGVOCAB docs.
     * The salt is computed from the SOURCE id (transform first, re-id
@@ -738,19 +709,12 @@ object SimilarityQ {
     * clones, so coverage is total. */
   private val maxsimDeltaCache = new SessionCache[String](_ => ())
 
-  private def maxsimDeltaCells(s: org.apache.spark.sql.SparkSession,
+  private[graft] def maxsimDeltaCells(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     maxsimDeltaCache.getOrElseUpdate(s, dir) {
-      val (assigned, _) = maxsimIvfBig(s, dir)
       val tmp = graft.engine.TempDirs.create("graft_msivf_delta")
-      tokensOf(maxsimDeltaDocs(s, dir))
-        .join(assigned.select(col("tid"), col("cluster")),
-          col("h") === col("tid"))
-        .select("cluster", "doc_id", "v0", "v1", "v2", "v3")
-        .repartition(col("cluster"))
-        .sortWithinPartitions("cluster", "doc_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(s"$tmp/cells")
+      writeMaxsimCells(tokensOf(maxsimDeltaDocs(s, dir)), maxsimIvfBig(s, dir)._1,
+        s"$tmp/cells")
       tmp
     }
 
@@ -760,22 +724,23 @@ object SimilarityQ {
     * path with `tombstones/` guaranteed present. */
   private val maxsimTombCache = new SessionCache[String](_ => ())
 
-  private def maxsimTombstoned(s: org.apache.spark.sql.SparkSession,
+  private[graft] def maxsimTombstoned(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     maxsimTombCache.getOrElseUpdate(s, dir) {
-      val path = maxsimIndexBig(s, dir)
-      Catalog.load(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 4).select("doc_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$path/tombstones")
+      val path = maxsimIndex(s, dir, big = true)
+      Layout.writeTombstones(Catalog.load(s, dir, "documents")
+        .filter(col("doc_id") % 10 === 4), "doc_id", path)
       path
     }
 
-  /** Union of cells directories (base + segments) for a multi-segment
-    * serve; schema identical by construction (same writer). */
-  private def maxsimCellsUnion(s: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]) =
-    paths.map(p => s.read.parquet(s"$p/cells")).reduce(_.unionByName(_))
+  /** Live cells of the lifecycle: base ∪ delta, minus the base index's
+    * tombstones when `deleted`. */
+  private[graft] def maxsimLiveCells(s: org.apache.spark.sql.SparkSession,
+      dir: String, deleted: Boolean) = {
+    val base = if (deleted) maxsimTombstoned(s, dir) else maxsimIndex(s, dir, big = true)
+    Layout.live(s, Seq(base, maxsimDeltaCells(s, dir)).map(p => s"$p/cells"),
+      "doc_id", Option.when(deleted)(base))
+  }
 
   /** Post-delete COMPACTION: live (base ∪ delta − tombstones) cells
     * rewritten as ONE cluster-partitioned layout under the SAME frozen
@@ -788,15 +753,9 @@ object SimilarityQ {
       dir: String): String =
     maxsimCompactCache.getOrElseUpdate(s, dir) {
       val base = maxsimTombstoned(s, dir)
-      val delta = maxsimDeltaCells(s, dir)
-      val tomb = s.read.parquet(s"$base/tombstones")
       val out = graft.engine.TempDirs.create("graft_msivf_compact")
-      maxsimCellsUnion(s, Seq(base, delta))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .repartition(col("cluster"))
-        .sortWithinPartitions("cluster", "doc_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(s"$out/cells")
+      Layout.writeCells(maxsimLiveCells(s, dir, deleted = true), "cluster",
+        s"$out/cells", Seq(col("doc_id")))
       s.read.parquet(s"$base/cents").write.mode("overwrite")
         .option("compression", "zstd").parquet(s"$out/cents")
       out
@@ -809,11 +768,11 @@ object SimilarityQ {
       "maxsim_token_ivf_big" -> ((s, d) => { maxsimIvfBig(s, d); () }),
       "maxsim_ivf_index" -> ((s, d) => { maxsimIndex(s, d); () }),
       "maxsim_forward" -> ((s, d) => { maxsimForwardBucketed(s, d); () }),
-      "maxsim_ivf_index_big" -> ((s, d) => { maxsimIndexBig(s, d); () }),
+      "maxsim_ivf_index_big" -> ((s, d) => { maxsimIndex(s, d, big = true); () }),
       "maxsim_ivf_delta" -> ((s, d) => { maxsimDeltaCells(s, d); () }),
       "maxsim_ivf_tombstones" -> ((s, d) => { maxsimTombstoned(s, d); () }),
       "maxsim_ivf_compact" -> ((s, d) => { maxsimLifecycleCompacted(s, d); () }),
-      "maxsim_forward_big" -> ((s, d) => { maxsimForwardBig(s, d); () }),
+      "maxsim_forward_big" -> ((s, d) => { maxsimForwardBucketed(s, d, big = true); () }),
       "maxsim_forward_delta" -> ((s, d) => { maxsimForwardDelta(s, d); () }),
       "maxsim_forward_compact" -> ((s, d) => { maxsimForwardCompacted(s, d); () }))
 
@@ -1317,11 +1276,10 @@ object SimilarityQ {
     // trained on the BASE vocabulary and the served stream = base ∪ delta.
     Q("retrieval_maxsim_ivf_append",
       (s, dir) => {
-        val base = maxsimIndexBig(s, dir)
-        val delta = maxsimDeltaCells(s, dir)
-        val cells = maxsimCellsUnion(s, Seq(base, delta))
+        val base = maxsimIndex(s, dir, big = true)
+        val cells = maxsimLiveCells(s, dir, deleted = false)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = maxsimCellsUnion(s, Seq(base, delta))
+        val fwd = maxsimLiveCells(s, dir, deleted = false)
           .select("doc_id", "v0", "v1", "v2", "v3")
         maxsimServe(cells, s.read.parquet(s"$base/cents"), fwd,
           queryTokens(s, dir, big = true))
@@ -1338,13 +1296,9 @@ object SimilarityQ {
     Q("retrieval_maxsim_ivf_delete",
       (s, dir) => {
         val base = maxsimTombstoned(s, dir)
-        val delta = maxsimDeltaCells(s, dir)
-        val tomb = s.read.parquet(s"$base/tombstones")
-        def live(df: org.apache.spark.sql.DataFrame) =
-          df.join(tomb, Seq("doc_id"), "left_anti")
-        val cells = live(maxsimCellsUnion(s, Seq(base, delta)))
+        val cells = maxsimLiveCells(s, dir, deleted = true)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = live(maxsimCellsUnion(s, Seq(base, delta)))
+        val fwd = maxsimLiveCells(s, dir, deleted = true)
           .select("doc_id", "v0", "v1", "v2", "v3")
         maxsimServe(cells, s.read.parquet(s"$base/cents"), fwd,
           queryTokens(s, dir, big = true))
@@ -1377,11 +1331,10 @@ object SimilarityQ {
     // and the oracle — are bit-identical to the union-forward serve above.
     Q("retrieval_maxsim_ivf_append_fwd",
       (s, dir) => {
-        val base = maxsimIndexBig(s, dir)
-        val delta = maxsimDeltaCells(s, dir)
-        val cells = maxsimCellsUnion(s, Seq(base, delta))
+        val base = maxsimIndex(s, dir, big = true)
+        val cells = maxsimLiveCells(s, dir, deleted = false)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = Seq(fwdPart(s, maxsimForwardBig(s, dir)),
+        val fwd = Seq(fwdPart(s, maxsimForwardBucketed(s, dir, big = true)),
           fwdPart(s, maxsimForwardDelta(s, dir)))
         maxsimServeParts(cells, s.read.parquet(s"$base/cents"), fwd,
           queryTokens(s, dir, big = true))
@@ -1398,15 +1351,13 @@ object SimilarityQ {
     Q("retrieval_maxsim_ivf_delete_fwd",
       (s, dir) => {
         val base = maxsimTombstoned(s, dir)
-        val delta = maxsimDeltaCells(s, dir)
-        val tomb = s.read.parquet(s"$base/tombstones")
-        val cells = maxsimCellsUnion(s, Seq(base, delta))
-          .join(tomb, Seq("doc_id"), "left_anti")
+        val cells = maxsimLiveCells(s, dir, deleted = true)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = Seq(fwdPart(s, maxsimForwardBig(s, dir)),
+        val fwd = Seq(fwdPart(s, maxsimForwardBucketed(s, dir, big = true)),
           fwdPart(s, maxsimForwardDelta(s, dir)))
         maxsimServeParts(cells, s.read.parquet(s"$base/cents"), fwd,
-          queryTokens(s, dir, big = true), tomb = Some(tomb))
+          queryTokens(s, dir, big = true),
+          tomb = Some(Layout.tombstones(s, base, "doc_id")))
       },
       Some(maxsimIvfOracleOver(big = true, append = true, deleted = true))),
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.engine.Catalog
-import graft.ops.{Dedup, KMeans, PQ, Similarity}
+import graft.ops.{Dedup, KMeans, Layout, PQ, Similarity}
 
 /** Training-data-pipeline operators beyond the dedup/ANN/text families:
   * k-means coarse-quantizer training, int8 embedding quantization,
@@ -215,9 +215,7 @@ object TrainQ {
       val enc = AnnSweep.encodeJoin(assigned, "vec_id", "embedding", books,
         PromM, PromSub)
       val delta = graft.engine.TempDirs.create("graft_ivfpq_prom_delta") + "/cells"
-      enc.repartition(col("cluster"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(delta)
+      Layout.writeCells(enc, "cluster", delta, Seq(col("vec_id")))
       delta
     }
 
@@ -231,10 +229,8 @@ object TrainQ {
       dir: String): String =
     promTombCache.getOrElseUpdate(s, dir) {
       val base = promotedIndex(s, dir)
-      Catalog.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 10 === 6).select("vec_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$base/tombstones")
+      Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
+        .filter(col("vec_id") % 10 === 6), "vec_id", base)
       base
     }
 
@@ -339,23 +335,18 @@ object TrainQ {
     }
 
   /** Session-scoped COMPACTION of the appended index: base ∪ delta cells
-    * rewritten as one cells table, one file per cell (each cluster lands in
-    * exactly one task via the cluster repartition, so each partition dir
-    * gets a single file) — the small-file maintenance an append-cadence
-    * index needs. Pure reorganization: serving from it must equal serving
-    * from the union, which the shared oracle pins. */
+    * rewritten as one cells table, one file per cell
+    * ([[Layout.writeCells]] over [[pqLive]]) — the small-file
+    * maintenance an append-cadence index needs. Pure reorganization:
+    * serving from it must equal serving from the union, which the shared
+    * oracle pins. */
   private val ivfPqCompactCache = new SessionCache[String](_ => ())
 
   private def ivfPqCompacted(s: org.apache.spark.sql.SparkSession, dir: String): String =
     ivfPqCompactCache.getOrElseUpdate(s, dir) {
-      val base = ivfPqIndex(s, dir)
-      val delta = ivfPqDelta(s, dir)
       val out = graft.engine.TempDirs.create("graft_ivfpq_compact") + "/cells"
-      s.read.parquet(s"$base/cells").unionByName(s.read.parquet(delta))
-        .repartition(col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cluster").parquet(out)
+      Layout.writeCells(pqLive(s, ivfPqIndex(s, dir), ivfPqDelta(s, dir),
+        deleted = false), "cluster", out, Seq(col("vec_id")))
       out
     }
 
@@ -371,12 +362,16 @@ object TrainQ {
       dir: String): String =
     ivfPqTombCache.getOrElseUpdate(s, dir) {
       val base = ivfPqIndex(s, dir)
-      Catalog.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 10 === 6).select("vec_id")
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$base/tombstones")
+      Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
+        .filter(col("vec_id") % 10 === 6), "vec_id", base)
       base
     }
+
+  /** Live cells of an IVF-PQ index at `base` with its `delta` cells,
+    * minus the base's tombstones when `deleted`. */
+  private def pqLive(s: org.apache.spark.sql.SparkSession, base: String,
+      delta: String, deleted: Boolean) =
+    Layout.live(s, Seq(s"$base/cells", delta), "vec_id", Option.when(deleted)(base))
 
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
     Seq(
@@ -1032,9 +1027,8 @@ object TrainQ {
     Q("ann_ivf_pq_promoted_append",
       (s, dir) => {
         val base = promotedIndex(s, dir)
-        val cells = s.read.parquet(s"$base/cells")
-          .unionByName(s.read.parquet(promotedDelta(s, dir)))
-        graft.ops.AnnSweep.serveAdc(cells,
+        graft.ops.AnnSweep.serveAdc(
+            pqLive(s, base, promotedDelta(s, dir), deleted = false),
             s.read.parquet(s"$base/cents"), s.read.parquet(s"$base/books"),
             promotedCorpus(s, dir).filter(col("vec_id") % 100 === 0),
             "vec_id", "embedding", PromM, PromSub,
@@ -1050,11 +1044,8 @@ object TrainQ {
     Q("ann_ivf_pq_promoted_delete",
       (s, dir) => {
         val base = promotedTombstoned(s, dir)
-        val tomb = s.read.parquet(s"$base/tombstones").select(col("vec_id"))
-        val cells = s.read.parquet(s"$base/cells")
-          .unionByName(s.read.parquet(promotedDelta(s, dir)))
-          .join(tomb, Seq("vec_id"), "left_anti")
-        graft.ops.AnnSweep.serveAdc(cells,
+        graft.ops.AnnSweep.serveAdc(
+            pqLive(s, base, promotedDelta(s, dir), deleted = true),
             s.read.parquet(s"$base/cents"), s.read.parquet(s"$base/books"),
             promotedCorpus(s, dir).filter(col("vec_id") % 100 === 0),
             "vec_id", "embedding", PromM, PromSub,
@@ -1106,11 +1097,8 @@ object TrainQ {
     Q("ann_ivf_pq_append",
       (s, dir) => {
         val base = ivfPqIndex(s, dir)
-        val delta = ivfPqDelta(s, dir)
-        val books = PQ.readBooks(s, base)
-        val cells = s.read.parquet(s"$base/cells")
-          .unionByName(s.read.parquet(delta))
-        PQ.knnIvfPqCells(cells, s.read.parquet(s"$base/cents"), books,
+        PQ.knnIvfPqCells(pqLive(s, base, ivfPqDelta(s, dir), deleted = false),
+            s.read.parquet(s"$base/cents"), PQ.readBooks(s, base),
             Catalog.load(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
             "vec_id", "embedding", Dims, nprobe = 2, kTop = 10)
           .orderBy("q_vec", "rank")
@@ -1127,14 +1115,8 @@ object TrainQ {
     Q("ann_ivf_pq_delete",
       (s, dir) => {
         val base = ivfPqTombstoned(s, dir)
-        val delta = ivfPqDelta(s, dir)
-        val tomb = s.read.parquet(s"$base/tombstones")
-          .select(col("vec_id"))
-        val cells = s.read.parquet(s"$base/cells")
-          .unionByName(s.read.parquet(delta))
-          .join(tomb, Seq("vec_id"), "left_anti")
-        PQ.knnIvfPqCells(cells, s.read.parquet(s"$base/cents"),
-            PQ.readBooks(s, base),
+        PQ.knnIvfPqCells(pqLive(s, base, ivfPqDelta(s, dir), deleted = true),
+            s.read.parquet(s"$base/cents"), PQ.readBooks(s, base),
             Catalog.load(s, dir, "embeddings").filter(col("vec_id") % 100 === 0),
             "vec_id", "embedding", Dims, nprobe = 2, kTop = 10)
           .orderBy("q_vec", "rank")

@@ -58,19 +58,12 @@ object Streams {
     * oracles gate it every round). Rows whose semantics NEED the final
     * batch (left-outer emission, sessionization timers, append-mode
     * windows) must NOT use this. */
-  private def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T =
-    // Measurement hook (round 16): SPARK_GRAFT_KEEP_NODATA_BATCH=1 keeps
-    // the empty batch so the skip's benefit can be A/B'd back-to-back on
-    // the same box (adjacent relative comparison is episode-robust where
-    // round-over-round absolute timings are not). Results are identical
-    // either way by the scoping rule above.
-    if (sys.env.contains("SPARK_GRAFT_KEEP_NODATA_BATCH")) body
-    else {
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try body finally spark.conf.set(key, old)
-    }
+  private def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, old)
+  }
 
   /** Run `body` (which should start+drain a streaming query) with the
     * RocksDB state-store provider instead of the default in-memory HDFS-

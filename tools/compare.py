@@ -7,6 +7,8 @@ For each query dir under <verifyOutDir>: read the Spark parquet result,
 run the matching oracle SQL from oracle_sql.json in DuckDB over the sfDir
 tables, sort columns by name, and compare values. Reports both
 row-order-sensitive and order-insensitive verdicts so fragility is visible.
+Every oracle_sql.json key without a result directory (a query that threw in
+Verify) is reported MISSING and counted bad.
 
 This script is dev-tooling only; the shipped Scala library has no Python
 dependency.
@@ -78,7 +80,12 @@ def main(sf_dir, out_dir):
                 if g != e:
                     print(f"  first diff row {i}:\n    got {g}\n    exp {e}")
                     break
-    print(f"\n{n_ok} ok, {n_bad} bad")
+    missing = sorted(k for k in oracle
+                     if not os.path.isdir(os.path.join(out_dir, k)))
+    for name in missing:
+        print(f"{name:32s} MISSING")
+    n_bad += len(missing)
+    print(f"\n{n_ok} ok, {n_bad} bad ({len(missing)} missing)")
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
