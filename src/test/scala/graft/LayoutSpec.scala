@@ -14,12 +14,23 @@ import graft.ops.{Corpus, KMeans, Layout, PQ, Similarity}
   * input tasks would leave several files in a cell. */
 class LayoutSpec extends SparkSpec {
 
-  private lazy val docs = spark.read
-    .parquet("/root/testdata/sf0.001/documents.parquet")
-    .select("doc_id", "text").repartition(4)
-  private lazy val emb = spark.read
-    .parquet("/root/testdata/sf0.001/embeddings.parquet")
-    .select("vec_id", "embedding", "label").repartition(4)
+  private val Dims = 8
+
+  private lazy val docs = {
+    import spark.implicits._
+    val words = Seq("spark", "vector", "table", "scan", "query", "window",
+      "batch", "stream", "merge", "filter", "group", "index")
+    (0L until 400L).map { i =>
+      (i, (0 until 8).map(j => words(((i * 7 + j * j * 3 + j) % 12).toInt)).mkString(" "))
+    }.toDF("doc_id", "text").repartition(4)
+  }
+
+  private lazy val emb = {
+    import spark.implicits._
+    (0L until 400L).map { i =>
+      (i, (0 until Dims).map(j => ((i * 31 + j * 17) % 97).toFloat / 97f), (i % 10).toInt)
+    }.toDF("vec_id", "embedding", "label").repartition(4)
+  }
 
   private def assertOneFilePerCell(table: String): Unit = {
     val cells = new java.io.File(table).listFiles().filter(_.isDirectory)
@@ -87,17 +98,17 @@ class LayoutSpec extends SparkSpec {
     val base = TempDirs.create("graft_layout_pq")
     val seg = TempDirs.create("graft_layout_pq_seg") + "/cells"
     val (assigned, cents) = KMeans.lloyd(emb, "vec_id", "embedding",
-      k = 4, iters = 1, dims = 64)
+      k = 4, iters = 1, dims = Dims)
     val books = PQ.train(emb, "vec_id", "embedding", m = 4, k = 8, iters = 1,
-      dims = 64)
+      dims = Dims)
     PQ.writeIvfPqIndex(assigned.repartition(4), cents, books, "vec_id",
-      "embedding", 64, base)
+      "embedding", Dims, base)
     val batch = emb.filter(col("vec_id") % 3 === 0)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
       .repartition(4)
     PQ.writeCells(KMeans.assign(batch, "vec_id", "embedding",
         KMeans.collectCents(cents.select(col("cluster"), col("cent")))),
-      books, "vec_id", "embedding", 64, seg)
+      books, "vec_id", "embedding", Dims, seg)
     val tables = Seq(s"$base/cells", seg)
     tables.foreach(assertOneFilePerCell)
     val tomb = tables.map(t => ids(spark.read.parquet(t), "vec_id")).reduce(_ ++ _)
