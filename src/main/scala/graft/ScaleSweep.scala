@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Catalog
+import graft.engine.{Catalog, PlanGate}
+import graft.queries.{CorpusQ, SimilarityQ, TrainQ}
 
 /** 10×/1× scaling sweep (dev harness, like [[StressBench]]): materialize a
   * referentially-consistent 10× replica of the testdata tables on disk, run
@@ -13,6 +15,11 @@ import graft.engine.Catalog
   * overheads to amortize oddly at toy scale); a super-linear outlier names
   * the next plan audit. Sub-linear ratios are expected for queries dominated
   * by fixed costs (codegen, microbatch commits) at 1×.
+  *
+  * The 1× pass also carries the evidence sections (MaxSim operating
+  * points, BM25 segment count, probe axis, IVF-PQ recall/cost, maintenance
+  * recall, BPE vocabulary size), and the MaxSim kc rows carry overlap@10 vs
+  * the exact serve at 1×. Every row is timed through [[Runs]].
   *
   * Memory: run ≥100× sweeps with `SPARK_DRIVER_MEM=24g` (build.sbt's -Xmx
   * hook) — the single local JVM holds the session-scoped pipeline caches
@@ -273,13 +280,6 @@ object ScaleSweep {
     // delta) or over the forward components themselves (compact merge).
     "maxsim_forward_big", "maxsim_forward_delta", "maxsim_forward_compact")
 
-  /** Post-execution metrics of the first file scan whose location matches
-    * `tag` — delegates to [[graft.engine.ScanMetrics.forPath]] (the shared
-    * executed-metrics helper the plan pins use too). */
-  private def fwdScanMetrics(df: org.apache.spark.sql.DataFrame, tag: String)
-      : Option[(Long, Long, Long, Long)] =
-    graft.engine.ScanMetrics.forPath(df, tag)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
@@ -319,135 +319,231 @@ object ScaleSweep {
 
     // Pair-mining and |Q|-scaling shapes are only meaningful at 10× (their
     // OUTPUT is quadratic under replication); past that, sweep the
-    // linear-work subset. Dev aid (mirrors Bench): SPARK_GRAFT_ONLY=<regex>
-    // sweeps a subset; pipelines still front the run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    // .distinct: a name listed twice (the r13 ann_ivf_pq_delete slip) would
-    // run twice per scale, emit a duplicate JSON key, and pair the first
-    // entry's ratio with the warm second run's timing.
+    // linear-work subset. .distinct: a name listed twice would run twice
+    // per scale and pair the first entry's ratio with the warm second run.
     val names = (if (factor <= 10) sweep else sweepLinear).distinct
-      .filter(n => only.forall(_.findFirstIn(n).isDefined))
+      .filter(Runs.picked)
+    // A row that throws is printed with its cause, listed in the artifact's
+    // `failed` list and left out of the ratio table; the sweep goes on.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def untimed[T](name: String, dir: String)(f: => T): Option[T] =
+      try Some(f) catch { case e: Throwable =>
+        failed += name
+        println(s"[sweep] $name @ $dir FAILED: ${Runs.cause(e)}")
+        None
+      }
+    def row[A, B](name: String, dir: String)(build: => A)(action: A => B)
+        : Option[Runs.Run[B]] = {
+      println(s"[sweep] running $name @ $dir")
+      untimed(name, dir)(Runs.time(build)(action).fold(e => throw e, identity))
+    }
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("q_doc", "doc_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def overlap(truth: Set[(Long, Long)], got: Set[(Long, Long)]): Double =
+      if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
+    // Exact MaxSim answer sets at 1× (the exact serves are not swept):
+    // retrieval_maxsim_topk, and on the bigvocab fixture the full-probe
+    // serve (every cell admitted, unbounded T — provably the exact MaxSim
+    // ranking). Overlap@10 against them rides the kc axis and the
+    // operating-point section like the dense family's recall.
+    lazy val msTruth = pairs(SparkEntry.queries("retrieval_maxsim_topk")(spark, sfDir))
+    lazy val msBigTruth = pairs(SimilarityQ.maxsimServeAtKc(spark, sfDir, 8,
+      nprobe = 8, candT = Int.MaxValue, big = true))
+    val kcOverlap = scala.collection.mutable.Map.empty[String, Double]
 
     def runAll(dir: String): Seq[(String, Double)] = {
-      val pipelines =
-        SparkEntry.pipelines
-          .filter { case (name, _) => factor <= 10 || linearPipelines(name) }
-          // Dev subsets (SPARK_GRAFT_ONLY) filter pipelines by the same
-          // regex, so a single-family iteration builds only that family's
-          // indexes; the driver leaves ONLY unset and builds everything.
-          .filter { case (name, _) =>
-            only.forall(_.findFirstIn(name).isDefined) }
-          .map { case (name, build) =>
-            println(s"[sweep] running pipeline:$name @ $dir")
-            val t0 = System.nanoTime()
-            build(spark, dir)
-            s"pipeline:$name" -> (System.nanoTime() - t0) / 1e9
-          }
-      val queries = names.map { name =>
-        println(s"[sweep] running $name @ $dir")
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
-        name -> (System.nanoTime() - t0) / 1e9
+      val (pipelines, pipelineFailures) = Runs.frontPipelines(spark, dir, "[sweep]",
+        SparkEntry.pipelines.filter { case (name, _) => factor <= 10 || linearPipelines(name) })
+      failed ++= pipelineFailures
+      val queries = names.flatMap { name =>
+        row(name, dir)(SparkEntry.queries(name)(spark, dir))(_.count())
+          .map(name -> _.totalS)
       }
-      // kc AXIS for the token-IVF serve (round 12, §9's sizing claim):
-      // clone replication grows the token STREAM 10x but not the
-      // vocabulary — and THIS corpus's vocabulary is only 31 distinct
-      // words, so the axis saturates fast: kc = 16 ≈ |vocab|/2 is the real
-      // "scaled" point (measured FASTER than kc = 8 — more cells do cut
-      // the probed candidate share), while kc = 32 ≥ |vocab| is the
-      // degenerate endpoint (≈1 word per cell; candidate share cannot
-      // shrink further because every doc contains nearly every word, and
-      // the serve measures slower). All three are measured so the artifact
-      // carries the saturation curve; quality on the kc knob rides the 1x
-      // bench maxsim_sweep (overlap vs exact truth).
+      // kc AXIS for the token-IVF serve (§9's sizing claim: kc scales with
+      // the vocabulary to hold candidate share constant). Clone replication
+      // grows the token STREAM but not the vocabulary, and the base
+      // corpus's vocabulary is only 31 words, so its axis saturates: kc = 16
+      // ≈ |vocab|/2 is the real scaled point, kc = 32 ≥ |vocab| the
+      // degenerate endpoint (≈1 word per cell). kc = 32 stays 10×-only: a
+      // probed cell is then a FULL word posting list, the exact-baseline
+      // workload by construction. The bigvocab rows run the same serve on
+      // the ~7.5k-word salted fixture, where the axis is off-saturation.
+      // Quantizers train untimed; each row times the SERVE only (build +
+      // collect of its id pairs) and, at 1×, carries overlap@10 vs exact.
       val kcRows =
-        if (!names.contains("retrieval_maxsim_ivf")) Seq.empty
-        else (if (factor <= 10) Seq(8, 16, 32) else Seq(8, 16))
-          // kc rows are measurement hooks, not SparkEntry rows — they ride
-          // the same dev-subset regex by their own emitted names.
-          .filter(kc => only.forall(
-            _.findFirstIn(s"maxsim_serve_kc$kc").isDefined))
-          .map { kc =>
-          // kc = 32 ≥ |vocab| stays 10x-only: one word per cell means a
-          // probed cell is a FULL word posting list (~1.3M occurrences per
-          // word at 100x) — the exact-baseline workload by construction,
-          // the same attribution that keeps retrieval_maxsim_topk
-          // un-swept. The saturation datum is pinned at 10x.
-          println(s"[sweep] running maxsim_serve_kc$kc @ $dir")
-          // Train untimed, time SERVE ONLY (round-13 split, matching the
-          // bench's maxsim_sweep): the kc rows carry the candidate-share
-          // cost curve, and training cost growing with kc was polluting it.
-          val q = graft.queries.SimilarityQ.maxsimQuantizerAtKc(spark, dir, kc)
-          val t0 = System.nanoTime()
-          graft.queries.SimilarityQ.maxsimServeQuantized(spark, dir, q).count()
-          s"maxsim_serve_kc$kc" -> (System.nanoTime() - t0) / 1e9
-        }
-      // BIGVOCAB kc axis at scale (round 13): the same serve-only kc rows
-      // on the ~7.5k-word fixture, where the axis is off-saturation — the
-      // §9 sizing claim (kc ∝ |vocab| holds candidate share constant)
-      // measured against a replicated corpus, not just at 1×.
-      val bigKcRows =
-        if (!names.contains("retrieval_maxsim_ivf_bigvocab")) Seq.empty
-        else Seq(8, 32, 128)
-          .filter(kc => only.forall(
-            _.findFirstIn(s"maxsim_serve_bigkc$kc").isDefined))
-          .map { kc =>
-            println(s"[sweep] running maxsim_serve_bigkc$kc @ $dir")
-            val q = graft.queries.SimilarityQ
-              .maxsimQuantizerAtKc(spark, dir, kc, big = true)
-            val t0 = System.nanoTime()
-            graft.queries.SimilarityQ
-              .maxsimServeQuantized(spark, dir, q, big = true).count()
-            s"maxsim_serve_bigkc$kc" -> (System.nanoTime() - t0) / 1e9
+        (if (factor <= 10) Seq(8, 16, 32) else Seq(8, 16))
+          .map(kc => (s"maxsim_serve_kc$kc", kc, false)) ++
+        (if (factor <= 10) Seq(8, 16, 32, 64, 128) else Seq(8, 32, 128))
+          .map(kc => (s"maxsim_serve_bigkc$kc", kc, true))
+      val kc = kcRows.filter(r => Runs.picked(r._1)).flatMap { case (name, kc, big) =>
+        untimed(name, dir)(SimilarityQ.maxsimQuantizerAtKc(spark, dir, kc, big))
+          .flatMap(q => row(name, dir)(
+            SimilarityQ.maxsimServeQuantized(spark, dir, q, big = big))(pairs))
+          .map { r =>
+            if (dir == sfDir) untimed(name, dir)(overlap(
+              if (big) msBigTruth else msTruth, r.result))
+              .foreach(kcOverlap(name) = _)
+            name -> r.totalS
           }
-      // FORWARD-BUCKET sensitivity axis (round 15, §9's sizing rule made
-      // data): the bucketed-forward serve at two moduli. Serve cost should
-      // be INSENSITIVE to the count (the candidate fetch reads ≤ |candidate
-      // docs| directories either way) while the PRUNED FRACTION moves —
-      // both are printed, the scan metrics carrying the pruning evidence
-      // (numFiles/filesSize post-DPP vs staticFilesNum/staticFilesSize).
-      // Layout build is untimed (the kc-axis split discipline); 10×-only
+      }
+      // FORWARD-BUCKET sensitivity axis (§9's sizing rule made data): the
+      // bucketed-forward serve at two moduli. Serve cost should be
+      // INSENSITIVE to the count while the PRUNED FRACTION moves; the scan
+      // metrics carry the pruning evidence (post-DPP numFiles/filesSize vs
+      // staticFilesNum/staticFilesSize). Layout build is untimed; 10×-only
       // like every serve axis. Cache-less layouts: a per-knob forward must
       // not evict the session's shared pipeline caches.
-      val fwdBucketRows =
-        if (factor > 10 || !names.contains("retrieval_maxsim_ivf_fwd"))
-          Seq.empty
-        else Seq(32, 128)
-          .filter(b => only.forall(
-            _.findFirstIn(s"maxsim_fwd_b$b").isDefined))
-          .map { b =>
-            println(s"[sweep] running maxsim_fwd_b$b @ $dir")
-            val layout = graft.queries.SimilarityQ
-              .maxsimFwdLayoutAtBuckets(spark, dir, b)
-            val t0 = System.nanoTime()
-            val df = graft.queries.SimilarityQ
-              .maxsimFwdServeAtBuckets(spark, dir, layout, b)
-            // collect, not count: count() spawns a NEW QueryExecution, so
-            // df's own plan (whose scan metrics we read below) never runs.
-            df.collect()
-            val t = (System.nanoTime() - t0) / 1e9
-            fwdScanMetrics(df, "graft_msfwd_b").foreach {
-              // staticFilesSize exists only when a live dynamic filter
-              // executed; ssz < 0 means NO DPP reached this scan — say so
-              // instead of printing sz/1 as a garbage percentage.
-              case (nf, snf, sz, ssz) if ssz > 0 => println(
-                f"[sweep] maxsim_fwd_b$b forward scan: files $nf/$snf " +
-                  f"bytes $sz/$ssz (read ${100.0 * sz / ssz}%.1f%% post-DPP)")
-              case (nf, _, sz, _) => println(
-                s"[sweep] maxsim_fwd_b$b forward scan: files $nf bytes $sz " +
-                  "— NO DPP on forward scan (static metrics absent)")
-            }
-            s"maxsim_fwd_b$b" -> t
+      val fwdRows = if (factor > 10) Seq.empty else
+        Seq(32, 128).map(b => s"maxsim_fwd_b$b" -> b).filter(r => Runs.picked(r._1))
+          .flatMap { case (name, b) =>
+            untimed(name, dir)(SimilarityQ.maxsimFwdLayoutAtBuckets(spark, dir, b))
+              // collect, not count: count() spawns a NEW QueryExecution, so
+              // df's own plan (whose scan metrics we read) would never run.
+              .flatMap(layout => row(name, dir)(
+                SimilarityQ.maxsimFwdServeAtBuckets(spark, dir, layout, b)) { df =>
+                df.collect(); df })
+              .map { r =>
+                graft.engine.ScanMetrics.forPath(r.result, "graft_msfwd_b").foreach {
+                  // staticFilesSize exists only when a live dynamic filter
+                  // executed; ssz < 0 means NO DPP reached this scan.
+                  case (nf, snf, sz, ssz) if ssz > 0 => println(
+                    f"[sweep] $name forward scan: files $nf/$snf " +
+                      f"bytes $sz/$ssz (read ${100.0 * sz / ssz}%.1f%% post-DPP)")
+                  case (nf, _, sz, _) => println(
+                    s"[sweep] $name forward scan: files $nf bytes $sz " +
+                      "— NO DPP on forward scan (static metrics absent)")
+                }
+                name -> r.totalS
+              }
           }
-      pipelines ++ queries ++ kcRows ++ bigKcRows ++ fwdBucketRows
+      pipelines ++ queries ++ kc ++ fwdRows
     }
 
     // 1× first, then the replica — the SessionCache dir-eviction swaps the
     // shared pipelines over automatically.
     val t1 = runAll(sfDir)
+
+    // EVIDENCE SECTIONS, 1× only (between the passes, while the 1× caches
+    // are warm). Each is rows of (label, fields), printed as
+    // `[sweep] <section>:<label> k=v ...` and written under `evidence`; a
+    // section that throws is listed in `failed`. SPARK_GRAFT_ONLY selects
+    // sections by name.
+    val evidence = scala.collection.mutable.LinkedHashMap
+      .empty[String, Seq[(String, Seq[(String, Double)])]]
+    def section(name: String)(rows: => Seq[(String, Seq[(String, Double)])]): Unit =
+      if (Runs.picked(name)) untimed(name, sfDir)(rows).foreach { rs =>
+        rs.foreach { case (label, fields) =>
+          println(s"[sweep] $name:$label " +
+            fields.map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
+        }
+        evidence(name) = rs
+      }
+    // Warm min-of-2 serve seconds (single-shot first touch reads cold).
+    def min2[A](build: => A)(action: A => Any): Double =
+      Runs.measure(2)(build)(action).fold(e => throw e, _._1.totalsS.min)
+    // MAXSIM OPERATING POINTS: overlap@10 vs exact and serve seconds at
+    // (nprobe, T) points bracketing the pinned (2, 20) at kc = 8, on the
+    // SHIPPED serve code — where quality lives on both knobs, and that the
+    // pinned point has margin. The kc axis rides the rows above.
+    section("maxsim_sweep") {
+      Seq((1, 5), (1, 20), (2, 5), (2, 20), (4, 40)).flatMap { case (np, t) =>
+        val label = s"np${np}_t$t"
+        row(s"maxsim_sweep:$label", sfDir)(
+          SimilarityQ.maxsimIvfServeAt(spark, sfDir, np, t))(pairs).map(r =>
+          label -> Seq("overlap" -> overlap(msTruth, r.result), "serve_s" -> r.totalS))
+      }
+    }
+    // SEGMENT COUNT: the multi-segment BM25 impact serve at nseg ∈ 0..3 —
+    // "segment-union serving is flat in segment count at fixed per-segment
+    // size" as a measurement.
+    section("bm25_seg_sweep") {
+      Seq(0, 1, 2, 3).map(nseg => s"nseg$nseg" -> Seq("serve_s" ->
+        min2(CorpusQ.bm25MultisegServeAt(spark, sfDir, nseg))(_.count())))
+    }
+    // PROBE AXIS: serve cost vs WORKLOAD size at fixed corpus for the three
+    // persisted serves — the axis the scale passes hold fixed. Expected:
+    // strongly sub-linear in |Q| (one plan, one index read fans out across
+    // queries), flattening toward linear where per-query work dominates.
+    // The late-interaction probe unit is a DOCUMENT (~100 token queries),
+    // so its q1000 point is left out.
+    section("probe_sweep") {
+      def pts(table: String) = {
+        val total = Catalog.load(spark, sfDir, table).count().toInt
+        Seq(10, 100, 1000).map(n => math.max(1, total / n) -> n)
+      }
+      def point(fam: String, n: Int)(serve: => DataFrame) =
+        s"$fam:q$n" -> Seq("serve_s" -> min2(serve)(_.count()))
+      pts("embeddings").map { case (mod, n) =>
+        point("ivf_dense", n)(TrainQ.kmeansServeAtProbes(spark, sfDir, mod)) } ++
+      pts("documents").take(2).map { case (mod, n) =>
+        point("maxsim_ivf", n)(
+          SimilarityQ.maxsimPersistedServeAtProbes(spark, sfDir, mod)) } ++
+      Seq(10, 100, 1000).map(n =>
+        point("bm25_impact", n)(CorpusQ.bm25BatchServeAt(spark, sfDir, n)))
+    }
+    // RECALL/COST SWEEP: recall@10 and build/serve seconds of IVF-PQ at
+    // operating points on the real corpus (near-isotropic), a CLUSTERED
+    // corpus where ANN structure exists to find, and a SKEWED one
+    // (anisotropic, heavy-tailed cluster masses, 5% outliers — the geometry
+    // that can embarrass IVF-PQ). Large codebooks train on the join path.
+    section("recall_sweep") {
+      import graft.ops.AnnSweep
+      import graft.ops.AnnSweep.OpPoint
+      val emb = Catalog.load(spark, sfDir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      def pointsOn(tag: String) = Seq(
+        OpPoint(s"${tag}_np2_m8_k64", kc = 20, nprobe = 2, m = 8, k = 64),
+        OpPoint(s"${tag}_np4_m16_k256", kc = 20, nprobe = 4, m = 16, k = 256),
+        OpPoint(s"${tag}_np4_m32_k256", kc = 20, nprobe = 4, m = 32, k = 256))
+      (AnnSweep.sweep(emb, "vec_id", "embedding", 64, Seq(
+        OpPoint("emb_np2_m4_k8", kc = 16, nprobe = 2, m = 4, k = 8),
+        OpPoint("emb_np4_m8_k64", kc = 16, nprobe = 4, m = 8, k = 64),
+        OpPoint("emb_np8_m8_k256", kc = 16, nprobe = 8, m = 8, k = 256),
+        OpPoint("emb_np8_m16_k256", kc = 16, nprobe = 8, m = 16, k = 256))) ++
+      AnnSweep.sweep(AnnSweep.clusteredCorpus(spark, 2000, 64, 20, 0.3),
+        "vec_id", "embedding", 64, pointsOn("clu")) ++
+      AnnSweep.sweep(AnnSweep.skewedCorpus(spark, 2000, 64, 20, 0.3),
+        "vec_id", "embedding", 64, pointsOn("skw"))).map(r => r.name -> Seq(
+        "recall" -> r.recall, "build_s" -> r.buildS, "serve_s" -> r.serveS))
+    }
+    // MAINTENANCE RECALL: the lifecycle rows pin appended == compacted
+    // bit-equal, which cannot see shared decay (the delta is encoded with
+    // codebooks trained before it existed). Frozen-model append vs full
+    // retrain at the best clustered point, both against exact truth on
+    // base ∪ delta; base = ids < 1800 keeps every cluster represented.
+    section("maint_recall") {
+      val corpus = graft.ops.AnnSweep.clusteredCorpus(spark, 2000, 64, 20, 0.3)
+      val r = graft.ops.AnnSweep.appendRecall(
+        corpus.filter(col("vec_id") < 1800), corpus.filter(col("vec_id") >= 1800),
+        "vec_id", "embedding", 64, graft.ops.AnnSweep.OpPoint(
+          "clu_np4_m16_k256", kc = 20, nprobe = 4, m = 16, k = 256))
+      Seq(r.name -> Seq("appended" -> r.appended, "retrained" -> r.retrained,
+        "append_s" -> r.appendS, "retrain_s" -> r.retrainS))
+    }
+    // BPE VOCABULARY SIZE: SURVEY §9 claims training cost stays
+    // vocabulary-bounded as the merge count grows. Train at k ∈ {8, 32, 128}
+    // and carry (train seconds, merges learned, corpus-weighted mean
+    // tokens/word of the final state): per-round cost is a bounded
+    // aggregate over the distinct-word table, so train_s should grow ~
+    // linearly in rounds, not in corpus bytes.
+    section("bpe_sweep") {
+      Seq(8, 32, 128).map { k =>
+        val r = Runs.time(graft.ops.Corpus.bpeTrain(
+          Catalog.load(spark, sfDir, "documents"), "text", k)) { case (merges, vocab) =>
+          val agg = vocab.agg(expr("sum(wc * size(split(trim(spaced), ' ')))"),
+            expr("sum(wc)")).head
+          vocab.unpersist()
+          (merges.size, agg.getLong(0).toDouble / agg.getLong(1))
+        }.fold(e => throw e, identity)
+        s"k$k" -> Seq("train_s" -> r.totalS, "merges" -> r.result._1.toDouble,
+          "mean_tokens" -> r.result._2)
+      }
+    }
+
     val tN = runAll(dst).toMap
     println(f"[sweep] ${"name"}%-34s ${"1x"}%8s ${s"${factor}x"}%8s ${"ratio"}%7s")
-    val ratios = t1.map { case (name, a) =>
+    val ratios = t1.collect { case (name, a) if tN.contains(name) =>
       val b = tN(name)
       val r = b / a
       val flag = if (r > 1.2 * factor) "  <-- flagged, re-measuring" else ""
@@ -456,29 +552,18 @@ object ScaleSweep {
     }
     // MEDIANS MODE for flagged rows: a single-shot timing that trips the
     // super-linear threshold is re-run medians-of-3 at BOTH scales before
-    // the verdict — round 6's q18_bucketed 18.9 s was a one-shot transient
-    // that cost a manual solo re-measure to clear. All 1× re-measures run
-    // before all N× so the SessionCache dir swap happens twice, not per
-    // query; the median discards the rep that carries any lazy rebuild.
+    // the verdict. All 1× re-measures run before all N× so the SessionCache
+    // dir swap happens twice, not per query; the median discards the rep
+    // that carries any lazy rebuild. Pipelines (single-shot builds) and the
+    // kc/fwd rows (hooks outside SparkEntry.queries) keep their ratio.
     val flaggedNames = ratios.filter(_._2 > 1.2 * factor).map(_._1)
-      // Pipelines are single-shot builds; kc-axis rows are measurement
-      // hooks outside SparkEntry.queries — neither re-measures via median3.
-      .filterNot(n => n.startsWith("pipeline:") ||
-        !SparkEntry.queries.contains(n))
-    // A flagged query that fails intermittently must NOT abort the sweep
-    // after both scale runs already completed — fall back to the
-    // single-shot ratio (None) and log the failure instead.
+      .filter(SparkEntry.queries.contains)
+    // A re-measure that fails falls back to the single-shot ratio.
     def median3(dir: String, name: String): Option[Double] =
-      try {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        Some(ts(1))
-      } catch {
-        case e: Exception =>
-          println(s"[sweep] median3 FAILED for $name in $dir: ${e.getMessage}" +
+      Runs.measure(3)(SparkEntry.queries(name)(spark, dir))(_.count()) match {
+        case Right((m, _)) => Some(m.medianS)
+        case Left(e) =>
+          println(s"[sweep] median3 FAILED for $name in $dir: ${Runs.cause(e)}" +
             " -- keeping single-shot ratio")
           None
       }
@@ -493,88 +578,70 @@ object ScaleSweep {
         case _ => None
       }
     }.toMap
-    // Final verdict: single-shot ratio for unflagged rows, median ratio for
-    // flagged ones (pipeline rows keep their single-shot number — they are
-    // once-per-session builds by design and medians would triple them).
-    val finalRatios = ratios.map { case (n, r) =>
-      n -> remeasured.getOrElse(n, r) }
+    val finalRatios = ratios.map { case (n, r) => n -> remeasured.getOrElse(n, r) }
     val supersFinal = finalRatios.filter(_._2 > 1.2 * factor).map(_._1)
     supersFinal.foreach(n =>
       println(f"[sweep] SUPER-LINEAR (survives medians): $n ${finalRatios.toMap.apply(n)}%.2f"))
-    val worst = finalRatios.maxBy(_._2)
-    println(f"[sweep] worst ratio: ${worst._1} ${worst._2}%.2f")
-    // SERVE-AMORTIZATION PIN AT SCALE (round 13): the bench's serve_pin
-    // channel (persisted index serve ≤ 1.25× the in-session path it
-    // amortizes) only covered the 1× box — round 12's persisted-MaxSim
-    // serve inverted at 100× (×105, 1.6× in-session: stage 2 re-exploded
-    // the text instead of forward-reading the index) and nothing fired.
-    // The pin now rides the sweep at the REPLICA scale, where an index
-    // matters most.
-    val tNmap = tN
-    val pinPairs =
-      Seq(("retrieval_maxsim_ivf_persisted", "retrieval_maxsim_ivf"),
-          ("retrieval_maxsim_ivf_fwd", "retrieval_maxsim_ivf"),
-          ("retrieval_maxsim_ivf_append_fwd", "retrieval_maxsim_ivf_append"),
-          ("retrieval_maxsim_ivf_delete_fwd", "retrieval_maxsim_ivf_delete"),
-          ("retrieval_maxsim_ivf_lifecycle_compacted_fwd",
-            "retrieval_maxsim_ivf_lifecycle_compacted"),
-          ("ann_ivf_kmeans_persisted", "ann_ivf_kmeans"),
-          ("ann_ivf_pq_persisted", "ann_ivf_pq_topk"))
-    def pinOf(per: String, ins: String,
-              m: Map[String, Double]): Option[String] =
+    val worst = finalRatios.maxByOption(_._2)
+    worst.foreach { case (n, r) => println(f"[sweep] worst ratio: $n $r%.2f") }
+    // SERVE-AMORTIZATION PINS AT SCALE (pairs and rule in PlanGate): at the
+    // REPLICA scale, where an index matters most (the persisted MaxSim
+    // serve once inverted at 100× with nothing firing at 1×). A pair absent
+    // from this sweep's row set does not pin.
+    def pinOf(per: String, ins: String, m: Map[String, Double]): Option[String] =
       (m.get(per), m.get(ins)) match {
-        // Same margin + absolute-gap guard as the bench pin (a pair
-        // absent from this sweep's row set simply doesn't pin).
-        case (Some(p), Some(i)) if p > i * 1.25 && p - i > 0.3 =>
+        case (Some(p), Some(i)) if PlanGate.servePinFires(p, i) =>
           Some(f"serve_pin@${factor}x: $per $p%.2fs > 1.25x $ins $i%.2fs")
         case _ => None
       }
-    // MEDIANS MODE for fired pins (round 14): the pin compared SINGLE-SHOT
-    // N× timings, so one interference transient on one row faked a
-    // violation (measured: persisted 54.0 s in the full sweep, 13.7 s
-    // medians minutes later, pin clean) — the exact failure mode the
-    // super-linear channel's median re-measure already guards. Re-measure
-    // BOTH rows of every fired pair at N× and re-evaluate before the
-    // verdict; a pin that survives medians is a real layout regression.
-    // Verdicts are tracked PER PAIR (round 15): only provisionally-fired
-    // pairs are re-evaluated with medians — a re-measured (lower) median
-    // for a row SHARED with a non-fired pair must not newly fire that
-    // other pair against a possibly-inflated single-shot on its
-    // unmeasured side; non-fired pairs keep their single-shot verdicts.
-    val firedPairs = pinPairs.filter { case (per, ins) =>
-      pinOf(per, ins, tNmap).isDefined }
+    // MEDIANS MODE for fired pins: one interference transient on one
+    // single-shot row fakes a violation, so BOTH rows of every fired pair
+    // are re-measured at N×. Only fired pairs are re-evaluated with
+    // medians: a lower re-measured median for a row SHARED with a non-fired
+    // pair must not newly fire that pair against a possibly-inflated
+    // single-shot on its unmeasured side.
+    val firedPairs = PlanGate.ServePins.filter { case (per, ins) =>
+      pinOf(per, ins, tN).isDefined }
     val pinMeds: Map[String, Double] =
       firedPairs.flatMap { case (per, ins) => Seq(per, ins) }.distinct
         .flatMap { n =>
           val m = median3(dst, n)
           m.foreach(v => println(
-            f"[sweep] pin re-measure $n%-34s single=${tNmap(n)}%.2f medN=$v%.2f"))
+            f"[sweep] pin re-measure $n%-34s single=${tN(n)}%.2f medN=$v%.2f"))
           m.map(n -> _)
         }.toMap
-    val servePinViolations: Seq[String] = firedPairs.flatMap {
-      case (per, ins) =>
-        val verdict = pinOf(per, ins, tNmap ++ pinMeds)
-        if (verdict.isEmpty) println(
-          s"[sweep] pin transient (cleared by medians): " +
-            pinOf(per, ins, tNmap).get)
-        verdict
+    val servePinViolations: Seq[String] = firedPairs.flatMap { case (per, ins) =>
+      val verdict = pinOf(per, ins, tN ++ pinMeds)
+      if (verdict.isEmpty) println(
+        s"[sweep] pin transient (cleared by medians): ${pinOf(per, ins, tN).get}")
+      verdict
     }
     servePinViolations.foreach(v => println(s"[sweep] VIOLATION $v"))
-    // Driver-visible artifact (SPARK_GRAFT_SWEEP_OUT=<file>): per-query
-    // 1×/N× seconds + ratio and the super-linear verdict, so the scale gate
-    // is machine-checkable instead of living in STATUS prose.
+    // Machine-readable artifact (SPARK_GRAFT_SWEEP_OUT=<file>): per-row 1×/N×
+    // seconds + ratio (kc rows with their 1× overlap), the super-linear
+    // verdict, the failed rows and the 1× evidence sections.
     sys.env.get("SPARK_GRAFT_SWEEP_OUT").foreach { out =>
       def r3(v: Double) = math.round(v * 1000.0) / 1000.0
-      val rows = t1.map { case (name, a) =>
-        s""""$name":{"t1":${r3(a)},"tN":${r3(tN(name))},"ratio":${r3(tN(name) / a)}}"""
+      def strs(xs: Iterable[String]) = xs.map(v => s""""$v"""").mkString("[", ",", "]")
+      def obj(fields: Seq[(String, Double)]) =
+        fields.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
+      val rows = ratios.map { case (name, r) =>
+        s""""$name":${obj(Seq("t1" -> t1.toMap.apply(name), "tN" -> tN(name),
+          "ratio" -> r) ++ kcOverlap.get(name).map("overlap" -> _))}"""
       }.mkString(",")
-      val remeas = flaggedNames.filter(remeasured.contains).map { n =>
-        s""""$n":{"t1_med":${r3(med1(n).get)},"tN_med":${r3(medN(n).get)},"ratio":${r3(remeasured(n))}}"""
+      val remeas = remeasured.map { case (n, r) =>
+        s""""$n":${obj(Seq("t1_med" -> med1(n).get, "tN_med" -> medN(n).get, "ratio" -> r))}"""
       }.mkString("{", ",", "}")
-      val supers = supersFinal.map(n => s""""$n"""").mkString("[", ",", "]")
-      val pins = servePinViolations.map(v => s""""$v"""").mkString("[", ",", "]")
+      val ev = evidence.map { case (name, rs) =>
+        s""""$name":""" + rs.map { case (label, f) => s""""$label":${obj(f)}""" }
+          .mkString("{", ",", "}")
+      }.mkString("{", ",", "}")
+      val worstJson = worst.fold("null") { case (n, r) => s"""{"name":"$n","ratio":${r3(r)}}""" }
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        s"""{"factor":$factor,"sf":"$sfDir","super_linear_threshold":${r3(1.2 * factor)},"super_linear":$supers,"serve_pin_violations":$pins,"remeasured":$remeas,"worst":{"name":"${worst._1}","ratio":${r3(worst._2)}},"results":{$rows}}""")
+        s"""{"factor":$factor,"sf":"$sfDir","super_linear_threshold":${r3(1.2 * factor)},""" +
+          s""""super_linear":${strs(supersFinal)},"serve_pin_violations":${strs(servePinViolations)},""" +
+          s""""failed":${strs(failed)},"remeasured":$remeas,"worst":$worstJson,""" +
+          s""""evidence":$ev,"results":{$rows}}""")
       println(s"[sweep] wrote $out")
     }
     spark.stop()

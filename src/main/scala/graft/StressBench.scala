@@ -21,11 +21,9 @@ import graft.streaming.Streams
 object StressBench {
 
   def timed[T](name: String)(f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    val s = (System.nanoTime() - t0) / 1e9
-    println(f"[stress] $name%-52s ${s}%8.2f s")
-    (r, s)
+    val r = Runs.time(f)(identity).fold(e => throw e, identity)
+    println(f"[stress] $name%-52s ${r.totalS}%8.2f s")
+    (r.result, r.totalS)
   }
 
   def main(args: Array[String]): Unit = {
@@ -110,13 +108,14 @@ object StressBench {
     println(s"[stress] batch dup_of_history=${incr.getLong(0)} kept=${incr.getLong(1)}")
 
     // ---- streaming dedup: default state store vs RocksDB ----------------
+    val dedupRuns = Iterator.from(0)
     def dedupRun(): Long = {
       val ev = graft.streaming.Streams.eventStream(spark, sfDir)
       val deduped = ev
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .agg(count(lit(1)).as("n"))
-      val name = s"stress_dedup_${System.nanoTime()}"
+      val name = s"stress_dedup_${dedupRuns.next()}"
       val q = deduped.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Complete).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()

@@ -15,10 +15,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      Runs.time(fn(spark, sfDir))(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")) match {
+        case Right(r) =>
+          println(f"[verify] $name build_s=${r.buildS}%.3f write_s=${r.runS}%.3f")
+        case Left(e) =>
+          System.err.println(s"[verify] $name failed: ${Runs.cause(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

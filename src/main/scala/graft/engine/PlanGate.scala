@@ -119,6 +119,35 @@ object PlanGate {
     * r11-r15) and below the unbounded ~10× the r16 re-base allowed. */
   val EpisodeAllowanceCap = 4.0
 
+  /** SERVE-AMORTIZATION PINS: (persisted-index serve, the in-session path
+    * it amortizes). A persisted index whose serve costs more than the path
+    * it replaces is backwards — the state retrieval_maxsim_ivf_persisted
+    * shipped in for one round (14.0 s vs 5.7 s: tiny-files layout). The
+    * bench pins them at 1×, the scale sweep at the replica scale; every
+    * name is a `SparkEntry.queries` row (a pair naming no row never pins,
+    * which PlanGateSpec guards). */
+  val ServePins: Seq[(String, String)] = Seq(
+    ("retrieval_maxsim_ivf_persisted", "retrieval_maxsim_ivf"),
+    ("retrieval_maxsim_ivf_fwd", "retrieval_maxsim_ivf"),
+    // Each bucketed-segment lifecycle serve must not cost more than the
+    // union-forward sibling it bounds.
+    ("retrieval_maxsim_ivf_append_fwd", "retrieval_maxsim_ivf_append"),
+    ("retrieval_maxsim_ivf_delete_fwd", "retrieval_maxsim_ivf_delete"),
+    ("retrieval_maxsim_ivf_lifecycle_compacted_fwd",
+      "retrieval_maxsim_ivf_lifecycle_compacted"),
+    ("ann_ivf_kmeans_persisted", "ann_ivf_kmeans"),
+    ("ann_ivf_pq_persisted", "ann_ivf_pq_topk"))
+  val ServePinRatio = 1.25
+
+  /** The pin fires when the persisted serve costs more than
+    * [[ServePinRatio]]× its in-session sibling AND more than [[TimeFloorS]]
+    * above it: the ratio margin absorbs median noise at the 2-3 s rows,
+    * the absolute gap keeps sub-second pairs (0.4-0.9 s, where 1.25× is
+    * inside box noise) from flapping. */
+  def servePinFires(persistedS: Double, inSessionS: Double): Boolean =
+    persistedS > inSessionS * ServePinRatio &&
+      persistedS - inSessionS > TimeFloorS
+
   // Designed-exchange declarations live ON the row definitions
   // (`graft.queries.Q.designHx`, assembled by `Q.designHxMap`) — a
   // bucketed row whose designed plan genuinely re-keys (tpch_q21_bucketed's

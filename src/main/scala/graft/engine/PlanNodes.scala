@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-/** Executed-plan inspection shared by the bench fingerprint, PlanAudit, and
-  * the plan-shape specs: walk the FINAL adaptive plan (descending adaptive
+/** Executed-plan inspection shared by the bench fingerprint and the
+  * plan-shape specs: walk the FINAL adaptive plan (descending adaptive
   * wrappers and query stages) and STOP at cache boundaries, so the node
   * list describes the serve plan actually executed — the plan-STRING
   * rendering repeats each cached relation's build plan under every scan
@@ -58,6 +58,22 @@ object PlanNodes {
     case e: ShuffleExchangeExec =>
       e.outputPartitioning.isInstanceOf[HashPartitioning]
     case _ => false
+  }
+
+  /** The per-row plan fingerprint the bench records and the plan gate
+    * reads (`hashExchanges`, `cachedBroadcast`): exchange, join-strategy
+    * and AQE shuffle-read counts of `df`'s serve plan, in a fixed order.
+    * A string scan of the executed plan, not a Spark job. */
+  def fingerprint(df: DataFrame): Seq[(String, Int)] = {
+    val all = serveNodes(df)
+    Seq("hashExchanges" -> hashExchanges(all),
+      "broadcastHash" -> count(all, "BroadcastHashJoin"),
+      "sortMerge" -> count(all, "SortMergeJoin"),
+      "shuffledHash" -> count(all, "ShuffledHashJoin"),
+      "nestedLoop" -> count(all, "BroadcastNestedLoopJoin"),
+      "cartesian" -> count(all, "CartesianProduct"),
+      "cachedBroadcast" -> cachedBroadcasts(all),
+      "aqeShuffleReads" -> count(all, "AQEShuffleRead"))
   }
 
   /** Count serve nodes whose nodeName contains `name`. */

@@ -275,6 +275,21 @@ class PlanGateSpec extends AnyFunSuite {
       Map("q" -> Base(Fp(2, 1), 3.061)))
   }
 
+  test("serve pins: the 1.25x ratio and the 0.3 s gap are both strict; " +
+      "every pin pair names a conformance row") {
+    assert(!PlanGate.servePinFires(2.5, 2.0)) // exactly 1.25x
+    assert(PlanGate.servePinFires(2.5001, 2.0))
+    assert(0.5 - 0.2 == PlanGate.TimeFloorS) // exact in binary64
+    assert(!PlanGate.servePinFires(0.5, 0.2)) // gap exactly 0.3 s
+    assert(PlanGate.servePinFires(0.5001, 0.2))
+    // A pair naming no row can never pin (the dead-letter class: a pair
+    // whose in-session side was never measured).
+    val rows = SparkEntry.queries.keySet
+    val dead = PlanGate.ServePins.flatMap { case (p, i) => Seq(p, i) }
+      .filterNot(rows)
+    assert(dead.isEmpty, dead)
+  }
+
   test("baseline render/parse round-trips, with and without medians") {
     val meds = baselineFp.keys.map(_ -> 1.0).toMap
     val parsed = PlanGate.parseBaseline(PlanGate.render(baselineFp, meds))
