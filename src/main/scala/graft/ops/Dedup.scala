@@ -547,68 +547,126 @@ object Dedup {
       .filter(col("cos") >= threshold)
   }
 
+  /** Both directions of an undirected (d1, d2) edge list, as (src, dst) plus
+    * `extra` columns carried unchanged on each direction. */
+  private def symmetric(edges: DataFrame, extra: Column*): DataFrame =
+    edges.select(Seq(col("d1").as("src"), col("d2").as("dst")) ++ extra: _*)
+      .union(edges.select(Seq(col("d2").as("src"), col("d1").as("dst")) ++ extra: _*))
+
+  /** A relation every round of [[iterate]] reads (the symmetric edge list,
+    * PageRank's degrees): persisted once and tracked in [[CacheRegistry]],
+    * since a fixed-round operator's returned plan still reads it, and the
+    * operators over one edge list share it. */
+  private def roundInput(df: DataFrame): DataFrame =
+    CacheRegistry.track(df.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** The round loop of the iterative graph operators: runs `step` from
+    * `init` for `rounds` rounds (round numbers from 1) and returns the last
+    * state as a plan, not a result — the last round runs under the caller's
+    * action.
+    *
+    * Lineage cuts. Rounds chain lazily, so with no cut the logical plan
+    * grows with every round: Catalyst re-analyzes and re-optimizes the whole
+    * chain, a driver planning and stack risk at high round counts. An eager
+    * `localCheckpoint` runs the rounds since the last cut in one job and
+    * rebases the plan on the checkpointed blocks, so plan depth stays
+    * constant at any round count (pinned by `IterativePlanSpec`).
+    * Executor-local blocks suffice on a stable cluster; a reliable
+    * `checkpoint()` is the variant that survives losing an executor.
+    *
+    * Cadence. A round that reads its predecessor twice (`readsTwice`: a
+    * neighbor join plus a carry-forward, or two alive-set joins) lazily
+    * persists it, so both reads share one evaluation, and one job runs two
+    * rounds. Three rounds per job measured slower (LPA 3.48 s vs 1.92 s,
+    * BFS 2.59 s vs 1.94 s solo at sf0.1): the chained branches evaluate
+    * twice before cache blocks land, and Catalyst re-optimizes the deeper
+    * plan. Cuts count back from the last round, so the returned plan holds
+    * exactly one round over the last cut. A round that reads its
+    * predecessor once (PageRank) needs no persist. Chaining PageRank's
+    * three rounds uncut into the returned plan ran no build job but was
+    * slower end to end at sf0.01 (Verify build + write 6.24 s vs 5.49 s,
+    * median of 5), since a round the returned plan holds joins by shuffle
+    * (below); so it takes the same cuts. A round cache is unpersisted once a
+    * cut covers it.
+    *
+    * The round the returned plan holds joins its state by shuffle (a
+    * `shuffle_hash` hint on the state): left to planner stats, it would
+    * broadcast the materialized round inputs, a cached-stats broadcast that
+    * is correct at test scale and an OOM plan once the inputs grow with the
+    * corpus (SURVEY §9; the plan gate's `cachedBroadcast` rule).
+    *
+    * Fixpoint. `progress` stops the loop early: it maps a state to a scalar
+    * that changes iff the state does (Σcomp for connected components, the
+    * alive count for the k-core peel). Every round is then cut, and
+    * `progress` collects the scalar of the cut state — a bounded driver
+    * collect, one row per round, over checkpointed blocks. The loop ends at
+    * the first round that repeats the scalar and returns that round's cut,
+    * which the check needed anyway. */
+  private def iterate(
+      init: DataFrame, rounds: Int, readsTwice: Boolean = true,
+      progress: Option[DataFrame => Any] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    var pending = List.empty[DataFrame] // persisted states since the last cut
+    var state = init
+    var seen = progress.map(_(state))
+    var done = rounds < 1
+    var r = 0
+    while (!done) {
+      r += 1
+      val kept = progress.isEmpty && r == rounds // stays in the returned plan
+      val cut = progress.isDefined || (rounds - r) % 2 == 1
+      val next = step(if (kept) state.hint("shuffle_hash") else state, r)
+      state =
+        if (cut) {
+          val ck = next.localCheckpoint()
+          pending.foreach(_.unpersist()); pending = Nil
+          ck
+        } else if (readsTwice && !kept) {
+          val p = next.persist(MEMORY_AND_DISK); pending ::= p; p
+        } else next
+      progress.foreach { p =>
+        val now = p(state)
+        done = seen.contains(now)
+        seen = Some(now)
+      }
+      done ||= r == rounds
+    }
+    state
+  }
+
+  /** Round cap of [[connectedComponents]]: near-dup components converge in
+    * a handful of rounds; the cap bounds a pathological chain. */
+  private val ComponentRounds = 25
+
   /** Connected components over near-dup pairs: label-propagation-to-min
     * (each node repeatedly adopts the smallest id reachable through its
     * neighbors) until fixpoint — the standard distributed CC formulation
     * (HashToMin-style). Converges in O(component diameter) rounds; near-dup
     * components are tiny, so a handful. Each round is one equi-join + one
-    * aggregation; the driver sees only a change-count scalar per round.
-    * Output: (idCol, component) for every node, component = min id of its
-    * near-dup cluster (itself when unpaired) — the canonical-document
-    * assignment that completes a dedup pipeline. */
+    * aggregation; the driver sees only the Σcomp scalar per round
+    * ([[iterate]]'s fixpoint check). Output: (idCol, component) for every
+    * node, component = min id of its near-dup cluster (itself when
+    * unpaired) — the canonical-document assignment that completes a dedup
+    * pipeline. */
   def connectedComponents(
-      nodes: DataFrame, edges: DataFrame, idCol: String,
-      maxIter: Int = 25, checkpointEvery: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    // Materialize the (expensive) edge pipeline once, before the loop: every
-    // round then joins the cached symmetric edge list, and AQE sees its true
-    // size when picking broadcast vs shuffle for the per-round join.
-    sym.count()
-
-    var labels = nodes.select(col(idCol).as("id"), col(idCol).as("comp"))
-      .persist(MEMORY_AND_DISK)
+      nodes: DataFrame, edges: DataFrame, idCol: String): DataFrame = {
+    val sym = roundInput(symmetric(edges))
     // comp only ever decreases (adopt-the-min), so the label set changed
     // iff Σcomp decreased — convergence is a one-scalar aggregate over the
-    // cached labels instead of a full self-join diff per round.
+    // cut labels instead of a full self-join diff per round.
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    iterate(nodes.select(col(idCol).as("id"), col(idCol).as("comp")),
+        ComponentRounds, progress = Some(labelSum)) { (labels, _) =>
       // Adopt the min over {self} ∪ neighbors, as union + min-agg: one
       // equi-join + one aggregation per round, no left join, no diff join.
       val neighborMin = sym.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("comp"))
-      val next = labels.select(col("id"), col("comp")).union(neighborMin)
+      labels.select(col("id"), col("comp")).union(neighborMin)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-        .persist(MEMORY_AND_DISK)
-      val s = labelSum(next)
-      labels.unpersist()
-      // The per-round persist dedupes work but leaves the LOGICAL plan
-      // growing linearly with rounds — a driver-side planning/stack risk at
-      // high round counts. localCheckpoint every N rounds rebases the plan
-      // on the already-cached blocks (a cheap cache-read job) and truncates
-      // the lineage; executor-local blocks suffice on a stable cluster
-      // (reliable checkpoint() is the lose-an-executor-safe variant).
-      labels =
-        if ((i + 1) % checkpointEvery == 0) {
-          val ck = next.localCheckpoint(); next.unpersist(); ck
-        } else next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-    }
-    sym.unpersist()
-    // Hand back a lineage-free result and release the loop's last cache —
-    // callers re-cache if they fan out (e.g. the session component cache);
-    // nothing stays pinned by the op itself.
-    val out = labels.localCheckpoint()
-    labels.unpersist()
-    out.select(col("id").as(idCol), col("comp").as("component"))
+    }.select(col("id").as(idCol), col("comp").as("component"))
   }
 
   /** Semi-supervised label propagation over an undirected edge set: seeded
@@ -620,39 +678,16 @@ object Dedup {
     * equi-join against the cached symmetric edges + two hash aggregates
     * (count per (node, label), then lexicographic-min of (-count, label));
     * state is one row per node, like [[connectedComponents]].
-    *
-    * Loop shape (round-5 rework, ~2× over the eager original): LPA needs no
-    * per-round convergence scalar, so rounds CHAIN LAZILY — no count barrier
-    * per round. A round's state is lazily persisted (it feeds two plan
-    * branches of the next round: the neighbor join and the carry-forward),
-    * and every `checkpointEvery` rounds — plus once at the end — the chain is
-    * cut with an EAGER localCheckpoint: one job materializes the rounds since
-    * the last cut, truncates the logical plan to a cached-RDD scan (bounded
-    * plan depth at any round count — pinned by `IterativePlanSpec`), and the
-    * intermediate caches are released. */
+    * Output: idCol, label (NULL when never reached), seeded. */
   def labelPropagation(
       nodes: DataFrame, edges: DataFrame, idCol: String,
-      seeds: DataFrame, labelCol: String, rounds: Int,
-      checkpointEvery: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Lazy persist, NOT eagerly counted: the first checkpoint job
-    // materializes the blocks anyway, so an up-front count() is a pure
-    // extra job launch at serve time; at scale round jobs dominate either
-    // way. Cadence stays 2 — an A/B at cadence 3 measured SLOWER serves
-    // (3.5 s vs 1.9 s solo at sf0.1): letting three lazily-persisted
-    // rounds chain into one job duplicates branch evaluation and deepens
-    // the plan Catalyst must re-optimize, costing more than the extra
-    // materialization job saves. Frequent truncation is load-bearing for
-    // latency, not just for plan depth (IterativePlanSpec pins 15 rounds).
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    var labels = nodes.select(col(idCol).as("id"))
+      seeds: DataFrame, labelCol: String, rounds: Int): DataFrame = {
+    val sym = roundInput(symmetric(edges))
+    val init = nodes.select(col(idCol).as("id"))
       .join(seeds.select(col(idCol).as("id"), col(labelCol).as("label")),
         Seq("id"), "left")
       .withColumn("seeded", col("label").isNotNull)
-    var pending = List.empty[DataFrame]
-    for (r <- 1 to rounds) {
+    iterate(init, rounds) { (labels, _) =>
       val nbr = sym.join(labels.filter(col("label").isNotNull),
           col("dst") === col("id"))
         .select(col("src").as("id"), col("label"))
@@ -660,25 +695,11 @@ object Dedup {
         .groupBy(col("id"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("b"))
         .select(col("id"), col("b.l").as("nbr_label"))
-      val next = labels.join(nbr, Seq("id"), "left")
+      labels.join(nbr, Seq("id"), "left")
         .withColumn("label", when(col("seeded"), col("label"))
           .otherwise(coalesce(col("nbr_label"), col("label"))))
         .select("id", "label", "seeded")
-      labels =
-        if (r % checkpointEvery == 0 || r == rounds) {
-          val ck = next.localCheckpoint() // eager: materialize + cut lineage
-          pending.foreach(_.unpersist()); pending = Nil
-          ck
-        } else {
-          // Lazy persist: dedupes this round's two references in the next
-          // round's plan when the next checkpoint job evaluates them.
-          val p = next.persist(MEMORY_AND_DISK)
-          pending ::= p
-          p
-        }
-    }
-    sym.unpersist()
-    labels.select(col("id").as(idCol), col("label"), col("seeded"))
+    }.select(col("id").as(idCol), col("label"), col("seeded"))
   }
 
   /** Multi-source BFS hop distance over the symmetric near-dup graph:
@@ -691,43 +712,24 @@ object Dedup {
     * edge incidence, never the whole graph — the property that keeps round
     * cost falling as the search saturates. First assignment wins
     * (coalesce), which IS min-hop by BFS construction; no min-agg over
-    * history needed. Same checkpoint cadence as [[labelPropagation]].
-    * Output: idCol, dist (BIGINT, NULL = beyond maxHops), reached. */
+    * history needed. Output: idCol, dist (BIGINT, NULL = beyond maxHops),
+    * reached. */
   def bfsDistance(
       nodes: DataFrame, edges: DataFrame, idCol: String,
-      seeds: DataFrame, maxHops: Int, checkpointEvery: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Lazy persist + cadence 2 — see labelPropagation's loop comment.
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    var dist = nodes.select(col(idCol).as("id"))
+      seeds: DataFrame, maxHops: Int): DataFrame = {
+    val sym = roundInput(symmetric(edges))
+    val init = nodes.select(col(idCol).as("id"))
       .join(seeds.select(col(idCol).as("id"), lit(0L).as("dist")).distinct(),
         Seq("id"), "left")
-    var pending = List.empty[DataFrame]
-    for (h <- 1 to maxHops) {
+    iterate(init, maxHops) { (dist, h) =>
       val frontier = dist.filter(col("dist") === (h - 1)).select(col("id"))
       val nbr = sym.join(frontier, col("dst") === col("id"))
         .select(col("src").as("id")).distinct()
         .withColumn("nd", lit(h.toLong))
-      val next = dist.join(nbr, Seq("id"), "left")
+      dist.join(nbr, Seq("id"), "left")
         .withColumn("dist", coalesce(col("dist"), col("nd")))
         .select("id", "dist")
-      dist =
-        if (h % checkpointEvery == 0 || h == maxHops) {
-          val ck = next.localCheckpoint() // eager: materialize + cut lineage
-          pending.foreach(_.unpersist()); pending = Nil
-          ck
-        } else {
-          // Lazy persist: dedupes this round's two references (frontier +
-          // carry-forward) when the next checkpoint job evaluates them.
-          val p = next.persist(MEMORY_AND_DISK)
-          pending ::= p
-          p
-        }
-    }
-    sym.unpersist()
-    dist.select(col("id").as(idCol), col("dist"),
+    }.select(col("id").as(idCol), col("dist"),
       col("dist").isNotNull.as("reached"))
   }
 
@@ -744,40 +746,21 @@ object Dedup {
     * unreachable within maxRounds edges), reached. */
   def weightedDistance(
       nodes: DataFrame, edges: DataFrame, idCol: String, weightCol: String,
-      seeds: DataFrame, maxRounds: Int, checkpointEvery: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Lazy persist + cadence 2 — see labelPropagation's loop comment.
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"),
-        col(weightCol).as("w"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst"),
-        col(weightCol).as("w")))
-      .persist(MEMORY_AND_DISK)
-    var dist = nodes.select(col(idCol).as("id"))
+      seeds: DataFrame, maxRounds: Int): DataFrame = {
+    val sym = roundInput(symmetric(edges, col(weightCol).as("w")))
+    val init = nodes.select(col(idCol).as("id"))
       .join(seeds.select(col(idCol).as("id"), lit(0L).as("dist")).distinct(),
         Seq("id"), "left")
-    var pending = List.empty[DataFrame]
-    for (r <- 1 to maxRounds) {
+    iterate(init, maxRounds) { (dist, _) =>
       val relax = sym.join(dist.filter(col("dist").isNotNull),
           col("dst") === col("id"))
         .groupBy(col("src"))
         .agg(min(col("dist") + col("w")).as("nd"))
         .select(col("src").as("id"), col("nd"))
-      val next = dist.join(relax, Seq("id"), "left")
+      dist.join(relax, Seq("id"), "left")
         .withColumn("dist", least(col("dist"), col("nd")))
         .select("id", "dist")
-      dist =
-        if (r % checkpointEvery == 0 || r == maxRounds) {
-          val ck = next.localCheckpoint() // eager: materialize + cut lineage
-          pending.foreach(_.unpersist()); pending = Nil
-          ck
-        } else {
-          val p = next.persist(MEMORY_AND_DISK)
-          pending ::= p
-          p
-        }
-    }
-    sym.unpersist()
-    dist.select(col("id").as(idCol), col("dist"),
+    }.select(col("id").as(idCol), col("dist"),
       col("dist").isNotNull.as("reached"))
   }
 
@@ -799,37 +782,25 @@ object Dedup {
     * symmetric edge list — same shuffle shape as [[connectedComponents]].
     * Output: idCol, deg, rank_u (fixed-point BIGINT), rank (double). */
   def pageRank(
-      nodes: DataFrame, edges: DataFrame, idCol: String, iters: Int = 3,
-      checkpointEvery: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      nodes: DataFrame, edges: DataFrame, idCol: String, iters: Int = 3): DataFrame = {
     val One = 1000000000000L // fixed-point 1.0 (scale 1e12)
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .persist(MEMORY_AND_DISK)
+    val sym = roundInput(symmetric(edges))
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val base = nodes.select(col(idCol).as("id"))
+    val base = roundInput(nodes.select(col(idCol).as("id"))
       .join(deg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    var ranks = base.withColumn("rank_u", lit(One))
-    (1 to iters).foreach { it =>
-      val contrib = sym.join(ranks, col("src") === col("id"))
-        .select(col("dst").as("id"), expr("rank_u div deg").as("c"))
-      val sums = contrib.groupBy("id").agg(sum(col("c")).as("csum"))
-      ranks = base.join(sums, Seq("id"), "left")
-        .select(col("id"), col("deg"),
-          (lit(15L * One / 100) +
-            expr("(17 * coalesce(csum, CAST(0 AS BIGINT))) div 20")).as("rank_u"))
-      // The recurrence references ranks once per iteration, so the lazy plan
-      // grows only linearly — but unbounded linear growth is still a driver
-      // planning risk at high iteration counts; cut it periodically.
-      if (it % checkpointEvery == 0 && it < iters) ranks = ranks.localCheckpoint()
-    }
-    // Lineage-free handoff; release the loop caches (see connectedComponents).
-    val out = ranks.localCheckpoint()
-    sym.unpersist()
-    base.unpersist()
-    out.select(col("id").as(idCol), col("deg"), col("rank_u"),
+      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
+    iterate(base.withColumn("rank_u", lit(One)), iters, readsTwice = false) {
+      (ranks, _) =>
+        val contrib = sym.join(ranks, col("src") === col("id"))
+          .select(col("dst").as("id"), expr("rank_u div deg").as("c"))
+        val sums = contrib.groupBy("id").agg(sum(col("c")).as("csum"))
+        // base is a cached round input: joined by shuffle, as [[iterate]]
+        // joins the state of the round its returned plan holds
+        base.hint("shuffle_hash").join(sums, Seq("id"), "left")
+          .select(col("id"), col("deg"),
+            (lit(15L * One / 100) +
+              expr("(17 * coalesce(csum, CAST(0 AS BIGINT))) div 20")).as("rank_u"))
+    }.select(col("id").as(idCol), col("deg"), col("rank_u"),
       (col("rank_u").cast("double") / lit(One.toDouble)).as("rank"))
   }
 
@@ -866,18 +837,17 @@ object Dedup {
     * the surviving pairs. The probe side goes through the measured
     * broadcast gate, never planner stats on a cached edge set. */
   def commonNeighbors(edges: DataFrame, minCommon: Int): DataFrame = {
-    val sym = edges.select(col("d1").as("x"), col("d2").as("y"))
-      .union(edges.select(col("d2").as("x"), col("d1").as("y")))
-    val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    val sym = symmetric(edges)
+    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val symB = Skew.broadcastIfBounded(sym)
     val wedges = sym.as("l")
       .join(symB.as("r"),
-        col("l.x") === col("r.x") && col("l.y") < col("r.y"))
-      .select(col("l.y").as("n1"), col("r.y").as("n2"))
+        col("l.src") === col("r.src") && col("l.dst") < col("r.dst"))
+      .select(col("l.dst").as("n1"), col("r.dst").as("n2"))
     wedges.groupBy(col("n1"), col("n2")).agg(count(lit(1)).as("cn"))
       .filter(col("cn") >= minCommon)
-      .join(deg.select(col("x").as("n1"), col("deg").as("deg_a")), "n1")
-      .join(deg.select(col("x").as("n2"), col("deg").as("deg_b")), "n2")
+      .join(deg.select(col("src").as("n1"), col("deg").as("deg_a")), "n1")
+      .join(deg.select(col("src").as("n2"), col("deg").as("deg_b")), "n2")
       .withColumn("jacc",
         expr("CAST(cn AS DOUBLE) / CAST(deg_a + deg_b - cn AS DOUBLE)"))
       .select(col("n1").as("d1"), col("n2").as("d2"),
@@ -892,40 +862,21 @@ object Dedup {
     * full round removes nothing, which near-dup graphs (tiny components,
     * diameter ≤ ~4) reach well inside 4 rounds; an unconverged peel is a
     * superset of the core. Each round is two equi-joins against the alive
-    * set + one count aggregate; the alive set feeds BOTH joins, so every
-    * round ends in an eager localCheckpoint that materializes it once and
-    * truncates the lineage — plan depth stays constant in `rounds`, exactly
-    * as [[connectedComponents]]'s loop does. The checkpoint job yields the
-    * alive count for free, so a round that removes nothing short-circuits
-    * the remaining rounds (the peel is a fixed point: once every survivor
-    * has alive-degree ≥ k, further rounds are identity). Output:
+    * set + one count aggregate. The peel is a fixed point once every
+    * survivor has alive-degree ≥ k, so a round that removes nothing ends it
+    * early ([[iterate]]'s fixpoint check on the alive count). Output:
     * (idCol, in_core) for every node. */
   def kCore(
       nodes: DataFrame, edges: DataFrame, idCol: String,
       k: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("d1").as("a"), col("d2").as("b"))
-      .union(edges.select(col("d2").as("a"), col("d1").as("b")))
-      .persist(MEMORY_AND_DISK)
-    var alive = nodes.select(col(idCol).as("id")).localCheckpoint()
-    var prevN = alive.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      val next = sym
-        .join(alive.select(col("id").as("b")), "b")
-        .join(alive.select(col("id").as("a")), "a")
-        .groupBy(col("a")).agg(count(lit(1)).as("_deg"))
-        .filter(col("_deg") >= k).select(col("a").as("id"))
-        .localCheckpoint()
-      val n = next.count()
-      alive.unpersist()
-      alive = next
-      converged = n == prevN
-      prevN = n
-      i += 1
+    val sym = roundInput(symmetric(edges))
+    val alive = iterate(nodes.select(col(idCol).as("id")), rounds,
+        progress = Some(_.count())) { (alive, _) =>
+      sym.join(alive.select(col("id").as("dst")), "dst")
+        .join(alive.select(col("id").as("src")), "src")
+        .groupBy(col("src")).agg(count(lit(1)).as("_deg"))
+        .filter(col("_deg") >= k).select(col("src").as("id"))
     }
-    sym.unpersist()
     nodes.select(col(idCol))
       .join(alive.select(col("id").as(idCol), lit(1).as("_in")),
         Seq(idCol), "left")
