@@ -420,8 +420,9 @@ object ScaleSweep {
       pipelines ++ queries ++ kc ++ fwdRows
     }
 
-    // 1× first, then the replica — the SessionCache dir-eviction swaps the
-    // shared pipelines over automatically.
+    // 1× first, then the replica — the first shared build under the
+    // replica dir releases every 1× build, whichever name it has
+    // (graft.ops.SharedBuilds).
     val t1 = runAll(sfDir)
 
     // EVIDENCE SECTIONS, 1× only (between the passes, while the 1× caches
@@ -552,9 +553,9 @@ object ScaleSweep {
     }
     // MEDIANS MODE for flagged rows: a single-shot timing that trips the
     // super-linear threshold is re-run medians-of-3 at BOTH scales before
-    // the verdict. All 1× re-measures run before all N× so the SessionCache
-    // dir swap happens twice, not per query; the median discards the rep
-    // that carries any lazy rebuild. Pipelines (single-shot builds) and the
+    // the verdict. All 1× re-measures run before all N× so the shared-build
+    // store's dir swap happens twice, not per query; the median discards
+    // the rep that carries any lazy rebuild. Pipelines (single-shot builds) and the
     // kc/fwd rows (hooks outside SparkEntry.queries) keep their ratio.
     val flaggedNames = ratios.filter(_._2 > 1.2 * factor).map(_._1)
       .filter(SparkEntry.queries.contains)

@@ -27,11 +27,12 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Q.oracleMap(allQueries)
 
-  /** Shared-pipeline builders (session-scoped materializations fanned out
-    * to many queries: LSH pairs, near-dup components, the Lloyd training
-    * run). Bench times these explicitly before the per-query loop so the
-    * build cost isn't misattributed to whichever consumer runs first.
-    * Ordered: later builders may consume earlier ones. */
+  /** The session-shared builds by pipeline name (materializations fanned
+    * out to many queries: LSH pairs, near-dup components, the Lloyd
+    * training run), each module's declarations in order
+    * ([[graft.ops.SharedBuilds]]). Bench times these explicitly before the
+    * per-query loop so the build cost isn't misattributed to whichever
+    * consumer runs first. Ordered: later builds may consume earlier ones. */
   def pipelines: Seq[(String, (SparkSession, String) => Unit)] =
     DedupQ.pipelines ++ TrainQ.pipelines ++ Flagship.pipelines ++
       SourcesQ.pipelines ++ PipelineQ.pipelines ++ CorpusQ.pipelines ++

@@ -24,12 +24,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** One [[graft.queries.SessionCache]] per named layout: two layouts over
-    * the same (session, dir) must not collide on the cache key, and each
-    * must rebuild when the data dir changes (the ScaleSweep case). */
-  private val layoutCaches = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.queries.SessionCache[Unit]]()
-
   /** A layout NAME is an identity: the first registration pins its spec
     * (tables + sort columns), and a later call reusing the name with a
     * different spec fails fast instead of silently serving the first
@@ -46,10 +40,10 @@ object Bucketing {
     layoutSpecs.keySet().asScala.toSet
   }
 
-  /** Session-scoped bucketed layout: build the named bucketed tables ONCE
-    * per (session, data dir) and let every later query serve from the
-    * catalog with zero Exchange. This is THE entry point for layout builds —
-    * both house rules live here, not at call sites:
+  /** Session-scoped bucketed layout: build the named bucketed tables and
+    * let every later query serve from the catalog with zero Exchange. This
+    * is THE entry point for layout builds — both house rules live here, not
+    * at call sites:
     *
     *  - **bucket count = the session's default parallelism.** With fewer
     *    buckets than cores every exchange-free join runs under-parallelized;
@@ -61,9 +55,10 @@ object Bucketing {
     *    order so downstream SortMergeJoins skip their Sort.
     *
     * `tables` lists (catalogTable, sourceTable, bucketKey); files land under
-    * a fresh temp dir. Idempotent per (session, dir): bench pipelines build
-    * eagerly for honest attribution, query bodies call it again as a no-op
-    * (so standalone Verify/subset runs still work). */
+    * a fresh temp dir. Each call writes: a layout is declared as one
+    * [[SharedBuilds]] build, which bench pipelines build eagerly for honest
+    * attribution and query bodies call again as a lookup (so standalone
+    * Verify/subset runs still work). */
   def sessionLayout(
       spark: SparkSession, dir: String, layout: String,
       tables: Seq[(String, String, String)],
@@ -73,16 +68,12 @@ object Bucketing {
     require(prior == null || prior == spec,
       s"layout '$layout' re-registered with a conflicting spec: " +
         s"first=$prior now=$spec — use a distinct layout name")
-    val cache = layoutCaches.computeIfAbsent(
-      layout, _ => new graft.queries.SessionCache[Unit](_ => ()))
-    cache.getOrElseUpdate(spark, dir) {
-      val tmp = graft.engine.TempDirs.create(s"graft_$layout")
-      val n = spark.sparkContext.defaultParallelism
-      tables.foreach { case (table, source, key) =>
-        writeBucketed(spark, graft.engine.Catalog.load(spark, dir, source),
-          table, s"$tmp/$source", n, key,
-          sortCols.getOrElse(table, Nil))
-      }
+    val tmp = graft.engine.TempDirs.create(s"graft_$layout")
+    val n = spark.sparkContext.defaultParallelism
+    tables.foreach { case (table, source, key) =>
+      writeBucketed(spark, graft.engine.Catalog.load(spark, dir, source),
+        table, s"$tmp/$source", n, key,
+        sortCols.getOrElse(table, Nil))
     }
   }
 

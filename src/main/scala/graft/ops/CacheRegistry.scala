@@ -14,11 +14,11 @@ import org.apache.spark.sql.DataFrame
   * dedupe rule as Spark's own CacheManager), so re-running a query tracks
   * ONE handle per distinct cached plan, not one per call.
   *
-  * Release sites: [[graft.queries.SessionCache]] eviction calls
-  * [[releaseAll]] when the working data dir changes (dir-sequential apps —
-  * the stress harness, a backfill — drop the previous dir's miner caches
-  * together with its shared pipelines), and applications embedding the ops
-  * directly call [[releaseAll]] at their own batch boundaries. Unpersisting
+  * Release sites: the [[SharedBuilds]] store calls [[releaseAll]] on the
+  * first build under a new data dir (dir-sequential apps — the scale
+  * sweep, a backfill — drop the previous dir's miner caches together with
+  * its shared builds), and applications embedding the ops directly call
+  * [[releaseAll]] at their own batch boundaries. Unpersisting
   * is always semantically safe: the pipelines are deterministic, so a
   * late-referencing consumer merely recomputes.
   */

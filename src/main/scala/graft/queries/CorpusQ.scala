@@ -13,6 +13,8 @@ import graft.ops.Corpus
   * recurrences; IEEE double arithmetic in identical expression order). */
 object CorpusQ {
 
+  private val shared = new graft.ops.SharedBuilds
+
   /** The canonical BM25 term contribution ([[graft.ops.Corpus.bm25Term]]):
     * ONE definition shared by the exact ranker, the hybrid fusion rows, and
     * the impact index, so the impact serve's provable-equality argument
@@ -31,31 +33,22 @@ object CorpusQ {
     * fanned out to the train/encode/tokenize rows — the Lloyd-pipeline
     * discipline, so the bench attributes training to `pipeline:bpe_model`
     * and the rows measure SERVING. */
-  private val bpeModelCache = new SessionCache[
-    (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame)](
-    m => m._2.unpersist())
+  private val bpeModel = shared.persisted("bpe_model") { (s, dir) =>
+    Corpus.bpeTrain(Catalog.load(s, dir, "documents"), "text", k = 8)
+  }(m => Seq(m._2))
 
-  private def bpeModel(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) =
-    bpeModelCache.getOrElseUpdate(s, dir) {
-      Corpus.bpeTrain(Catalog.load(s, dir, "documents"), "text", k = 8)
-    }
+  private[queries] val Bm25Buckets = 32
 
   /** Session-scoped persisted BM25 impact index (train-once / serve-many,
     * the kmeansIndex discipline): the full impact-ordered posting table
     * written bucket-partitioned to a session temp dir. The serve row
     * (`text_bm25_impact_topk`) reads ONLY this. */
-  private[queries] val bm25IndexCache = new SessionCache[String](_ => ())
-
-  private[queries] val Bm25Buckets = 32
-
-  private[queries] def bm25Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bm25IndexCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_bm25idx")
-      Corpus.writeBm25ImpactIndex(Catalog.load(s, dir, "documents"), "text",
-        tmp, Bm25Buckets)
-      tmp
-    }
+  private[queries] val bm25Index = shared("bm25_impact_index") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_bm25idx")
+    Corpus.writeBm25ImpactIndex(Catalog.load(s, dir, "documents"), "text",
+      tmp, Bm25Buckets)
+    tmp
+  }
 
   /** The lexical DELTA corpus — the ann_ivf_pq_append discipline: every
     * 10th-ish doc cloned with ids offset by 1e15, the "new arrivals"
@@ -65,30 +58,24 @@ object CorpusQ {
     Catalog.load(s, dir, "documents").filter(col("doc_id") % 10 === 3)
       .select((col("doc_id") + 1000000000000000L).as("doc_id"), col("text"))
 
-  private val bm25DeltaCache = new SessionCache[String](_ => ())
-
-  private def bm25Delta(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bm25DeltaCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_bm25delta")
-      Corpus.writeBm25Delta(s, bm25DeltaDocs(s, dir), "text",
-        bm25Index(s, dir), tmp, Bm25Buckets)
-      tmp
-    }
+  private val bm25Delta = shared("bm25_impact_delta") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_bm25delta")
+    Corpus.writeBm25Delta(s, bm25DeltaDocs(s, dir), "text",
+      bm25Index(s, dir), tmp, Bm25Buckets)
+    tmp
+  }
 
   /** The COMPACTION: a full rebuild over base ∪ delta with REFRESHED
     * statistics — the periodic merge that pays the idf/avgdl refresh the
     * append deferred. */
-  private val bm25CompactCache = new SessionCache[String](_ => ())
-
-  private def bm25Compacted(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    bm25CompactCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_bm25compact")
-      Corpus.writeBm25ImpactIndex(
-        Catalog.load(s, dir, "documents").select(col("doc_id"), col("text"))
-          .unionByName(bm25DeltaDocs(s, dir)),
-        "text", tmp, Bm25Buckets)
-      tmp
-    }
+  private val bm25Compacted = shared("bm25_impact_compact") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_bm25compact")
+    Corpus.writeBm25ImpactIndex(
+      Catalog.load(s, dir, "documents").select(col("doc_id"), col("text"))
+        .unionByName(bm25DeltaDocs(s, dir)),
+      "text", tmp, Bm25Buckets)
+    tmp
+  }
 
   /** N-SEGMENT lifecycle (round 12): a real ingest accumulates SEVERAL
     * delta segments between compactions — the single-delta append above is
@@ -103,41 +90,34 @@ object CorpusQ {
       .select((col("doc_id") + mod * 1000000000000000L).as("doc_id"),
         col("text"))
 
-  private val bm25SegsCache = new SessionCache[Seq[String]](_ => ())
-
-  private def bm25Segs(s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    bm25SegsCache.getOrElseUpdate(s, dir) {
-      Bm25SegMods.map { m =>
-        val tmp = graft.engine.TempDirs.create(s"graft_bm25seg$m")
-        Corpus.writeBm25Delta(s, bm25SegDocs(s, dir, m), "text",
-          bm25Index(s, dir), tmp, Bm25Buckets)
-        tmp
-      }
-    }
-
-  /** BIG-VOCABULARY impact index (round 13): the base corpus's 31-word
-    * vocabulary makes df/n_docs ≈ 1 for every term (idf barely
-    * discriminates) and packs ~1 word per bucket-hash class — the bm25
-    * serve's bucket pruning and idf behavior are only honestly testable on
-    * [[SimilarityQ.bigVocabDocs]]'s ~7.5k-word salted corpus, where a
-    * 3-term query prunes to ≤3 of 32 buckets each carrying ~235 terms. */
-  private val bm25BigCache = new SessionCache[String](_ => ())
-
-  private[queries] def bm25BigIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    bm25BigCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_bm25big")
-      Corpus.writeBm25ImpactIndex(SimilarityQ.bigVocabDocs(s, dir), "text",
-        tmp, Bm25Buckets)
+  private val bm25Segs = shared("bm25_impact_segments") { (s, dir) =>
+    Bm25SegMods.map { m =>
+      val tmp = graft.engine.TempDirs.create(s"graft_bm25seg$m")
+      Corpus.writeBm25Delta(s, bm25SegDocs(s, dir, m), "text",
+        bm25Index(s, dir), tmp, Bm25Buckets)
       tmp
     }
+  }
 
-  /** Salted query terms for the bigvocab serve — measured present at every
-    * SF (df 1–43): low-df terms are exactly what the 31-word corpus cannot
-    * produce (every base term matches ~every doc). */
-  private[queries] val Bm25BigTerms =
-    Seq("spark_7", "vector_33", "customer_101")
+  /** TIERED compaction of the multi-segment index: rebuild over base ∪ all
+    * segments with refreshed statistics, gated by the size-tiered trigger
+    * ([[graft.ops.Corpus.bm25CompactionTrigger]], ratio 25%) — the Lucene
+    * merge-policy shape. The trigger read is a 1-row build-time pull (the
+    * merge policy IS a driver decision); on this corpus the three ~10%
+    * segments total ~30% of base, so the policy fires at every SF. */
+  private val bm25MultisegCompacted = shared("bm25_multiseg_compact") { (s, dir) =>
+    val fire = Corpus.bm25CompactionTrigger(s, bm25Index(s, dir),
+      bm25Segs(s, dir), ratioPct = 25).head.getBoolean(3)
+    require(fire,
+      "tiered trigger did not fire — segments too small to compact")
+    val tmp = graft.engine.TempDirs.create("graft_bm25multicompact")
+    Corpus.writeBm25ImpactIndex(
+      Bm25SegMods.map(bm25SegDocs(s, dir, _))
+        .foldLeft(Catalog.load(s, dir, "documents")
+          .select(col("doc_id"), col("text")))(_.unionByName(_)),
+      "text", tmp, Bm25Buckets)
+    tmp
+  }
 
   /** DELETE lifecycle (round 13): base docs with doc_id % 10 = 4 are
     * tombstoned — disjoint from every delta/segment family (mods 3/5/7/9
@@ -156,57 +136,44 @@ object CorpusQ {
     * written (idempotent per (session, dir); the base postings are shared
     * with every other lifecycle row — only the `tombstones/` subdir is
     * added). */
-  private val bm25TombCache = new SessionCache[String](_ => ())
-
-  private def bm25IndexTombstoned(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    bm25TombCache.getOrElseUpdate(s, dir) {
-      val base = bm25Index(s, dir)
-      Corpus.writeBm25Tombstones(bm25TombstoneDocs(s, dir), base)
-      base
-    }
+  private val bm25IndexTombstoned = shared("bm25_tombstones") { (s, dir) =>
+    val base = bm25Index(s, dir)
+    Corpus.writeBm25Tombstones(bm25TombstoneDocs(s, dir), base)
+    base
+  }
 
   /** Compaction AFTER deletes: rebuild over (base minus tombstoned) ∪ all
     * segments with refreshed statistics — the merge that physically drops
     * tombstoned postings AND removes the deleted docs from df/n_docs/avgdl. */
-  private val bm25TombCompactCache = new SessionCache[String](_ => ())
+  private val bm25TombstoneCompacted = shared("bm25_tombstone_compact") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_bm25tombcompact")
+    Corpus.writeBm25ImpactIndex(
+      Bm25SegMods.map(bm25SegDocs(s, dir, _))
+        .foldLeft(Catalog.load(s, dir, "documents")
+          .filter(col("doc_id") % 10 =!= Bm25TombMod)
+          .select(col("doc_id"), col("text")))(_.unionByName(_)),
+      "text", tmp, Bm25Buckets)
+    tmp
+  }
 
-  private def bm25TombstoneCompacted(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    bm25TombCompactCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_bm25tombcompact")
-      Corpus.writeBm25ImpactIndex(
-        Bm25SegMods.map(bm25SegDocs(s, dir, _))
-          .foldLeft(Catalog.load(s, dir, "documents")
-            .filter(col("doc_id") % 10 =!= Bm25TombMod)
-            .select(col("doc_id"), col("text")))(_.unionByName(_)),
-        "text", tmp, Bm25Buckets)
-      tmp
-    }
+  /** BIG-VOCABULARY impact index (round 13): the base corpus's 31-word
+    * vocabulary makes df/n_docs ≈ 1 for every term (idf barely
+    * discriminates) and packs ~1 word per bucket-hash class — the bm25
+    * serve's bucket pruning and idf behavior are only honestly testable on
+    * [[SimilarityQ.bigVocabDocs]]'s ~7.5k-word salted corpus, where a
+    * 3-term query prunes to ≤3 of 32 buckets each carrying ~235 terms. */
+  private[queries] val bm25BigIndex = shared("bm25_bigvocab_index") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_bm25big")
+    Corpus.writeBm25ImpactIndex(SimilarityQ.bigVocabDocs(s, dir), "text",
+      tmp, Bm25Buckets)
+    tmp
+  }
 
-  /** TIERED compaction of the multi-segment index: rebuild over base ∪ all
-    * segments with refreshed statistics, gated by the size-tiered trigger
-    * ([[graft.ops.Corpus.bm25CompactionTrigger]], ratio 25%) — the Lucene
-    * merge-policy shape. The trigger read is a 1-row build-time pull (the
-    * merge policy IS a driver decision); on this corpus the three ~10%
-    * segments total ~30% of base, so the policy fires at every SF. */
-  private val bm25MultiCompactCache = new SessionCache[String](_ => ())
-
-  private def bm25MultisegCompacted(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    bm25MultiCompactCache.getOrElseUpdate(s, dir) {
-      val fire = Corpus.bm25CompactionTrigger(s, bm25Index(s, dir),
-        bm25Segs(s, dir), ratioPct = 25).head.getBoolean(3)
-      require(fire,
-        "tiered trigger did not fire — segments too small to compact")
-      val tmp = graft.engine.TempDirs.create("graft_bm25multicompact")
-      Corpus.writeBm25ImpactIndex(
-        Bm25SegMods.map(bm25SegDocs(s, dir, _))
-          .foldLeft(Catalog.load(s, dir, "documents")
-            .select(col("doc_id"), col("text")))(_.unionByName(_)),
-        "text", tmp, Bm25Buckets)
-      tmp
-    }
+  /** Salted query terms for the bigvocab serve — measured present at every
+    * SF (df 1–43): low-df terms are exactly what the 31-word corpus cannot
+    * produce (every base term matches ~every doc). */
+  private[queries] val Bm25BigTerms =
+    Seq("spark_7", "vector_33", "customer_101")
 
   /** Generated oracle for the N-segment lifecycle serves: the exact BM25
     * top-20 over base ∪ all [[Bm25SegMods]] segments, with statistics
@@ -322,16 +289,7 @@ object CorpusQ {
 
   /** Named builders for bench attribution (see SparkEntry.pipelines). */
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
-    Seq(
-      "bpe_model" -> ((s, d) => { bpeModel(s, d); () }),
-      "bm25_impact_index" -> ((s, d) => { bm25Index(s, d); () }),
-      "bm25_impact_delta" -> ((s, d) => { bm25Delta(s, d); () }),
-      "bm25_impact_compact" -> ((s, d) => { bm25Compacted(s, d); () }),
-      "bm25_impact_segments" -> ((s, d) => { bm25Segs(s, d); () }),
-      "bm25_multiseg_compact" -> ((s, d) => { bm25MultisegCompacted(s, d); () }),
-      "bm25_tombstones" -> ((s, d) => { bm25IndexTombstoned(s, d); () }),
-      "bm25_tombstone_compact" -> ((s, d) => { bm25TombstoneCompacted(s, d); () }),
-      "bm25_bigvocab_index" -> ((s, d) => { bm25BigIndex(s, d); () }))
+    shared.pipelines
 
   /** [[bpeTrainOracle]]'s stage chain with the final select reading the
     * ENCODED vocabulary state e_k instead of the merge list. */

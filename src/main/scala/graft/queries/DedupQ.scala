@@ -13,6 +13,8 @@ import graft.ops.{Dedup, Similarity}
   * statistical. */
 object DedupQ {
 
+  private val shared = new graft.ops.SharedBuilds
+
   /** Shared oracle prelude: tokenized docs + hashed n-gram shingle sets
     * (DuckDB) — mirrors [[Dedup.hashedShingleSets]]'s two-level recurrence
     * (per-token char hash, then an unrolled window fold over token hashes). */
@@ -35,36 +37,26 @@ object DedupQ {
     * `graph_triangles`) consume the identical deterministic edge set, so
     * within one SparkSession the pipeline runs ONCE and downstream queries
     * read the cached pairs — the materialized-intermediate pattern any
-    * production dedup DAG would use. Keyed by (application, sfDir);
-    * switching dirs evicts + unpersists the previous entry
-    * ([[SessionCache]]). */
-  private val lshPairsCache =
-    new SessionCache[org.apache.spark.sql.DataFrame](_.unpersist())
-
-  private[queries] def lshPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    lshPairsCache.getOrElseUpdate(s, dir) {
-      val p = Dedup.minhashLshPairs(Catalog.load(s, dir, "documents"),
-          "doc_id", "text", n = 3, threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
+    * production dedup DAG would use ([[graft.ops.SharedBuilds]]). */
+  private[queries] val lshPairs = shared.persisted("lsh_pairs") { (s, dir) =>
+    val p = Dedup.minhashLshPairs(Catalog.load(s, dir, "documents"),
+        "doc_id", "text", n = 3, threshold = 0.5)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }(Seq(_))
 
   /** Session-scoped near-dup components over [[lshPairs]] — consumed by
     * `dedup_clusters`, `dedup_keep_best`, `split_leakage_safe` and
     * `corpus_refinery`; the iterative CC rounds run once per session. */
-  private val componentsCache =
-    new SessionCache[org.apache.spark.sql.DataFrame](_.unpersist())
-
-  private[queries] def lshComponents(s: org.apache.spark.sql.SparkSession, dir: String) =
-    componentsCache.getOrElseUpdate(s, dir) {
-      val c = Dedup.connectedComponents(
-          Catalog.load(s, dir, "documents").select("doc_id"),
-          lshPairs(s, dir), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    }
+  private[queries] val lshComponents = shared.persisted("lsh_components") { (s, dir) =>
+    val c = Dedup.connectedComponents(
+        Catalog.load(s, dir, "documents").select("doc_id"),
+        lshPairs(s, dir), "doc_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    c.count()
+    c
+  }(Seq(_))
 
   /** Shared oracle for both incremental-dedup paths (inline and persisted-
     * index serving — they must return identical rows): history = docs with
@@ -116,25 +108,20 @@ object DedupQ {
   /** Session-scoped DISK dedup index over the history partition (docs with
     * doc_id % 5 != 0) — the artifact the persisted incremental-dedup SERVING
     * query probes; built once per session like the IVF indexes. */
-  private val dedupIndexCache = new SessionCache[String](_ => ())
+  private val dedupIndex = shared("minhash_dedup_index") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_dix")
+    Dedup.writeDedupIndex(
+      Catalog.load(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
+      "doc_id", "text", n = 3, path = tmp)
+    tmp
+  }
 
-  private def dedupIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    dedupIndexCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_dix")
-      Dedup.writeDedupIndex(
-        Catalog.load(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", n = 3, path = tmp)
-      tmp
-    }
-
-  /** The shared-pipeline builders, named for explicit bench attribution:
+  /** The shared builds, named for explicit bench attribution:
     * [[graft.Bench]] times these BEFORE the per-query loop so per-query
     * numbers measure serving, not whichever consumer happens to run first.
     * Order matters — components builds on pairs. */
-  def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    "lsh_pairs" -> ((s, d) => { lshPairs(s, d); () }),
-    "lsh_components" -> ((s, d) => { lshComponents(s, d); () }),
-    "minhash_dedup_index" -> ((s, d) => { dedupIndex(s, d); () }))
+  def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
+    shared.pipelines
 
   /** The corpus-refinery decision table (doc_id, component, q, reason) —
     * shared by `corpus_refinery` and the end-to-end export capstone. */

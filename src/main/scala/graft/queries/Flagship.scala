@@ -18,15 +18,17 @@ object Flagship {
     * ONCE, and every orderkey join/aggregation over these tables then plans
     * with zero hash Exchange. The 100× ScaleSweep measured q18/q21 paying 3
     * and 7 exchanges at sf10 — this is the workload-level answer. */
-  private def bucketedOrderkeyLayout(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
+  private val shared = new graft.ops.SharedBuilds
+
+  private val bucketedOrderkeyLayout = shared("bucketed_orderkey_layout") { (s, dir) =>
     graft.ops.Bucketing.sessionLayout(s, dir, "orderkey", Seq(
       ("graft_b_orders", "orders", "o_orderkey"),
       ("graft_b_lineitem", "lineitem", "l_orderkey")))
+  }
 
   /** Named builder for bench attribution (see DedupQ.pipelines). */
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
-    Seq("bucketed_orderkey_layout" -> ((s, d) => bucketedOrderkeyLayout(s, d)))
+    shared.pipelines
 
   /** Q21's oracle — shared with the bucketed-layout variant, whose results
     * must be identical (bucketing is a pure reorganization). */

@@ -38,6 +38,8 @@ object SimilarityQ {
   // the modulus that segment was written with).
   private val MsFwdDeltaBuckets = 8
 
+  private val shared = new graft.ops.SharedBuilds
+
   /** §9 sizing rule for the forward component's bucket count: buckets grow
     * LINEARLY with the corpus so each fb directory stays a bounded number
     * of well-sized files (~`rowsPerBucket` token occurrences ≈ one to a few
@@ -60,14 +62,6 @@ object SimilarityQ {
     while (b < raw) b <<= 1
     math.min(b, 1 << 20).toInt
   }
-
-  /** Session-scoped trained token IVF: (vocab assignment (tid, v, cluster),
-    * centroids (cluster, cent)) — the Lloyd-pipeline discipline, trained
-    * once per (session, dir) and fanned out; the bench attributes training
-    * to `pipeline:maxsim_token_ivf` so the serve row measures serving. */
-  private val maxsimIvfCache =
-    new SessionCache[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      { case (a, c) => a.unpersist(); c.unpersist() })
 
   /** BIG-VOCABULARY derived corpus (round 13): token t at 0-based position
     * i of doc d becomes `t + "_" + ((d·31 + i) mod 257)` — deterministically
@@ -113,37 +107,29 @@ object SimilarityQ {
         expr(s"CAST((h * ${A(i)} + ${B(i)}) % $P AS DOUBLE) / $P.0")): _*).as("v"))
   }
 
-  private def maxsimIvf(s: org.apache.spark.sql.SparkSession, dir: String) =
-    maxsimIvfCache.getOrElseUpdate(s, dir) {
-      import graft.ops.KMeans
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val (a, c) = KMeans.lloyd(tokenVocab(s, dir), "tid", "v", MsKc, MsIters,
-        dims = 4)
-      val ap = a.persist(MEMORY_AND_DISK); ap.count()
-      val cp = c.select(col("cluster"), col("cent")).persist(MEMORY_AND_DISK)
-      cp.count()
-      (ap, cp)
-    }
+  /** Session-scoped trained token IVF: (vocab assignment (tid, v, cluster),
+    * centroids (cluster, cent)) — the Lloyd-pipeline discipline, trained
+    * once per (session, dir) and fanned out; the bench attributes training
+    * to `pipeline:maxsim_token_ivf` so the serve row measures serving.
+    * [[maxsimIvfBig]] is the same fixed-point Lloyd at the same kc, trained
+    * over [[bigVocabDocs]]'s ~7.5k-word vocabulary. */
+  private val maxsimIvf = shared.persisted("maxsim_token_ivf")(
+    trainTokenIvf(_, _, big = false))(ac => Seq(ac._1, ac._2))
 
-  /** The BIG-VOCAB token IVF (separate cache instance so the base- and
-    * big-corpus quantizers coexist per session — SessionCache evicts on
-    * key change by design): same fixed-point Lloyd, same kc, trained over
-    * [[bigVocabDocs]]'s ~7.5k-word vocabulary. */
-  private val maxsimIvfBigCache =
-    new SessionCache[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      { case (a, c) => a.unpersist(); c.unpersist() })
+  private val maxsimIvfBig = shared.persisted("maxsim_token_ivf_big")(
+    trainTokenIvf(_, _, big = true))(ac => Seq(ac._1, ac._2))
 
-  private def maxsimIvfBig(s: org.apache.spark.sql.SparkSession, dir: String) =
-    maxsimIvfBigCache.getOrElseUpdate(s, dir) {
-      import graft.ops.KMeans
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val (a, c) = KMeans.lloyd(tokenVocab(s, dir, big = true), "tid", "v",
-        MsKc, MsIters, dims = 4)
-      val ap = a.persist(MEMORY_AND_DISK); ap.count()
-      val cp = c.select(col("cluster"), col("cent")).persist(MEMORY_AND_DISK)
-      cp.count()
-      (ap, cp)
-    }
+  private def trainTokenIvf(s: org.apache.spark.sql.SparkSession, dir: String,
+      big: Boolean) = {
+    import graft.ops.KMeans
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val (a, c) = KMeans.lloyd(tokenVocab(s, dir, big), "tid", "v", MsKc, MsIters,
+      dims = 4)
+    val ap = a.persist(MEMORY_AND_DISK); ap.count()
+    val cp = c.select(col("cluster"), col("cent")).persist(MEMORY_AND_DISK)
+    cp.count()
+    (ap, cp)
+  }
 
   /** Corpus-token table with the deterministic 4-dim pseudo-embedding —
     * identical affine exprs as the exact MaxSim row; explicit-count
@@ -539,6 +525,38 @@ object SimilarityQ {
       path: String) =
     s.read.parquet(s"$path/cells").select("doc_id", "v0", "v1", "v2", "v3")
 
+  /** Session-scoped DISK token-IVF index (train-once / serve-many, the
+    * kmeansIndex discipline): `cells/` = every corpus-token occurrence
+    * with its dims, PARTITIONED by the trained cluster — the persisted
+    * serve's stage-1 scan prunes to the probed cells' directories;
+    * `cents/` = the centroid table. The stage-2 forward fetch reads the
+    * index's own cells — or, for the bounded-at-scale variant, the
+    * doc_id-bucketed [[maxsimForwardBucketed]] component (round 14).
+    * [[maxsimIndexBig]] is the same layout over [[bigVocabDocs]] with the
+    * big quantizer: the lifecycle's base segment (see below). */
+  private[graft] val maxsimIndex =
+    shared("maxsim_ivf_index")(writeMaxsimIndex(_, _, big = false))
+
+  private def writeMaxsimIndex(s: org.apache.spark.sql.SparkSession, dir: String,
+      big: Boolean): String = {
+    val (assigned, cents) = (if (big) maxsimIvfBig else maxsimIvf)(s, dir)
+    val tmp = graft.engine.TempDirs.create(
+      if (big) "graft_msivf_big" else "graft_msivf")
+    writeMaxsimCells(corpusTokens(s, dir, big), assigned, s"$tmp/cells")
+    cents.write.mode("overwrite").option("compression", "zstd")
+      .parquet(s"$tmp/cents")
+    tmp
+  }
+
+  /** Token rows → their trained cell → one doc-ordered file per cell
+    * ([[graft.ops.Layout.writeCells]]), for the base and delta cells. */
+  private def writeMaxsimCells(tokens: org.apache.spark.sql.DataFrame,
+      assigned: org.apache.spark.sql.DataFrame, path: String): Unit =
+    Layout.writeCells(
+      tokens.join(assigned.select(col("tid"), col("cluster")), col("h") === col("tid"))
+        .select("cluster", "doc_id", "v0", "v1", "v2", "v3"),
+      "cluster", path, Seq(col("doc_id")))
+
   /** DOC_ID-BUCKETED forward component (round 14, closing the structure
     * `maxsimServe`'s scaladoc names): the index's token occurrences
     * rewritten once, partitioned by `fb = pmod(doc_id, MsFwdBuckets)` —
@@ -548,7 +566,10 @@ object SimilarityQ {
     * fetch dynamic-partition-prunes to the ≤ |q_tokens|·T candidate docs'
     * buckets, so the forward read is bounded by the WORKLOAD, not the
     * corpus. Build is one linear pass over the already-built index. */
-  private val maxsimFwdCache = new SessionCache[String](_ => ())
+  private val maxsimForwardBucketed = shared("maxsim_forward") { (s, dir) =>
+    writeForwardBuckets(s.read.parquet(s"${maxsimIndex(s, dir)}/cells"),
+      "graft_msfwd", MsFwdBuckets)
+  }
 
   /** One linear pass: token rows → fb = pmod(doc_id, buckets) → one file
     * per bucket dir ([[graft.ops.Layout.writeCells]]; pmod keeps negative
@@ -588,82 +609,8 @@ object SimilarityQ {
       // rewrite fails loud instead of serving the stale selection.
       Layout.epochGuard(s, layoutPath))
 
-  private val maxsimFwdBigCache = new SessionCache[String](_ => ())
-
-  /** `big` = the forward component of the BIGVOCAB base index — the
-    * lifecycle serves' base segment (round 15: the append/delete/compacted
-    * serves previously forward-read the cells union, correct but
-    * corpus-linear at serve time — the exact shape the base serve's fwd row
-    * escaped in r14). */
-  private def maxsimForwardBucketed(s: org.apache.spark.sql.SparkSession,
-      dir: String, big: Boolean = false): String =
-    (if (big) maxsimFwdBigCache else maxsimFwdCache).getOrElseUpdate(s, dir) {
-      writeForwardBuckets(
-        s.read.parquet(s"${maxsimIndex(s, dir, big)}/cells"),
-        if (big) "graft_msfwd_big" else "graft_msfwd", MsFwdBuckets)
-    }
-
-  /** Forward component of the DELTA segment, written beside the base with
-    * its OWN (smaller) modulus — the ivf_pq_append discipline applied to
-    * the forward table: ingest never rewrites base buckets. */
-  private val maxsimFwdDeltaCache = new SessionCache[String](_ => ())
-
-  private def maxsimForwardDelta(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimFwdDeltaCache.getOrElseUpdate(s, dir) {
-      writeForwardBuckets(
-        s.read.parquet(s"${maxsimDeltaCells(s, dir)}/cells"),
-        "graft_msfwd_delta", MsFwdDeltaBuckets)
-    }
-
-  /** Post-delete forward COMPACTION: a genuine merge of the two forward
-    * COMPONENT layouts (base ∪ delta bucket dirs, tombstones dropped),
-    * rewritten under one modulus — it never goes back to the cells, so
-    * compacting the forward costs one pass over the forward itself. */
-  private val maxsimFwdCompactCache = new SessionCache[String](_ => ())
-
-  private def maxsimForwardCompacted(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimFwdCompactCache.getOrElseUpdate(s, dir) {
-      val live = Layout.live(s,
-        Seq(maxsimForwardBucketed(s, dir, big = true), maxsimForwardDelta(s, dir))
-          .map(p => s"$p/forward"),
-        "doc_id", Some(maxsimTombstoned(s, dir)))
-      writeForwardBuckets(live, "graft_msfwd_compact", MsFwdBuckets)
-    }
-
-  /** Session-scoped DISK token-IVF index (train-once / serve-many, the
-    * kmeansIndex discipline): `cells/` = every corpus-token occurrence
-    * with its dims, PARTITIONED by the trained cluster — the persisted
-    * serve's stage-1 scan prunes to the probed cells' directories;
-    * `cents/` = the centroid table. The stage-2 forward fetch reads the
-    * index's own cells — or, for the bounded-at-scale variant, the
-    * doc_id-bucketed [[maxsimForwardBucketed]] component (round 14). */
-  private val maxsimIndexCache = new SessionCache[String](_ => ())
-  private val maxsimIndexBigCache = new SessionCache[String](_ => ())
-
-  /** `big` = the same layout over [[bigVocabDocs]] with the big quantizer:
-    * the lifecycle's base segment (see below). */
-  private[graft] def maxsimIndex(s: org.apache.spark.sql.SparkSession, dir: String,
-      big: Boolean = false): String =
-    (if (big) maxsimIndexBigCache else maxsimIndexCache).getOrElseUpdate(s, dir) {
-      val (assigned, cents) = if (big) maxsimIvfBig(s, dir) else maxsimIvf(s, dir)
-      val tmp = graft.engine.TempDirs.create(
-        if (big) "graft_msivf_big" else "graft_msivf")
-      writeMaxsimCells(corpusTokens(s, dir, big), assigned, s"$tmp/cells")
-      cents.write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$tmp/cents")
-      tmp
-    }
-
-  /** Token rows → their trained cell → one doc-ordered file per cell
-    * ([[graft.ops.Layout.writeCells]]), for the base and delta cells. */
-  private def writeMaxsimCells(tokens: org.apache.spark.sql.DataFrame,
-      assigned: org.apache.spark.sql.DataFrame, path: String): Unit =
-    Layout.writeCells(
-      tokens.join(assigned.select(col("tid"), col("cluster")), col("h") === col("tid"))
-        .select("cluster", "doc_id", "v0", "v1", "v2", "v3"),
-      "cluster", path, Seq(col("doc_id")))
+  private val maxsimIndexBig =
+    shared("maxsim_ivf_index_big")(writeMaxsimIndex(_, _, big = true))
 
   // ---- token-IVF index LIFECYCLE (round 13): append / delete / compact —
   // the same segment discipline the BM25 impact index and the IVF-PQ index
@@ -707,37 +654,29 @@ object SimilarityQ {
     * word were OUTSIDE the trained vocabulary would drop from stage 1 (no
     * cell to probe — the df = 0 analog) — this batch is source-salted
     * clones, so coverage is total. */
-  private val maxsimDeltaCache = new SessionCache[String](_ => ())
-
-  private[graft] def maxsimDeltaCells(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimDeltaCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_msivf_delta")
-      writeMaxsimCells(tokensOf(maxsimDeltaDocs(s, dir)), maxsimIvfBig(s, dir)._1,
-        s"$tmp/cells")
-      tmp
-    }
+  private[graft] val maxsimDeltaCells = shared("maxsim_ivf_delta") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_msivf_delta")
+    writeMaxsimCells(tokensOf(maxsimDeltaDocs(s, dir)), maxsimIvfBig(s, dir)._1,
+      s"$tmp/cells")
+    tmp
+  }
 
   /** Tombstones against the bigvocab base index (mod-4 base docs, the BM25
     * delete fixture's family): an O(|deletes|) doc_id table under the
     * index dir — postings untouched until compaction. Returns the index
     * path with `tombstones/` guaranteed present. */
-  private val maxsimTombCache = new SessionCache[String](_ => ())
-
-  private[graft] def maxsimTombstoned(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimTombCache.getOrElseUpdate(s, dir) {
-      val path = maxsimIndex(s, dir, big = true)
-      Layout.writeTombstones(Catalog.load(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 4), "doc_id", path)
-      path
-    }
+  private[graft] val maxsimTombstoned = shared("maxsim_ivf_tombstones") { (s, dir) =>
+    val path = maxsimIndexBig(s, dir)
+    Layout.writeTombstones(Catalog.load(s, dir, "documents")
+      .filter(col("doc_id") % 10 === 4), "doc_id", path)
+    path
+  }
 
   /** Live cells of the lifecycle: base ∪ delta, minus the base index's
     * tombstones when `deleted`. */
   private[graft] def maxsimLiveCells(s: org.apache.spark.sql.SparkSession,
       dir: String, deleted: Boolean) = {
-    val base = if (deleted) maxsimTombstoned(s, dir) else maxsimIndex(s, dir, big = true)
+    val base = if (deleted) maxsimTombstoned(s, dir) else maxsimIndexBig(s, dir)
     Layout.live(s, Seq(base, maxsimDeltaCells(s, dir)).map(p => s"$p/cells"),
       "doc_id", Option.when(deleted)(base))
   }
@@ -747,35 +686,50 @@ object SimilarityQ {
     * centroids — pure reorganization, so serving from it must BIT-equal
     * the tombstone-filtered union serve (the segment-split-invariance
     * discipline; both rows share one oracle). */
-  private val maxsimCompactCache = new SessionCache[String](_ => ())
+  private val maxsimLifecycleCompacted = shared("maxsim_ivf_compact") { (s, dir) =>
+    val base = maxsimTombstoned(s, dir)
+    val out = graft.engine.TempDirs.create("graft_msivf_compact")
+    Layout.writeCells(maxsimLiveCells(s, dir, deleted = true), "cluster",
+      s"$out/cells", Seq(col("doc_id")))
+    s.read.parquet(s"$base/cents").write.mode("overwrite")
+      .option("compression", "zstd").parquet(s"$out/cents")
+    out
+  }
 
-  private def maxsimLifecycleCompacted(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    maxsimCompactCache.getOrElseUpdate(s, dir) {
-      val base = maxsimTombstoned(s, dir)
-      val out = graft.engine.TempDirs.create("graft_msivf_compact")
-      Layout.writeCells(maxsimLiveCells(s, dir, deleted = true), "cluster",
-        s"$out/cells", Seq(col("doc_id")))
-      s.read.parquet(s"$base/cents").write.mode("overwrite")
-        .option("compression", "zstd").parquet(s"$out/cents")
-      out
-    }
+  /** `big` = the forward component of the BIGVOCAB base index — the
+    * lifecycle serves' base segment (round 15: the append/delete/compacted
+    * serves previously forward-read the cells union, correct but
+    * corpus-linear at serve time — the exact shape the base serve's fwd row
+    * escaped in r14). */
+  private val maxsimForwardBig = shared("maxsim_forward_big") { (s, dir) =>
+    writeForwardBuckets(s.read.parquet(s"${maxsimIndexBig(s, dir)}/cells"),
+      "graft_msfwd_big", MsFwdBuckets)
+  }
+
+  /** Forward component of the DELTA segment, written beside the base with
+    * its OWN (smaller) modulus — the ivf_pq_append discipline applied to
+    * the forward table: ingest never rewrites base buckets. */
+  private val maxsimForwardDelta = shared("maxsim_forward_delta") { (s, dir) =>
+    writeForwardBuckets(
+      s.read.parquet(s"${maxsimDeltaCells(s, dir)}/cells"),
+      "graft_msfwd_delta", MsFwdDeltaBuckets)
+  }
+
+  /** Post-delete forward COMPACTION: a genuine merge of the two forward
+    * COMPONENT layouts (base ∪ delta bucket dirs, tombstones dropped),
+    * rewritten under one modulus — it never goes back to the cells, so
+    * compacting the forward costs one pass over the forward itself. */
+  private val maxsimForwardCompacted = shared("maxsim_forward_compact") { (s, dir) =>
+    val live = Layout.live(s,
+      Seq(maxsimForwardBig(s, dir), maxsimForwardDelta(s, dir))
+        .map(p => s"$p/forward"),
+      "doc_id", Some(maxsimTombstoned(s, dir)))
+    writeForwardBuckets(live, "graft_msfwd_compact", MsFwdBuckets)
+  }
 
   /** Named builders for bench attribution (see SparkEntry.pipelines). */
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
-    Seq(
-      "maxsim_token_ivf" -> ((s, d) => { maxsimIvf(s, d); () }),
-      "maxsim_token_ivf_big" -> ((s, d) => { maxsimIvfBig(s, d); () }),
-      "maxsim_ivf_index" -> ((s, d) => { maxsimIndex(s, d); () }),
-      "maxsim_forward" -> ((s, d) => { maxsimForwardBucketed(s, d); () }),
-      "maxsim_ivf_index_big" -> ((s, d) => { maxsimIndex(s, d, big = true); () }),
-      "maxsim_ivf_delta" -> ((s, d) => { maxsimDeltaCells(s, d); () }),
-      "maxsim_ivf_tombstones" -> ((s, d) => { maxsimTombstoned(s, d); () }),
-      "maxsim_ivf_compact" -> ((s, d) => { maxsimLifecycleCompacted(s, d); () }),
-      "maxsim_forward_big" -> ((s, d) => { maxsimForwardBucketed(s, d, big = true); () }),
-      "maxsim_forward_delta" -> ((s, d) => { maxsimForwardDelta(s, d); () }),
-      "maxsim_forward_compact" -> ((s, d) => { maxsimForwardCompacted(s, d); () }))
-
+    shared.pipelines
   /** The ONE DuckDB oracle for both IVF MaxSim serves (in-session and
     * persisted must be bit-equal — the ann_ivf_kmeans(_persisted)
     * discipline): replays vocabulary build, fixed-point Lloyd, per-token
@@ -1276,7 +1230,7 @@ object SimilarityQ {
     // trained on the BASE vocabulary and the served stream = base ∪ delta.
     Q("retrieval_maxsim_ivf_append",
       (s, dir) => {
-        val base = maxsimIndex(s, dir, big = true)
+        val base = maxsimIndexBig(s, dir)
         val cells = maxsimLiveCells(s, dir, deleted = false)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
         val fwd = maxsimLiveCells(s, dir, deleted = false)
@@ -1331,10 +1285,10 @@ object SimilarityQ {
     // and the oracle — are bit-identical to the union-forward serve above.
     Q("retrieval_maxsim_ivf_append_fwd",
       (s, dir) => {
-        val base = maxsimIndex(s, dir, big = true)
+        val base = maxsimIndexBig(s, dir)
         val cells = maxsimLiveCells(s, dir, deleted = false)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = Seq(fwdPart(s, maxsimForwardBucketed(s, dir, big = true)),
+        val fwd = Seq(fwdPart(s, maxsimForwardBig(s, dir)),
           fwdPart(s, maxsimForwardDelta(s, dir)))
         maxsimServeParts(cells, s.read.parquet(s"$base/cents"), fwd,
           queryTokens(s, dir, big = true))
@@ -1353,7 +1307,7 @@ object SimilarityQ {
         val base = maxsimTombstoned(s, dir)
         val cells = maxsimLiveCells(s, dir, deleted = true)
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-        val fwd = Seq(fwdPart(s, maxsimForwardBucketed(s, dir, big = true)),
+        val fwd = Seq(fwdPart(s, maxsimForwardBig(s, dir)),
           fwdPart(s, maxsimForwardDelta(s, dir)))
         maxsimServeParts(cells, s.read.parquet(s"$base/cents"), fwd,
           queryTokens(s, dir, big = true),

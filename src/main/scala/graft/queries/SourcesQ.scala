@@ -12,60 +12,51 @@ import graft.ops.{Bucketing, Layout, Relational}
   * the original Parquet — so the round trip itself is what's checked. */
 object SourcesQ {
 
+  private val shared = new graft.ops.SharedBuilds
+
   /** Session-scoped custkey-bucketed layout serving `src_bucketed_join` —
     * rules (bucket count = parallelism, one file per bucket) live in
     * [[Bucketing.sessionLayout]]. */
-  private def custkeyLayout(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
+  private val custkeyLayout = shared("custkey_layout") { (s, dir) =>
     Bucketing.sessionLayout(s, dir, "custkey", Seq(
       ("graft_bkt_orders", "orders", "o_custkey"),
       ("graft_bkt_customer", "customer", "c_custkey")))
+  }
 
   /** Session-scoped Z-ordered lineitem layout serving `src_zorder_box`.
     * The layout rewrite (Morton sort + 8-file range partition of 600 k rows
     * at sf0.1) is a once-per-corpus reorganization, not query cost — same
     * attribution rule as `custkey_layout` (round-5 verdict precedent).
     * Returns the layout path; the serve query only READS it. */
-  private val zorderCache = new SessionCache[String](_ => ())
-
-  private def zorderLayout(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    zorderCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_zlayout") + "/lineitem_z"
-      // No int-narrowing on the dimensions: writeZOrdered quantizes via
-      // long min/max rank, and replicated key domains (ScaleSweep offsets
-      // keys by k·10⁹) overflow an INT cast under ANSI.
-      Layout.writeZOrdered(
-        Catalog.load(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-            "l_quantity"),
-        tmp, col("l_partkey"), col("l_suppkey"),
-        numFiles = 8)
-      tmp
-    }
+  private val zorderLayout = shared("zorder_layout") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_zlayout") + "/lineitem_z"
+    // No int-narrowing on the dimensions: writeZOrdered quantizes via
+    // long min/max rank, and replicated key domains (ScaleSweep offsets
+    // keys by k·10⁹) overflow an INT cast under ANSI.
+    Layout.writeZOrdered(
+      Catalog.load(s, dir, "lineitem")
+        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+          "l_quantity"),
+      tmp, col("l_partkey"), col("l_suppkey"),
+      numFiles = 8)
+    tmp
+  }
 
   /** Session-scoped XML export of orders serving `src_xml_roundtrip`'s read
     * side. The export is the once-per-corpus interchange WRITE; the tested
     * surface that stays in the query is the read half — schema inference,
     * XML unescaping, typed cast-back. */
-  private val xmlCache = new SessionCache[String](_ => ())
-
-  private def xmlExport(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    xmlCache.getOrElseUpdate(s, dir) {
-      val tmp = graft.engine.TempDirs.create("graft_xml") + "/x"
-      Catalog.load(s, dir, "orders")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .write.option("rowTag", "row").format("xml").save(tmp)
-      tmp
-    }
+  private val xmlExport = shared("xml_export") { (s, dir) =>
+    val tmp = graft.engine.TempDirs.create("graft_xml") + "/x"
+    Catalog.load(s, dir, "orders")
+      .select("o_orderkey", "o_orderpriority", "o_totalprice")
+      .write.option("rowTag", "row").format("xml").save(tmp)
+    tmp
+  }
 
   /** Named builders for bench attribution (see SparkEntry.pipelines). */
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
-    Seq(
-      "custkey_layout" -> ((s, d) => custkeyLayout(s, d)),
-      "zorder_layout" -> ((s, d) => { zorderLayout(s, d); () }),
-      "xml_export" -> ((s, d) => { xmlExport(s, d); () }))
+    shared.pipelines
 
   val all: Seq[Q] = Seq(
 

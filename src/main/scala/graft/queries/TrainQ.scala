@@ -16,38 +16,31 @@ object TrainQ {
   private val Iters = 3
   private val Dims = 64
 
+  private val shared = new graft.ops.SharedBuilds
+
   /** Session-scoped materialization of the Lloyd training run — the
     * `kmeans_assign` / `kmeans_centroids` / `ann_ivf_kmeans*` family
     * consumes the same trained model, so within one session it trains ONCE
-    * (same pattern as DedupQ's shared LSH pair pipeline; switching dirs
-    * evicts + unpersists, [[SessionCache]]). */
-  private val lloydCache =
-    new SessionCache[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      { case (a, c) => a.unpersist(); c.unpersist() })
-
-  private def trained(s: org.apache.spark.sql.SparkSession, dir: String) =
-    lloydCache.getOrElseUpdate(s, dir) {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val (a, c) = KMeans.lloyd(Catalog.load(s, dir, "embeddings"),
-        "vec_id", "embedding", K, Iters, Dims)
-      val ap = a.persist(MEMORY_AND_DISK); ap.count()
-      val cp = c.persist(MEMORY_AND_DISK); cp.count()
-      (ap, cp)
-    }
+    * (same pattern as DedupQ's shared LSH pair pipeline). */
+  private val trained = shared.persisted("lloyd_kmeans") { (s, dir) =>
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val (a, c) = KMeans.lloyd(Catalog.load(s, dir, "embeddings"),
+      "vec_id", "embedding", K, Iters, Dims)
+    val ap = a.persist(MEMORY_AND_DISK); ap.count()
+    val cp = c.persist(MEMORY_AND_DISK); cp.count()
+    (ap, cp)
+  }(ac => Seq(ac._1, ac._2))
 
   /** Session-scoped trained-quantizer IVF index on disk (train-once /
     * serve-many): the Lloyd outputs written as a partitioned cell layout +
     * centroid table ([[Similarity.writeKmeansIvfIndex]]). The serving query
     * (`ann_ivf_kmeans_persisted`) reads only this — it never pays training. */
-  private val ivfIndexCache = new SessionCache[String](_ => ())
-
-  private def kmeansIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfIndexCache.getOrElseUpdate(s, dir) {
-      val (assigned, cents) = trained(s, dir)
-      val tmp = graft.engine.TempDirs.create("graft_kivf")
-      Similarity.writeKmeansIvfIndex(assigned, cents, "vec_id", "embedding", tmp)
-      tmp
-    }
+  private val kmeansIndex = shared("kmeans_ivf_index") { (s, dir) =>
+    val (assigned, cents) = trained(s, dir)
+    val tmp = graft.engine.TempDirs.create("graft_kivf")
+    Similarity.writeKmeansIvfIndex(assigned, cents, "vec_id", "embedding", tmp)
+    tmp
+  }
 
   /** Bench hook: the persisted k-means IVF serve at an arbitrary probe
     * modulus — the probe-axis sweep's entry (|Q| = |vectors| / mod at
@@ -154,96 +147,12 @@ object TrainQ {
        |  list_transform(range(1, ${Dims + 1}), d -> $promCoordDuck) AS embedding
        |  FROM embeddings)""".stripMargin
 
-  /** Session-scoped persisted PROMOTED index — the join-path build
-    * ([[graft.ops.AnnSweep.lloydJoin]]/[[graft.ops.AnnSweep.trainBooksJoin]],
-    * the large-codebook trainers the sweep validated against the literal
-    * path) written to disk once, served many. */
-  private val promotedIndexCache = new SessionCache[String](_ => ())
-
-  private def promotedIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    promotedIndexCache.getOrElseUpdate(s, dir) {
-      import graft.ops.AnnSweep
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val corpus = promotedCorpus(s, dir)
-        .persist(MEMORY_AND_DISK)
-      val (assigned0, cents) = AnnSweep.lloydJoin(
-        corpus, "vec_id", "embedding", PromKc, PromIters, Dims)
-      // The assignment feeds THREE evaluations downstream (encodeJoin
-      // references it twice — the subvector explode and the cluster
-      // re-attach — and the cents write re-derives the centroid means
-      // from it); unpersisted, each re-ran the full coarse-assign pass
-      // over the corpus (round 17). n rows × (64-dim vector + cluster)
-      // — megabytes, not corpus-scale.
-      val assigned = assigned0
-        .persist(MEMORY_AND_DISK)
-      assigned.count()
-      val books = AnnSweep.trainBooksJoin(
-        corpus, "vec_id", "embedding", PromM, PromKcode, PromIters, Dims)
-      val enc = AnnSweep.encodeJoin(assigned, "vec_id", "embedding",
-        books, PromM, PromSub)
-      val tmp = graft.engine.TempDirs.create("graft_ivfpq_prom")
-      AnnSweep.writeIndexJoin(enc, cents, books, tmp)
-      assigned.unpersist()
-      books.unpersist()
-      corpus.unpersist()
-      tmp
-    }
-
-  /** Session-scoped PROMOTED delta cells (round 14): the append path at the
-    * promoted operating point — the r13 verdict's gap was that maintenance
-    * only had lifecycle coverage at the cost-floor config (recall@10
-    * ~0.08), so "maintenance preserves recall" was never pinned where
-    * recall actually lives. The batch (re-identified mod-3 clones, the
-    * ivfPqDelta discipline and id namespace) is assigned with the PERSISTED
-    * promoted centroids and encoded with the PERSISTED promoted codebooks
-    * on the JOIN path — at m=16 × 256 codes the books stay DATA (broadcast
-    * joins), never driver literals. No retraining, base cells untouched. */
-  private val promDeltaCache = new SessionCache[String](_ => ())
-
-  private def promotedDelta(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    promDeltaCache.getOrElseUpdate(s, dir) {
-      import graft.ops.AnnSweep
-      val base = promotedIndex(s, dir)
-      val cents = s.read.parquet(s"$base/cents")
-      val books = s.read.parquet(s"$base/books")
-      val batch = promotedCorpus(s, dir)
-        .filter(col("vec_id") % 10 === 3)
-        .select((col("vec_id") + 1000000000000000L).as("vec_id"),
-          col("embedding"))
-      val assigned = AnnSweep.assignJoin(batch, "vec_id", "embedding", cents)
-      val enc = AnnSweep.encodeJoin(assigned, "vec_id", "embedding", books,
-        PromM, PromSub)
-      val delta = graft.engine.TempDirs.create("graft_ivfpq_prom_delta") + "/cells"
-      Layout.writeCells(enc, "cluster", delta, Seq(col("vec_id")))
-      delta
-    }
-
-  /** Tombstones against the PROMOTED index — same O(|deletes|) id-table
-    * semantics as [[ivfPqTombstoned]]: ADC distances are per-vector, so
-    * serve-time filtering IS the complete delete; centroids and 16
-    * codebooks stay as-built. */
-  private val promTombCache = new SessionCache[String](_ => ())
-
-  private def promotedTombstoned(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    promTombCache.getOrElseUpdate(s, dir) {
-      val base = promotedIndex(s, dir)
-      Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 10 === 6), "vec_id", base)
-      base
-    }
-
   /** Session-scoped PQ codebooks — trained once, consumed by the encode and
     * ADC-search queries (O(k·dims) driver scalars, the centroid budget). */
-  private val pqCache =
-    new SessionCache[Seq[Seq[(Int, Seq[Double])]]](_ => ())
-
-  private def pqBooks(s: org.apache.spark.sql.SparkSession, dir: String) =
-    pqCache.getOrElseUpdate(s, dir) {
-      PQ.train(Catalog.load(s, dir, "embeddings"), "vec_id", "embedding",
-        PqM, PqK, PqIters, Dims)
-    }
+  private val pqBooks = shared("pq_codebooks") { (s, dir) =>
+    PQ.train(Catalog.load(s, dir, "embeddings"), "vec_id", "embedding",
+      PqM, PqK, PqIters, Dims)
+  }
 
   /** Oracle fragments shared by the PQ search rows: per-subspace query
     * lookup-table CTEs over `q(q_vec, embedding)` and the code-matched
@@ -262,23 +171,17 @@ object TrainQ {
   private def pqAdistSql: String =
     (0 until PqM).map(j => s"t$j.dd").mkString(" + ")
 
-  /** Named shared-pipeline builders for explicit bench attribution (see
-    * [[DedupQ.pipelines]]). Order matters: the index build consumes the
-    * trained model. */
   /** Session-scoped persisted IVF-PQ index (cells = codes only, partitioned
     * by the coarse cluster; codebooks + centroids beside them). Serving
     * (`ann_ivf_pq_persisted`) reads ONLY this — never training, never a raw
     * vector. */
-  private val ivfPqIndexCache = new SessionCache[String](_ => ())
-
-  private def ivfPqIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfPqIndexCache.getOrElseUpdate(s, dir) {
-      val (assigned, cents) = trained(s, dir)
-      val tmp = graft.engine.TempDirs.create("graft_ivfpq")
-      PQ.writeIvfPqIndex(assigned, cents, pqBooks(s, dir),
-        "vec_id", "embedding", Dims, tmp)
-      tmp
-    }
+  private val ivfPqIndex = shared("ivf_pq_index") { (s, dir) =>
+    val (assigned, cents) = trained(s, dir)
+    val tmp = graft.engine.TempDirs.create("graft_ivfpq")
+    PQ.writeIvfPqIndex(assigned, cents, pqBooks(s, dir),
+      "vec_id", "embedding", Dims, tmp)
+    tmp
+  }
 
   /** Per-cell residual vectors (vec − assigned coarse centroid), DOUBLE
     * arrays: the one IEEE subtraction per coordinate is identical in both
@@ -298,41 +201,34 @@ object TrainQ {
     * (Jégou et al. 2011 §IV): quantize what the coarse cell doesn't explain
     * instead of the raw vector, so the codebook's 8 codes model the
     * within-cell spread. Plan shape identical to [[pqBooks]]. */
-  private val pqResidCache =
-    new SessionCache[Seq[Seq[(Int, Seq[Double])]]](_ => ())
-
-  private def pqResidBooks(s: org.apache.spark.sql.SparkSession, dir: String) =
-    pqResidCache.getOrElseUpdate(s, dir) {
-      PQ.train(residuals(s, dir), "vec_id", "res", PqM, PqK, PqIters, Dims)
-    }
+  private val pqResidBooks = shared("pq_resid_codebooks") { (s, dir) =>
+    PQ.train(residuals(s, dir), "vec_id", "res", PqM, PqK, PqIters, Dims)
+  }
 
   /** Session-scoped DELTA cells — the append-only index-maintenance path:
     * a "daily batch" (re-identified clones of 10% of the corpus) is
     * assigned to cells with the PERSISTED coarse centroids and encoded with
     * the PERSISTED codebooks — no retraining, nothing rewritten; the delta
     * lands as its own cells directory beside the base index. */
-  private val ivfPqDeltaCache = new SessionCache[String](_ => ())
-
-  private def ivfPqDelta(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfPqDeltaCache.getOrElseUpdate(s, dir) {
-      val base = ivfPqIndex(s, dir)
-      val books = PQ.readBooks(s, base)
-      val centSeq = KMeans.collectCents(
-        s.read.parquet(s"$base/cents").select(col("cluster"), col("cent")))
-      // Clone-id offset lives in a dedicated high namespace (10^15), OUTSIDE
-      // the ScaleSweep replica bands: replicas stride key domains by k·10^9,
-      // so a +10^9 delta offset would alias replica band k+1's genuine ids
-      // exactly (round-8 advice). 10^15 stays clear of any realistic band
-      // (factor < 10^6) and, being ≡ 0 (mod 10), preserves the %10 == 3
-      // batch-filter alignment the oracle replays.
-      val batch = Catalog.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 10 === 3)
-        .select((col("vec_id") + 1000000000000000L).as("vec_id"), col("embedding"))
-      val delta = graft.engine.TempDirs.create("graft_ivfpq_delta") + "/cells"
-      PQ.writeCells(KMeans.assign(batch, "vec_id", "embedding", centSeq),
-        books, "vec_id", "embedding", Dims, delta)
-      delta
-    }
+  private val ivfPqDelta = shared("ivf_pq_delta") { (s, dir) =>
+    val base = ivfPqIndex(s, dir)
+    val books = PQ.readBooks(s, base)
+    val centSeq = KMeans.collectCents(
+      s.read.parquet(s"$base/cents").select(col("cluster"), col("cent")))
+    // Clone-id offset lives in a dedicated high namespace (10^15), OUTSIDE
+    // the ScaleSweep replica bands: replicas stride key domains by k·10^9,
+    // so a +10^9 delta offset would alias replica band k+1's genuine ids
+    // exactly (round-8 advice). 10^15 stays clear of any realistic band
+    // (factor < 10^6) and, being ≡ 0 (mod 10), preserves the %10 == 3
+    // batch-filter alignment the oracle replays.
+    val batch = Catalog.load(s, dir, "embeddings")
+      .filter(col("vec_id") % 10 === 3)
+      .select((col("vec_id") + 1000000000000000L).as("vec_id"), col("embedding"))
+    val delta = graft.engine.TempDirs.create("graft_ivfpq_delta") + "/cells"
+    PQ.writeCells(KMeans.assign(batch, "vec_id", "embedding", centSeq),
+      books, "vec_id", "embedding", Dims, delta)
+    delta
+  }
 
   /** Session-scoped COMPACTION of the appended index: base ∪ delta cells
     * rewritten as one cells table, one file per cell
@@ -340,15 +236,12 @@ object TrainQ {
     * maintenance an append-cadence index needs. Pure reorganization:
     * serving from it must equal serving from the union, which the shared
     * oracle pins. */
-  private val ivfPqCompactCache = new SessionCache[String](_ => ())
-
-  private def ivfPqCompacted(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfPqCompactCache.getOrElseUpdate(s, dir) {
-      val out = graft.engine.TempDirs.create("graft_ivfpq_compact") + "/cells"
-      Layout.writeCells(pqLive(s, ivfPqIndex(s, dir), ivfPqDelta(s, dir),
-        deleted = false), "cluster", out, Seq(col("vec_id")))
-      out
-    }
+  private val ivfPqCompacted = shared("ivf_pq_compact") { (s, dir) =>
+    val out = graft.engine.TempDirs.create("graft_ivfpq_compact") + "/cells"
+    Layout.writeCells(pqLive(s, ivfPqIndex(s, dir), ivfPqDelta(s, dir),
+      deleted = false), "cluster", out, Seq(col("vec_id")))
+    out
+  }
 
   /** Tombstones against the IVF-PQ index (round 13, the bm25/maxsim delete
     * discipline): the mod-6 base vectors' id table under the index dir —
@@ -356,16 +249,81 @@ object TrainQ {
     * Unlike the lexical index there are no global statistics to go stale:
     * ADC distances are per-vector, so serve-time filtering IS the complete
     * delete semantics and compaction is only a space/layout concern. */
-  private val ivfPqTombCache = new SessionCache[String](_ => ())
+  private val ivfPqTombstoned = shared("ivf_pq_tombstones") { (s, dir) =>
+    val base = ivfPqIndex(s, dir)
+    Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
+      .filter(col("vec_id") % 10 === 6), "vec_id", base)
+    base
+  }
 
-  private def ivfPqTombstoned(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    ivfPqTombCache.getOrElseUpdate(s, dir) {
-      val base = ivfPqIndex(s, dir)
-      Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 10 === 6), "vec_id", base)
-      base
-    }
+  /** Session-scoped persisted PROMOTED index — the join-path build
+    * ([[graft.ops.AnnSweep.lloydJoin]]/[[graft.ops.AnnSweep.trainBooksJoin]],
+    * the large-codebook trainers the sweep validated against the literal
+    * path) written to disk once, served many. */
+  private val promotedIndex = shared("ivf_pq_promoted") { (s, dir) =>
+    import graft.ops.AnnSweep
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val corpus = promotedCorpus(s, dir)
+      .persist(MEMORY_AND_DISK)
+    val (assigned0, cents) = AnnSweep.lloydJoin(
+      corpus, "vec_id", "embedding", PromKc, PromIters, Dims)
+    // The assignment feeds THREE evaluations downstream (encodeJoin
+    // references it twice — the subvector explode and the cluster
+    // re-attach — and the cents write re-derives the centroid means
+    // from it); unpersisted, each re-ran the full coarse-assign pass
+    // over the corpus (round 17). n rows × (64-dim vector + cluster)
+    // — megabytes, not corpus-scale.
+    val assigned = assigned0
+      .persist(MEMORY_AND_DISK)
+    assigned.count()
+    val books = AnnSweep.trainBooksJoin(
+      corpus, "vec_id", "embedding", PromM, PromKcode, PromIters, Dims)
+    val enc = AnnSweep.encodeJoin(assigned, "vec_id", "embedding",
+      books, PromM, PromSub)
+    val tmp = graft.engine.TempDirs.create("graft_ivfpq_prom")
+    AnnSweep.writeIndexJoin(enc, cents, books, tmp)
+    assigned.unpersist()
+    books.unpersist()
+    corpus.unpersist()
+    tmp
+  }
+
+  /** Session-scoped PROMOTED delta cells (round 14): the append path at the
+    * promoted operating point — the r13 verdict's gap was that maintenance
+    * only had lifecycle coverage at the cost-floor config (recall@10
+    * ~0.08), so "maintenance preserves recall" was never pinned where
+    * recall actually lives. The batch (re-identified mod-3 clones, the
+    * ivfPqDelta discipline and id namespace) is assigned with the PERSISTED
+    * promoted centroids and encoded with the PERSISTED promoted codebooks
+    * on the JOIN path — at m=16 × 256 codes the books stay DATA (broadcast
+    * joins), never driver literals. No retraining, base cells untouched. */
+  private val promotedDelta = shared("ivf_pq_promoted_delta") { (s, dir) =>
+    import graft.ops.AnnSweep
+    val base = promotedIndex(s, dir)
+    val cents = s.read.parquet(s"$base/cents")
+    val books = s.read.parquet(s"$base/books")
+    val batch = promotedCorpus(s, dir)
+      .filter(col("vec_id") % 10 === 3)
+      .select((col("vec_id") + 1000000000000000L).as("vec_id"),
+        col("embedding"))
+    val assigned = AnnSweep.assignJoin(batch, "vec_id", "embedding", cents)
+    val enc = AnnSweep.encodeJoin(assigned, "vec_id", "embedding", books,
+      PromM, PromSub)
+    val delta = graft.engine.TempDirs.create("graft_ivfpq_prom_delta") + "/cells"
+    Layout.writeCells(enc, "cluster", delta, Seq(col("vec_id")))
+    delta
+  }
+
+  /** Tombstones against the PROMOTED index — same O(|deletes|) id-table
+    * semantics as [[ivfPqTombstoned]]: ADC distances are per-vector, so
+    * serve-time filtering IS the complete delete; centroids and 16
+    * codebooks stay as-built. */
+  private val promotedTombstoned = shared("ivf_pq_promoted_tombstones") { (s, dir) =>
+    val base = promotedIndex(s, dir)
+    Layout.writeTombstones(Catalog.load(s, dir, "embeddings")
+      .filter(col("vec_id") % 10 === 6), "vec_id", base)
+    base
+  }
 
   /** Live cells of an IVF-PQ index at `base` with its `delta` cells,
     * minus the base's tombstones when `deleted`. */
@@ -373,19 +331,11 @@ object TrainQ {
       delta: String, deleted: Boolean) =
     Layout.live(s, Seq(s"$base/cells", delta), "vec_id", Option.when(deleted)(base))
 
+  /** Named shared builds for explicit bench attribution (see
+    * [[DedupQ.pipelines]]). Order matters: the index builds consume the
+    * trained model. */
   def pipelines: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
-    Seq(
-      "lloyd_kmeans" -> ((s, d) => { trained(s, d); () }),
-      "kmeans_ivf_index" -> ((s, d) => { kmeansIndex(s, d); () }),
-      "pq_codebooks" -> ((s, d) => { pqBooks(s, d); () }),
-      "ivf_pq_index" -> ((s, d) => { ivfPqIndex(s, d); () }),
-      "pq_resid_codebooks" -> ((s, d) => { pqResidBooks(s, d); () }),
-      "ivf_pq_delta" -> ((s, d) => { ivfPqDelta(s, d); () }),
-      "ivf_pq_compact" -> ((s, d) => { ivfPqCompacted(s, d); () }),
-      "ivf_pq_tombstones" -> ((s, d) => { ivfPqTombstoned(s, d); () }),
-      "ivf_pq_promoted" -> ((s, d) => { promotedIndex(s, d); () }),
-      "ivf_pq_promoted_delta" -> ((s, d) => { promotedDelta(s, d); () }),
-      "ivf_pq_promoted_tombstones" -> ((s, d) => { promotedTombstoned(s, d); () }))
+    shared.pipelines
 
   /** Shared oracle for both IVF-PQ paths (in-session and persisted) —
     * bucketed serving must return exactly what the in-session path does. */

@@ -248,6 +248,20 @@ class PlanGateSpec extends AnyFunSuite {
     }
   }
 
+  test("the COMMITTED baseline has one time-gate row per shared build, " +
+      "and every shared build has a unique pipeline name") {
+    // A renamed or duplicated build would silently drop its
+    // `pipeline:<name>` time-gate row instead of failing here.
+    val names = SparkEntry.pipelines.map(_._1)
+    assert(names.distinct === names, names.diff(names.distinct))
+    val rows = PlanGate.parseBaseline(java.nio.file.Files.readString(
+        java.nio.file.Paths.get("PLAN_BASELINE.json")))
+      .keySet.collect { case k if k.startsWith("pipeline:") => k.stripPrefix("pipeline:") }
+    assert(rows.size === 41)
+    assert(names.toSet === rows,
+      s"no baseline row: ${names.toSet -- rows}; no build: ${rows -- names}")
+  }
+
   test("epoch carry on re-author: elevated rows keep the clean median, " +
       "in-family rows auto-restore, carried epochs propagate") {
     val prev = Map(

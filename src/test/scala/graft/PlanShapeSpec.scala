@@ -448,11 +448,11 @@ class PlanShapeSpec extends SparkSpec with SlowSuite {
     // A second caller reusing a layout name with different sort columns
     // previously hit the (session, dir)-keyed cache and silently served
     // the FIRST layout's sort order (ADVICE r7). The spec is pinned per
-    // name now; same-spec re-registration stays an idempotent no-op.
+    // name now; same-spec re-registration is accepted.
     val tables = Seq(("graft_bkt_pin_o", "orders", "o_orderkey"))
     graft.ops.Bucketing.sessionLayout(spark, dir, "pin_layout", tables,
       Map("graft_bkt_pin_o" -> Seq("o_orderkey")))
-    // identical spec: no-op
+    // identical spec: accepted
     graft.ops.Bucketing.sessionLayout(spark, dir, "pin_layout", tables,
       Map("graft_bkt_pin_o" -> Seq("o_orderkey")))
     val e = intercept[IllegalArgumentException] {
