@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, PlanGate, PlanNodes, ScanMetrics}
+import graft.ops.AnnSweep.overlap
 
 /** The bench gates: per-row warm medians and plan fingerprints against the
   * committed baseline (`PLAN_BASELINE.json`, rules in [[PlanGate]]), the
@@ -79,8 +80,6 @@ object Bench {
         None
     }
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
-    def overlap[T](truth: Set[T], got: Set[T]): Double =
-      if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
     def pairs(name: String, a: String, b: String): Set[(Long, Long)] =
       selected(name)(spark, sfDir).select(a, b).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, PlanGate}
+import graft.ops.AnnSweep.overlap
 import graft.queries.{CorpusQ, SimilarityQ, TrainQ}
 
 /** 10×/1× scaling sweep (dev harness, like [[StressBench]]): materialize a
@@ -340,8 +341,6 @@ object ScaleSweep {
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("q_doc", "doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def overlap(truth: Set[(Long, Long)], got: Set[(Long, Long)]): Double =
-      if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
     // Exact MaxSim answer sets at 1× (the exact serves are not swept):
     // retrieval_maxsim_topk, and on the bigvocab fixture the full-probe
     // serve (every cell admitted, unbounded T — provably the exact MaxSim

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.engine.Catalog
 import graft.ops.Dedup
@@ -108,19 +108,14 @@ object StressBench {
     println(s"[stress] batch dup_of_history=${incr.getLong(0)} kept=${incr.getLong(1)}")
 
     // ---- streaming dedup: default state store vs RocksDB ----------------
-    val dedupRuns = Iterator.from(0)
-    def dedupRun(): Long = {
-      val ev = graft.streaming.Streams.eventStream(spark, sfDir)
-      val deduped = ev
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .agg(count(lit(1)).as("n"))
-      val name = s"stress_dedup_${dedupRuns.next()}"
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).head.getLong(0)
-    }
+    // Both sides drain at Streams.StatePartitions state stores.
+    def dedupRun(): Long =
+      Streams.drain(spark, OutputMode.Complete) { s =>
+        Streams.eventStream(s, sfDir)
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id")
+          .agg(count(lit(1)).as("n"))
+      }.head.getLong(0)
     val (nHdfs, tHdfs) = timed("streaming dedup by event_id, default store")(dedupRun())
     val (nRocks, tRocks) = timed("streaming dedup by event_id, RocksDB store") {
       Streams.withRocksDBStateStore(spark)(dedupRun())

@@ -378,6 +378,11 @@ object AnnSweep {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  /** Share of `truth` that `got` holds (recall@k against [[truthPairs]], or
+    * any answer-set overlap); 0 for an empty truth. */
+  def overlap[T](truth: Set[T], got: Set[T]): Double =
+    if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
+
   /** Maintenance-quality measurement for one operating point. */
   final case class AppendRecall(
       name: String, appended: Double, retrained: Double,
@@ -427,7 +432,7 @@ object AnnSweep {
           p.m, sub, p.nprobe, kTop)
         .select("q_vec", "neighbor").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
+      overlap(truth, got)
     }
     // Maintenance path: frozen base models, delta encoded without retrain.
     val (encBase, cents, books) = build(bp)
@@ -488,8 +493,7 @@ object AnnSweep {
         .select("q_vec", "neighbor").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val serveS = (System.nanoTime() - t2) / 1e9
-      val recall =
-        if (truth.isEmpty) 0.0 else truth.count(got).toDouble / truth.size
+      val recall = overlap(truth, got)
       enc.unpersist(); books.unpersist()
       SweepResult(p.name, recall, buildS, serveS)
     }

@@ -22,12 +22,6 @@ object CorpusQ {
   private def bm25Term(tf: String, df: String): String =
     Corpus.bm25Term(tf, df)
 
-  /** k-round sequential BPE-training oracle: one (pairs → argmax →
-    * contract) CTE stage per merge, replayed exactly as
-    * [[graft.ops.Corpus.bpeTrainMerges]] computes it — the staged-CTE
-    * discipline the Lloyd/PQ oracles use for iterative training. Each
-    * contraction is the exact leftmost-greedy fold ([[contractDuck]],
-    * mirroring [[graft.ops.Corpus.contract]]). */
   /** Session-scoped trained BPE model (k=8): the merge list + the
     * persisted final vocabulary state, built ONCE per (session, dir) and
     * fanned out to the train/encode/tokenize rows — the Lloyd-pipeline
@@ -359,6 +353,12 @@ object CorpusQ {
       s"(acc, t) -> CASE WHEN t = $b AND ends_with(acc, ' ' || $a) " +
       s"THEN acc || t ELSE acc || ' ' || t END) || ' '"
 
+  /** k-round sequential BPE-training oracle: one (pairs → argmax →
+    * contract) CTE stage per merge, replayed exactly as
+    * [[graft.ops.Corpus.bpeTrainMerges]] computes it — the staged-CTE
+    * discipline the Lloyd/PQ oracles use for iterative training. Each
+    * contraction is the exact leftmost-greedy fold ([[contractDuck]],
+    * mirroring [[graft.ops.Corpus.contract]]). */
   private def bpeTrainOracle(k: Int): String = {
     val stages = (1 to k).map { i =>
       val prev = s"e${i - 1}"

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.engine.Catalog
@@ -13,6 +12,18 @@ import graft.engine.Catalog
   * no streaming surface at all (SURVEY.md §2.8); this is north-star
   * territory: event-time windows + watermarks, and custom session state via
   * `flatMapGroupsWithState`.
+  *
+  * Two shapes, one helper each:
+  *   - a DRAINED query (`tumblingAgg`, `staticEnrichAgg`, `dedupStream`,
+  *     `purchaseClickJoin`, `anomalyStream`) runs its stream to completion
+  *     through [[drain]] and returns the rows as a local frame: it is built
+  *     and run on a clone of the caller's session, so the caller's session
+  *     keeps its conf, gains no temp view and holds no query;
+  *   - a SINK (`foreachBatchParquetSink`, `quarantineSink`,
+  *     `incrementalDedupSink`, `mvRefreshSink`, `mvRefreshSinkPartitioned`,
+  *     `annServeSink`) starts the caller's stream through [[microBatches]]
+  *     and returns the running `StreamingQuery`; each micro-batch writes an
+  *     idempotent `batch=<id>` directory.
   *
   * Scale notes: the tumbling aggregation is partial-aggregated per
   * microbatch and keyed-state-backed; the watermark bounds state. Sessions
@@ -28,41 +39,65 @@ object Streams {
   /** 30-minute session gap, in microseconds. */
   val SessionGapUs: Long = 30L * 60 * 1000 * 1000
 
-  private val sinkId = new AtomicInteger(0)
-
-  /** Stateful streaming queries pin their state-store count to the shuffle
-    * partition number at first batch — and every store adds per-batch
-    * checkpoint/commit overhead. State partitioning should track KEY
-    * cardinality, not core count; bound it while starting the query.
-    * (Halves wall time for the bench-scale streams: 32 stores → 8.) */
+  /** Shuffle partitions, and so state stores, of every drained query (see
+    * [[drain]]). */
   val StatePartitions = 8
 
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
-    try body finally spark.conf.set(key, old)
+  /** Run the stream `build` makes on `spark` to completion and return its
+    * rows as a local frame on `spark`.
+    *
+    * The stream is built and started on a clone of `spark`; only the clone's
+    * conf changes:
+    *   - `spark.sql.shuffle.partitions` = [[StatePartitions]]. A stateful
+    *     query pins its state-store count to the shuffle partition number at
+    *     its first batch, and every store adds per-batch checkpoint/commit
+    *     overhead, so state partitioning follows KEY cardinality, not core
+    *     count (halves wall time for the bench-scale streams: 32 stores → 8).
+    *   - with `skipNoDataBatch`, no trailing NO-DATA micro-batch. After the
+    *     data batch drains, Spark runs one more empty batch to advance the
+    *     watermark: it EMITS watermark-gated results (left-outer null rows,
+    *     append-mode final windows, event-time timers), evicts state, and
+    *     re-commits every state store instance (measured: 1.4–1.6 s of a
+    *     3.6 s stream-stream-join row, 32 instances × 2 batches). For an
+    *     INNER stream-stream join (matches emit eagerly in the data batch)
+    *     and for a Complete-mode aggregate (each batch re-emits the full
+    *     result) the empty batch only evicts state the one-shot query
+    *     discards, so results are bit-identical (the rows' DuckDB oracles
+    *     gate it). Queries whose results NEED that batch (left-outer
+    *     emission, sessionization timers, append-mode windows) keep it.
+    *
+    * Both confs are latched when `start()` runs: the query copies its
+    * session's conf into a session of its own. The query drains with
+    * `Trigger.AvailableNow` into a memory sink, whose rows already sit on
+    * the driver; collecting them is a `LocalTableScan` that runs no job. The
+    * caller's session ends as it started: no conf set, no temp view, no
+    * active query. Any other conf the caller set (a state-store provider,
+    * say) reaches the clone and so the query. */
+  private[graft] def drain(
+      spark: SparkSession, mode: OutputMode, skipNoDataBatch: Boolean = false)(
+      build: SparkSession => DataFrame): DataFrame = {
+    val s = Bridge.cloneSession(spark)
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    if (skipNoDataBatch)
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    build(s).writeStream.format("memory").queryName("graft_drain")
+      .outputMode(mode).trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val sink = s.table("graft_drain")
+    spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
   }
 
-  /** Skip the trailing NO-DATA micro-batch for queries whose RESULT cannot
-    * depend on it (round 15, the per-row trigger-cost item): after the data
-    * batch drains, Spark runs one more empty batch to advance the watermark
-    * — it exists to EMIT watermark-gated results (left-outer null rows,
-    * append-mode final windows, event-time timers) and to evict state, and
-    * it re-commits every state store instance (measured: 1.4–1.6 s of a
-    * 3.6 s stream-stream-join row, 32 instances × 2 batches). For an INNER
-    * stream-stream join (matches emit eagerly in the data batch) and for
-    * Complete-mode aggregates (each batch re-emits the full result), the
-    * empty batch only evicts state that the one-shot query discards anyway
-    * — results are bit-identical (parity-measured, and the rows' DuckDB
-    * oracles gate it every round). Rows whose semantics NEED the final
-    * batch (left-outer emission, sessionization timers, append-mode
-    * windows) must NOT use this. */
-  private def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, old)
+  /** Start `stream` with `perBatch` run on every micro-batch and its id,
+    * drained with `Trigger.AvailableNow`. An explicit checkpoint makes the
+    * sink resumable: a restarted query continues from the recorded source
+    * offsets (only NEW files process) and a replayed batch rewrites its own
+    * batch=<id> dir. Without one, Spark uses a temp checkpoint — fine for
+    * drain-once conformance runs. */
+  private def microBatches(stream: DataFrame, checkpoint: Option[String])(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = stream.writeStream
+      .foreachBatch((batch: Dataset[Row], id: Long) => perBatch(batch.toDF(), id))
+      .trigger(Trigger.AvailableNow())
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
   /** Run `body` (which should start+drain a streaming query) with the
@@ -111,25 +146,16 @@ object Streams {
     * `Trigger.AvailableNow` (batch-on-stream). Complete output mode so every
     * window is visible to the conformance check. Sum is DECIMAL-exact
     * (order-independent across microbatches). */
-  def tumblingAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventStream(spark, sfDir)
-
-    val agg = ev
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_val"))
-      .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("sum_val"))
-
-    val name = s"graft_tumbling_${sinkId.incrementAndGet()}"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("ws", "event_type")
-  }
+  def tumblingAgg(spark: SparkSession, sfDir: String): DataFrame =
+    drain(spark, OutputMode.Complete) { s =>
+      eventStream(s, sfDir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(
+          count(lit(1)).as("cnt"),
+          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_val"))
+        .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("sum_val"))
+    }.orderBy("ws", "event_type")
 
   /** Stream-static enrichment: the event stream joins a broadcast static
     * dimension (customer segment by user id) BEFORE the windowed aggregate —
@@ -138,54 +164,35 @@ object Streams {
     * state, unlike stream-stream joins); watermarked tumbling windows bound
     * the aggregation state. Left join + COALESCE keeps unmatched users
     * (an inner join would silently drop late dimension rows at 100 TB). */
-  def staticEnrichAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventStream(spark, sfDir)
-    val dim = Catalog.load(spark, sfDir, "customer")
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-
-    val agg = ev
-      .withWatermark("ts", "1 hour")
-      .join(broadcast(dim), Seq("user_id"), "left")
-      .groupBy(window(col("ts"), "1 hour"),
-        coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_val"))
-      .select(col("window.start").as("ws"), col("segment"), col("cnt"), col("sum_val"))
-
-    val name = s"graft_enrich_${sinkId.incrementAndGet()}"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("ws", "segment")
-  }
+  def staticEnrichAgg(spark: SparkSession, sfDir: String): DataFrame =
+    drain(spark, OutputMode.Complete) { s =>
+      val dim = Catalog.load(s, sfDir, "customer")
+        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
+      eventStream(s, sfDir)
+        .withWatermark("ts", "1 hour")
+        .join(broadcast(dim), Seq("user_id"), "left")
+        .groupBy(window(col("ts"), "1 hour"),
+          coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
+        .agg(
+          count(lit(1)).as("cnt"),
+          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_val"))
+        .select(col("window.start").as("ws"), col("segment"), col("cnt"), col("sum_val"))
+    }.orderBy("ws", "segment")
 
   /** Streaming dedup: at-most-one event per (user, type, hour), state bounded
     * by the watermark (`dropDuplicatesWithinWatermark` evicts keys once the
     * watermark passes them — the 100 TB-safe form of streaming distinct).
     * Emits per-type distinct counts so the result is order-insensitive. */
-  def dedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventStream(spark, sfDir)
-
-    val deduped = ev
-      .withColumn("hour", date_trunc("hour", col("ts")))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "hour")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-
-    val name = s"graft_dedup_${sinkId.incrementAndGet()}"
-    // Complete-mode aggregate: every batch re-emits the full result, so the
-    // no-data batch only evicts dedup state the one-shot query discards.
-    withStatePartitions(spark) { withoutNoDataBatch(spark) {
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } }
-    spark.table(name).orderBy("event_type")
-  }
+  def dedupStream(spark: SparkSession, sfDir: String): DataFrame =
+    // Complete-mode aggregate: the no-data batch may be skipped (see drain).
+    drain(spark, OutputMode.Complete, skipNoDataBatch = true) { s =>
+      eventStream(s, sfDir)
+        .withColumn("hour", date_trunc("hour", col("ts")))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "hour")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+    }.orderBy("event_type")
 
   /** Stream-stream inner join: each purchase matched to the same user's
     * clicks within the preceding 30 minutes. Both sides carry watermarks and
@@ -193,29 +200,19 @@ object Streams {
     * state — the scalable form of a streaming join (unbounded state
     * otherwise). Inner matches emit eagerly; `AvailableNow` drains the
     * history deterministically. */
-  def purchaseClickJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    def stream = eventStream(spark, sfDir)
-
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("click_id"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = stream.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-      .withWatermark("p_ts", "1 hour")
-
-    val joined = joinPurchasesToClicks(purchases, clicks, "inner")
-
-    val name = s"graft_ssjoin_${sinkId.incrementAndGet()}"
-    // Inner join: matches emit eagerly in the data batch; the no-data batch
-    // would only evict state (see withoutNoDataBatch — NOT safe for the
-    // left-outer variant, whose null rows emit on watermark advance).
-    withStatePartitions(spark) { withoutNoDataBatch(spark) {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } }
-    spark.table(name).orderBy("p_id", "click_id")
-  }
+  def purchaseClickJoin(spark: SparkSession, sfDir: String): DataFrame =
+    // Inner join: the no-data batch may be skipped (see drain); NOT for the
+    // left-outer variant, whose null rows emit on watermark advance.
+    drain(spark, OutputMode.Append, skipNoDataBatch = true) { s =>
+      def stream = eventStream(s, sfDir)
+      val clicks = stream.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("click_id"))
+        .withWatermark("c_ts", "1 hour")
+      val purchases = stream.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("event_id").as("p_id"))
+        .withWatermark("p_ts", "1 hour")
+      joinPurchasesToClicks(purchases, clicks, "inner")
+    }.orderBy("p_id", "click_id")
 
   /** The time-bounded purchase⋈click shape shared by the inner query and
     * the outer-join semantics spec. Both inputs must already carry
@@ -281,10 +278,6 @@ object Streams {
       .toDF()
   }
 
-  /** Per-user state transition for [[sessionizeStream]]. Top-level (not a
-    * closure) so the task serializes only the function, no enclosing scope.
-    * Keyed rows keep the watermarked `ts` column all the way to the stateful
-    * operator (a typed .map would strip the event-time tag). */
   /** Exactly-once parquet sink via `foreachBatch`: each microbatch
     * OVERWRITES its own `batch=<id>` directory, so replaying a batch after
     * a failure/restart rewrites the same files instead of duplicating rows —
@@ -294,18 +287,8 @@ object Streams {
     * effectively exactly-once. */
   def foreachBatchParquetSink(
       stream: DataFrame, path: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatch(batch.toDF(), path, id)
-      }
-      .trigger(Trigger.AvailableNow())
-    // An explicit checkpoint makes the sink resumable: a restarted query
-    // continues from the recorded source offsets (only NEW files process)
-    // and a replayed batch rewrites its own batch=<id> dir. Without one,
-    // Spark uses a temp checkpoint — fine for drain-once conformance runs.
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint)(writeBatch(_, path, _))
 
   /** The per-batch write — exposed so tests can replay a batch id and
     * assert idempotence. */
@@ -320,18 +303,14 @@ object Streams {
     * batch rewrites exactly itself on both sides. */
   def quarantineSink(
       stream: DataFrame, goodPred: org.apache.spark.sql.Column, path: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = batch.toDF().persist()
-        try {
-          writeBatch(b.filter(goodPred), s"$path/clean", id)
-          writeBatch(b.filter(!goodPred), s"$path/quarantine", id)
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint) { (batch, id) =>
+      val b = batch.persist()
+      try {
+        writeBatch(b.filter(goodPred), s"$path/clean", id)
+        writeBatch(b.filter(!goodPred), s"$path/quarantine", id)
+      } finally b.unpersist()
+    }
 
   /** Streaming incremental dedup — the daily-ingest pipeline in streaming
     * form: each microbatch of (doc_id, text) documents is deduped against
@@ -347,20 +326,14 @@ object Streams {
     * exactly that layout). */
   def incrementalDedupSink(
       stream: DataFrame, corpusDir: String, n: Int, threshold: Double,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val s = batch.sparkSession
-        val history = s.read.parquet(corpusDir).select("doc_id", "text")
-        val flags = graft.ops.Dedup.incrementalMinhashDedup(
-          history, batch.toDF(), "doc_id", "text", n, threshold)
-        val kept = batch.toDF().join(
-          flags.filter(col("kept")).select("doc_id"), "doc_id")
-        writeBatch(kept, corpusDir, id)
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint) { (batch, id) =>
+      val history = batch.sparkSession.read.parquet(corpusDir).select("doc_id", "text")
+      val flags = graft.ops.Dedup.incrementalMinhashDedup(
+        history, batch, "doc_id", "text", n, threshold)
+      val kept = batch.join(flags.filter(col("kept")).select("doc_id"), "doc_id")
+      writeBatch(kept, corpusDir, id)
+    }
 
   /** Streaming incrementally-maintained aggregate (MV) sink: each
     * microbatch of new base rows appends as an idempotent `batch=<id>`
@@ -376,23 +349,19 @@ object Streams {
   def mvRefreshSink(
       stream: DataFrame, baseDir: String, mvPath: String, keyCol: String,
       aggregate: DataFrame => DataFrame,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val s = batch.sparkSession
-        val b = batch.toDF().persist()
-        try {
-          writeBatch(b, baseDir, id)
-          val base = s.read.parquet(baseDir)
-          graft.ops.Relational.copyOnWrite(s, mvPath) { mv =>
-            graft.ops.Relational.refreshAffectedGroups(
-              mv, base, b.select(keyCol), keyCol)(aggregate)
-          }
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint) { (batch, id) =>
+      val s = batch.sparkSession
+      val b = batch.persist()
+      try {
+        writeBatch(b, baseDir, id)
+        val base = s.read.parquet(baseDir)
+        graft.ops.Relational.copyOnWrite(s, mvPath) { mv =>
+          graft.ops.Relational.refreshAffectedGroups(
+            mv, base, b.select(keyCol), keyCol)(aggregate)
+        }
+      } finally b.unpersist()
+    }
 
   /** [[mvRefreshSink]] with a KEY-PARTITIONED MV: the aggregate is stored
     * partitioned by `mv_bucket = pmod(hash(key), buckets)` and each
@@ -410,30 +379,25 @@ object Streams {
   def mvRefreshSinkPartitioned(
       stream: DataFrame, baseDir: String, mvDir: String, keyCol: String,
       buckets: Int, aggregate: DataFrame => DataFrame,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val s = batch.sparkSession
-        val b = batch.toDF().persist()
-        try {
-          writeBatch(b, baseDir, id)
-          val touched = b.select(mvBucket(col(keyCol), buckets).as("mv_bucket"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          if (touched.nonEmpty) {
-            val affBase = s.read.parquet(baseDir)
-              .filter(mvBucket(col(keyCol), buckets).isin(touched: _*))
-            aggregate(affBase)
-              .withColumn("mv_bucket", mvBucket(col(keyCol), buckets))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("mv_bucket")
-              .parquet(mvDir)
-          }
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint) { (batch, id) =>
+      val b = batch.persist()
+      try {
+        writeBatch(b, baseDir, id)
+        val touched = b.select(mvBucket(col(keyCol), buckets).as("mv_bucket"))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        if (touched.nonEmpty) {
+          val affBase = batch.sparkSession.read.parquet(baseDir)
+            .filter(mvBucket(col(keyCol), buckets).isin(touched: _*))
+          aggregate(affBase)
+            .withColumn("mv_bucket", mvBucket(col(keyCol), buckets))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("mv_bucket")
+            .parquet(mvDir)
+        }
+      } finally b.unpersist()
+    }
 
   /** The MV bucket key for [[mvRefreshSinkPartitioned]] — also used to
     * seed the MV with matching partitioning. */
@@ -452,17 +416,12 @@ object Streams {
   def annServeSink(
       stream: DataFrame, indexPath: String, outPath: String,
       idCol: String, vecCol: String, labelCol: String, nprobe: Int, k: Int,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val hits = graft.ops.Similarity.knnIvfPersisted(
-          batch.sparkSession, indexPath, batch.toDF(),
-          idCol, vecCol, labelCol, nprobe, k)
-        writeBatch(hits, outPath, id)
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    microBatches(stream, checkpoint) { (batch, id) =>
+      val hits = graft.ops.Similarity.knnIvfPersisted(
+        batch.sparkSession, indexPath, batch, idCol, vecCol, labelCol, nprobe, k)
+      writeBatch(hits, outPath, id)
+    }
 
   /** The same session state machine on Spark 4's MODERN arbitrary-state API
     * (`transformWithState`): explicit typed state handles (ListState event
@@ -565,25 +524,23 @@ object Streams {
     * drain it; cents derive exactly as in the batch operator. Requires the
     * RocksDB provider (transformWithState's contract). */
   def anomalyStream(spark: SparkSession, sfDir: String,
-      lookback: Int = 20, minPrev: Int = 10, zSq: Long = 9L): DataFrame = {
-    import spark.implicits._
-    val ev = eventStream(spark, sfDir)
-    val typed = ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), round(col("value") * 100).cast("long").as("cents"))
-      .as[(Long, Long, Long, Long)]
-    val hits = typed.groupByKey(_._1)
-      .transformWithState(new AnomalyProcessor(lookback, minPrev, zSq),
-        TimeMode.None(), OutputMode.Append())
-      .toDF()
-    val name = s"graft_anom_${sinkId.incrementAndGet()}"
-    withStatePartitions(spark) {
-      val q = hits.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("event_id")
-  }
+      lookback: Int = 20, minPrev: Int = 10, zSq: Long = 9L): DataFrame =
+    drain(spark, OutputMode.Append) { s =>
+      import s.implicits._
+      eventStream(s, sfDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("us"),
+          col("event_id"), round(col("value") * 100).cast("long").as("cents"))
+        .as[(Long, Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new AnomalyProcessor(lookback, minPrev, zSq),
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.orderBy("event_id")
 
+  /** Per-user state transition for [[sessionizeStream]]. Top-level (not a
+    * closure) so the task serializes only the function, no enclosing scope.
+    * Keyed rows keep the watermarked `ts` column all the way to the stateful
+    * operator (a typed .map would strip the event-time tag). */
   private def onUser(uid: Long, in: Iterator[(Long, java.sql.Timestamp, Long)],
       state: GroupState[Seq[Long]]): Iterator[Session] = {
     val buffered = state.getOption.getOrElse(Seq.empty)
