@@ -298,10 +298,11 @@ object ScaleSweep {
       // to skip the expensive rebuild. The caller owns its lifetime.
       val d = java.nio.file.Files.createTempDirectory(s"graft_${factor}x").toString
       Catalog.tableNames.foreach { t =>
-        // Raw read (no ts normalization) so the replica round-trips bytes;
-        // events.ts arrives as plain INT64 nanos either way and
-        // Catalog.normalizeEventTs handles both layouts on load.
-        val src = spark.read.parquet(Catalog.path(sfDir, t))
+        // Raw read under the resolved schema (no ts normalization) so the
+        // replica round-trips bytes: events.ts keeps its stored type
+        // (TIMESTAMP_MICROS naive in the test data, or TIMESTAMP(NANOS) read
+        // as INT64), and Catalog.load normalizes either from the replica.
+        val src = spark.read.schema(Catalog.schema(spark, sfDir, t)).parquet(Catalog.path(sfDir, t))
         val out = keyCols.get(t) match {
           case None => src
           case Some(keys) =>

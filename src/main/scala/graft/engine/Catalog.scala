@@ -1,8 +1,9 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Catalog loader — the Spark-native replacement for the reference's
   * `catalogue.xml` + `Catalogue.loadCatalogue`
@@ -10,9 +11,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `catalogue/TableSchema.java:20-143`).
   *
   * Tables are Parquet files under a scale-factor directory; schemas come from
-  * Parquet footers (no separate schema file needed). Statistics for the CBO
-  * come from file-level metadata + AQE runtime stats rather than the
-  * reference's `TableStatistics`/`ColumnStatistics` beans.
+  * Parquet footers (no separate schema file needed). This object is the one
+  * place that knows a base table's schema: [[schema]] resolves it once per
+  * (application, table path) and every reader of a base table — batch
+  * [[load]], `Streams.tableStream`, ScaleSweep's replica read — reads under
+  * it, so no read runs a Spark job to learn the schema again. No table
+  * carries statistics (see [[GraftSession]] on the CBO).
   */
 object Catalog {
   /** All driver-provided tables (TESTDATA.md). */
@@ -23,36 +27,73 @@ object Catalog {
   /** The small dimension tables — always broadcast-join candidates. */
   val smallDims: Set[String] = Set("region", "nation", "supplier")
 
-  /** Memo for the INT64-nanos magnitude check in [[normalizeEventTs]] —
-    * one sampled-row job per (application, data directory), not per load.
-    * Keyed by the data dir too because one application can load several
-    * scale-factor dirs (ScaleSweep does); an application-only memo would
-    * check just the first and let a later dir's plain-micros int64 column
-    * pass silently. */
-  private val nanosChecked =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** (application, table path) → the table's file listing (path, size,
+    * mtime) and the schema resolved from exactly those files. */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]()
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  /** Columnar scan; Catalyst pushes projection + filters into the Parquet
-    * reader (the analog of the reference's page column bitmap + in-page
-    * predicates, `io/tables/TablePage.java:24-43,199-219`). */
+  /** The table's schema as stored, resolved from its Parquet footers once
+    * per (application, table path) and again only when the table's file
+    * listing changes: Spark's reader NULL-fills a column missing from a file
+    * without an error, so a rewritten table must never read under a stale
+    * schema. A repeat call lists the files and runs no Spark job. No lock is
+    * held across a resolution; two racing callers both resolve the same
+    * schema. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType = {
+    val p = path(sfDir, name)
+    val root = new Path(p)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    val listing = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    val key = spark.sparkContext.applicationId + "#" + p
+    Option(resolved.get(key)).filter(_._1 == listing).map(_._2).getOrElse {
+      val s = resolve(spark, p, name)
+      resolved.put(key, (listing, s))
+      s
+    }
+  }
+
+  /** Spark's footer inference (one job), plus the `events.ts` contract
+    * check. A LongType `ts` is only correct as TIMESTAMP(NANOS) read under
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (see [[GraftSession]]); a
+    * plain-int64 micros/millis column would be misscaled by
+    * [[normalizeEventTs]]. So one sampled value must sit in the nanosecond
+    * range for plausible event dates (≥ 2000-01-01 in nanos ≈ 9.5e17;
+    * micros for any date < 2286 stay < 1e16), or the resolution fails
+    * loudly. `head(1)` reads a single row group of the batch files. */
+  private def resolve(spark: SparkSession, p: String, name: String): StructType = {
+    val df = spark.read.parquet(p)
+    if (name == "events" && df.schema("ts").dataType == LongType)
+      df.select("ts").head(1).foreach { r =>
+        val v = math.abs(r.getLong(0))
+        require(v == 0L || v >= (1L << 59), // ~5.7e17: nanos for dates >= 1988
+          s"events.ts is INT64 but |$v| is below the nanosecond range; " +
+            "normalizeEventTs only handles TIMESTAMP(NANOS) read under " +
+            "spark.sql.legacy.parquet.nanosAsLong=true — a plain micros/" +
+            "millis int64 column needs an explicit conversion")
+      }
+    df.schema
+  }
+
+  /** Columnar scan under the resolved schema; Catalyst pushes projection +
+    * filters into the Parquet reader (the analog of the reference's page
+    * column bitmap + in-page predicates,
+    * `io/tables/TablePage.java:24-43,199-219`). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(path(sfDir, name))
+    val df = spark.read.schema(schema(spark, sfDir, name)).parquet(path(sfDir, name))
     if (name == "events") normalizeEventTs(df) else df
   }
 
   /** Normalize `events.ts` to a session-TZ TimestampType column, whatever
-    * the driver wrote to Parquet this round:
+    * the driver wrote to Parquet this round. A column rewrite only, so it
+    * applies to a batch or a streaming frame alike:
     *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; sessions set
     *    `spark.sql.legacy.parquet.nanosAsLong=true` (see [[GraftSession]]) so
     *    it arrives as LongType nanoseconds → truncate to µs. Queries compare
-    *    at ≥second granularity, so the truncation is lossless. A LongType
-    *    `ts` is ONLY correct under that encoding contract — a plain-int64
-    *    micros/millis column would be misscaled — so the branch asserts the
-    *    value magnitude is in the nanosecond range for plausible event dates
-    *    (≥ 2000-01-01 in nanos ≈ 9.5e17; micros for any date < 2286 stay
-    *    < 1e16) and fails loudly otherwise.
+    *    at ≥second granularity, so the truncation is lossless. [[schema]]
+    *    has already checked that the values are nanoseconds.
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark ≥3.4 infers
     *    TIMESTAMP_NTZ → cast to TimestampType. The cast reinterprets the
     *    wall-clock fields in the SESSION time zone, so it maps to the same
@@ -61,28 +102,7 @@ object Catalog {
     *    caller fails loudly instead of silently shifting every instant. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
-      case LongType =>
-        // Contract check: one sampled value must sit in the nanos range.
-        // head() reads a single row group; memoized per (application, data
-        // dir) so repeated loads of the same dir pay no extra job while a
-        // second scale-factor dir in the same JVM is still checked.
-        val dirKey = df.inputFiles.headOption
-          .map(f => f.substring(0, math.max(0, f.lastIndexOf('/'))))
-          .getOrElse("")
-        nanosChecked.computeIfAbsent(
-          df.sparkSession.sparkContext.applicationId + "#" + dirKey,
-          _ => {
-            df.select("ts").head(1).foreach { r =>
-              val v = math.abs(r.getLong(0))
-              require(v == 0L || v >= (1L << 59), // ~5.7e17: nanos for dates >= 1988
-                s"events.ts is INT64 but |$v| is below the nanosecond range; " +
-                  "normalizeEventTs only handles TIMESTAMP(NANOS) read under " +
-                  "spark.sql.legacy.parquet.nanosAsLong=true — a plain micros/" +
-                  "millis int64 column needs an explicit conversion")
-            }
-            java.lang.Boolean.TRUE
-          })
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         val tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "")
         require(tz == "UTC",
@@ -98,27 +118,5 @@ object Catalog {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     tableNames.foreach { t =>
       load(spark, sfDir, t).createOrReplaceTempView(t)
-    }
-
-  /** Register tables as MANAGED catalog tables and ANALYZE them — the full
-    * replacement for the reference's catalogue statistics
-    * (`catalogue/TableStatistics.java:19-29`, `ColumnStatistics.java:21-31`):
-    * row counts, sizes, and per-column NDV/min/max feed Catalyst's CBO
-    * (`CostBasedJoinReorder` subsumes the reference's DP join-order search,
-    * `optimizer/joins/JoinOrderOptimizer.java:24`). Temp views cannot carry
-    * stats, so this copies into the session warehouse — use for stats-driven
-    * workloads; `registerAll` for zero-copy. */
-  def registerAllWithStats(
-      spark: SparkSession, sfDir: String, tables: Seq[String] = tableNames): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // The in-memory catalog forgets tables across JVMs but their warehouse
-      // directories survive; clear any orphaned location before re-creating.
-      val warehouse = new org.apache.hadoop.fs.Path(
-        spark.sessionState.conf.warehousePath, t)
-      val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(warehouse)) fs.delete(warehouse, true)
-      load(spark, sfDir, t).write.mode("overwrite").saveAsTable(t)
-      spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
     }
 }

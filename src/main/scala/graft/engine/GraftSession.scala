@@ -11,8 +11,14 @@ import org.apache.spark.sql.SparkSession
   *   - AQE on: runtime re-planning replaces the reference's static cost model
   *     (`optimizer/cost/CostEstimator.java:49-181`) — partition coalescing and
   *     skew-join handling matter at 100 TB.
-  *   - CBO + join reorder on: Catalyst's `CostBasedJoinReorder` subsumes the
-  *     reference's DP join-order optimizer (`optimizer/joins/JoinOrderOptimizer.java:24`).
+  *   - CBO + join reorder on. No base table carries statistics ([[Catalog]]
+  *     computes none), so `CostBasedJoinReorder`, the analog of the
+  *     reference's DP join-order optimizer
+  *     (`optimizer/joins/JoinOrderOptimizer.java:24`), does not reorder the
+  *     conformance rows. The confs still act through cached relations, whose
+  *     row counts feed the CBO's estimates: `sample_cluster_quota` and
+  *     `train_preference_pairs` broadcast the cached k-means assignment with
+  *     them and the documents scan without them.
   *   - shuffle.partitions sized to the local core count, not the 200 default;
   *     on a real cluster this would be set to ~2-3x total executor cores (or
   *     left to AQE's coalescing with a high initial value).

@@ -124,16 +124,18 @@ object Streams {
     * (the file stream source requires a directory, so stream sfDir with a
     * glob pinned to that file name), while replica dirs (ScaleSweep) and
     * ordinary Spark writers produce a parquet DIRECTORY of part files —
-    * stream that directory itself. Timestamps normalize identically to the
-    * batch Catalog path. */
+    * stream that directory itself. The schema is the catalog's resolution
+    * (which also checks an INT64 `ts`), and timestamps normalize identically
+    * to the batch Catalog path. */
   def eventStream(spark: SparkSession, sfDir: String): DataFrame =
     Catalog.normalizeEventTs(tableStream(spark, sfDir, "events"))
 
-  /** Parquet-backed stream over any catalog table (same layout robustness
-    * as [[eventStream]]; no timestamp normalization). */
+  /** Parquet-backed stream over any catalog table, under its resolved
+    * [[Catalog.schema]] (same layout robustness as [[eventStream]]; no
+    * timestamp normalization). */
   def tableStream(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val path = Catalog.path(sfDir, table)
-    val schema = spark.read.parquet(path).schema
+    val schema = Catalog.schema(spark, sfDir, table)
     if (new java.io.File(path).isDirectory)
       spark.readStream.schema(schema).parquet(path)
     else

@@ -1,105 +1,85 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampType}
 
-import graft.engine.Catalog
+import graft.engine.{Catalog, TempDirs}
 import graft.ops.Relational.{charEq, charPad}
+import graft.streaming.Streams
 
-class CatalogSpec extends SparkSpec with SlowSuite {
+/** One schema resolution per base table: a repeat read runs no Spark job, a
+  * rewritten table resolves again, and the `events.ts` INT64 contract is
+  * checked once, for batch and stream readers alike. */
+class CatalogSpec extends SparkSpec {
+  private val dir = "/root/testdata/sf0.001"
 
-  test("registerAllWithStats feeds row counts and column stats to the CBO") {
-    Catalog.registerAllWithStats(spark, "/root/testdata/sf0.001",
-      Seq("region", "nation", "supplier"))
-    val stats = spark.sql("DESCRIBE EXTENDED nation n_nationkey").collect()
-      .map(r => (r.getString(0), r.getString(1))).toMap
-    assert(stats("distinct_count") === "25")
-    val cat = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("nation"))
-    assert(cat.stats.exists(_.rowCount.contains(BigInt(25))))
-
-    // With stats present, a stats-based plan carries the row counts into the
-    // optimizer's cost model (join reorder operates on these estimates).
-    val q = spark.sql(
-      """SELECT r_name, n_name, s_name FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey""".stripMargin)
-    val optimized = q.queryExecution.optimizedPlan
-    assert(optimized.stats.rowCount.isDefined || optimized.stats.sizeInBytes > 0)
+  /** sf0.001 events rewritten into a fresh dir with `ts` as a plain INT64:
+    * microseconds since the epoch times `perMicro` (1000 for nanoseconds). */
+  private def int64Events(perMicro: Long): String = {
+    val d = TempDirs.create("graft_catalog_ts")
+    Catalog.load(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")) * perMicro)
+      .write.parquet(Catalog.path(d, "events"))
+    d
   }
 
-  test("CostBasedJoinReorder reorders a deliberately bad 4-table join chain") {
-    // The reference pins expected bushy join trees from its DP join-order
-    // search (TestJoinOrderOptimizerStudents.java:124-471, expected tree at
-    // :168-178); the Spark analog is CostBasedJoinReorder driven by ANALYZE
-    // stats. Written order joins the two big facts FIRST and the tiny
-    // selective dimensions last — the worst left-deep order. With stats the
-    // optimizer must produce a different leaf order; with joinReorder off it
-    // must keep the syntactic one (proving the rewrite is the reorder rule,
-    // not join-strategy selection).
-    Catalog.registerAllWithStats(spark, "/root/testdata/sf0.001",
-      Seq("lineitem", "orders", "customer", "nation"))
-    val sql =
-      """SELECT count(*) FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |WHERE n_name = 'GERMANY'""".stripMargin
+  test("a resolved table reads again with no Spark job, batch or stream") {
+    Catalog.tableNames.foreach(t => Catalog.load(spark, dir, t).schema)
+    assert(jobsRun {
+      Catalog.tableNames.foreach(t => Catalog.load(spark, dir, t).schema)
+      Streams.eventStream(spark, dir).schema
+      Streams.tableStream(spark, dir, "orders").schema
+    } === 0)
 
-    def leafOrder(): Seq[String] = {
-      val leaves = spark.sql(sql).queryExecution.optimizedPlan.collectLeaves()
-      leaves.map { l =>
-        val s = l.toString
-        Seq("lineitem", "orders", "customer", "nation").find(s.contains).getOrElse("?")
-      }
-    }
-
-    val key = "spark.sql.cbo.joinReorder.enabled"
-    spark.conf.set(key, "false")
-    val syntactic = try leafOrder() finally spark.conf.set(key, "true")
-    val reordered = leafOrder()
-    assert(syntactic === Seq("lineitem", "orders", "customer", "nation"), syntactic)
-    assert(reordered !== syntactic,
-      s"CostBasedJoinReorder left the bad join order untouched: $reordered")
-    // the selective nation ⨝ customer pair must join before lineitem enters
-    assert(reordered.indexOf("nation") < reordered.indexOf("lineitem"), reordered)
+    val d = TempDirs.create("graft_catalog_jobs")
+    spark.range(10).write.parquet(Catalog.path(d, "t"))
+    assert(jobsRun(Catalog.load(spark, d, "t").schema) === 1) // the footer inference
+    assert(jobsRun(Catalog.load(spark, d, "t").schema) === 0)
   }
 
-  test("CostBasedJoinReorder handles the full-catalog 7-table chain") {
-    // The reference's DP search is also pinned on 8-relation graphs
-    // (TestJoinOrderOptimizerStudents.java:243-471); the analog here is the
-    // widest chain the driver schema supports — every relational table, the
-    // two facts written first, every selective dimension last. The DP
-    // threshold (spark.sql.cbo.joinReorder.dp.threshold = 12) covers 7
-    // relations, so this exercises the exhaustive search, not the greedy
-    // fallback.
-    Catalog.registerAllWithStats(spark, "/root/testdata/sf0.001",
-      Seq("lineitem", "orders", "customer", "nation", "region", "supplier", "part"))
-    val sql =
-      """SELECT count(*) FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN part     ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND p_size < 10""".stripMargin
-    val tables = Seq("lineitem", "orders", "customer", "part", "supplier",
-      "nation", "region")
+  test("a table rewritten in place resolves its new schema") {
+    val d = TempDirs.create("graft_catalog_rewrite")
+    val p = Catalog.path(d, "t")
+    val base = spark.range(5).select(col("id").as("a"), (col("id") * 2).as("b"))
+    base.write.parquet(p)
+    assert(Catalog.load(spark, d, "t").columns.toSeq === Seq("a", "b"))
 
-    def leafOrder(): Seq[String] = {
-      val leaves = spark.sql(sql).queryExecution.optimizedPlan.collectLeaves()
-      leaves.map(l => tables.find(l.toString.contains).getOrElse("?"))
-    }
+    base.withColumn("c", col("a") + 100).write.mode("overwrite").parquet(p)
+    val added = Catalog.load(spark, d, "t")
+    assert(added.columns.toSeq === Seq("a", "b", "c"))
+    assert(added.orderBy("a").select("c").collect().map(_.getLong(0)).toSeq ===
+      Seq(100L, 101L, 102L, 103L, 104L))
 
-    val key = "spark.sql.cbo.joinReorder.enabled"
-    spark.conf.set(key, "false")
-    val syntactic = try leafOrder() finally spark.conf.set(key, "true")
-    val reordered = leafOrder()
-    assert(syntactic === tables, syntactic)
-    assert(reordered !== syntactic,
-      s"CostBasedJoinReorder left the bad 7-table order untouched: $reordered")
-    // the filtered region must enter before the unfiltered big fact
-    assert(reordered.indexOf("region") < reordered.indexOf("lineitem"), reordered)
+    base.drop("b").write.mode("overwrite").parquet(p)
+    assert(Catalog.load(spark, d, "t").columns.toSeq === Seq("a"))
+  }
+
+  test("INT64 events.ts: nanoseconds load as timestamps, micros fail loudly") {
+    val want = Catalog.load(spark, dir, "events")
+    val nanos = int64Events(1000L)
+    assert(spark.read.parquet(Catalog.path(nanos, "events")).schema("ts").dataType === LongType)
+    val got = Catalog.load(spark, nanos, "events")
+    assert(got.schema("ts").dataType === TimestampType)
+    assert(got.orderBy("event_id").collect().toSeq === want.orderBy("event_id").collect().toSeq)
+
+    val micros = int64Events(1L)
+    val e = intercept[IllegalArgumentException](Catalog.load(spark, micros, "events"))
+    assert(e.getMessage.contains("below the nanosecond range"), e.getMessage)
+  }
+
+  test("an event stream over INT64 nanosecond events drains like the batch") {
+    val nanos = int64Events(1000L)
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq)
+    val streamed = rows(Streams.tumblingAgg(spark, nanos))
+    val batch = rows(Catalog.load(spark, nanos, "events")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_val"))
+      .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("sum_val"))
+      .orderBy("ws", "event_type"))
+    assert(streamed.nonEmpty)
+    assert(streamed === batch)
   }
 
   test("CHAR(n) blank-pad helpers reproduce the reference's fixed-length semantics") {

@@ -128,21 +128,22 @@ class StreamDrainSpec extends SparkSpec with SlowSuite {
   }
 
   test("streaming family: Spark jobs run while each row is built") {
-    // The rows' build jobs: schema inference per base-table read, the
-    // micro-batches of every drain and sink, and the sink rows' seed writes
-    // and read-backs. Pinned per row.
+    // The rows' build jobs: the micro-batches of every drain and sink, and
+    // the sink rows' seed writes and read-backs. Base-table schemas are
+    // resolved first, once per session, so no pin counts one. Pinned per
+    // row.
     val pinned = Seq(
-      "stream_tumbling_agg" -> 2,
-      "stream_static_enrich" -> 4,
-      "stream_stream_join" -> 3,
-      "stream_e2e_incremental" -> 3,
-      "stream_dedup_events" -> 2,
-      "stream_sliding_agg" -> 1,
-      "stream_mv_refresh" -> 16,
-      "stream_mv_refresh_partitioned" -> 13,
-      "stream_incremental_dedup_sink" -> 21,
-      "stream_ann_serve" -> 20)
-    Catalog.load(spark, dir, "events").schema // memoized ts check, if any
+      "stream_tumbling_agg" -> 1,
+      "stream_static_enrich" -> 2,
+      "stream_stream_join" -> 1,
+      "stream_e2e_incremental" -> 2,
+      "stream_dedup_events" -> 1,
+      "stream_sliding_agg" -> 0,
+      "stream_mv_refresh" -> 14,
+      "stream_mv_refresh_partitioned" -> 11,
+      "stream_incremental_dedup_sink" -> 19,
+      "stream_ann_serve" -> 18)
+    Catalog.tableNames.foreach(t => Catalog.schema(spark, dir, t))
     val counted = watched { w =>
       pinned.map { case (row, _) =>
         org.apache.spark.graftx.ListenerDrain(spark.sparkContext)
