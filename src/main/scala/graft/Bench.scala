@@ -370,14 +370,16 @@ object Bench {
       .mkString("{", ",", "}")
     // Full machine-readable detail (SPARK_GRAFT_BENCH_OUT=<file>): every
     // row's median/spread, the median rep's build and count() seconds
-    // (median_s = build_s + run_s, the sum the time gate reads) and plan
-    // fingerprint — deliberately NOT on stdout (the tail budget below).
+    // (median_s = build_s + run_s, the sum the time gate reads), its
+    // compiled classes and the plan fingerprint — deliberately NOT on
+    // stdout (the tail budget below).
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { out =>
       def r2b(v: Double): Double = math.round(v * 100.0) / 100.0
       val rows = finalResults.toSeq.sortBy(_._1).map { case (k, r) =>
         val base = r.fold(e => s""""failed":true,"cause":${jq(Runs.cause(e))}""",
           m => s""""median_s":${r3(m.medianS)},"warm_spread":${r2b(m.warmSpread)},""" +
-            s""""build_s":${r3(m.median.buildS)},"run_s":${r3(m.median.runS)}""")
+            s""""build_s":${r3(m.median.buildS)},"run_s":${r3(m.median.runS)},""" +
+            s""""build_compiles":${m.median.buildCompiles},"run_compiles":${m.median.runCompiles}""")
         val fp = if (fingerprints.contains(k)) "," + fpJson(k) else ""
         s""""$k":{$base$fp}"""
       }.mkString(",")

@@ -1,18 +1,28 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** The one run loop of the harnesses (Bench, ScaleSweep, Verify,
   * StressBench). A row is a build — `fn(spark, dir)`, which for many rows
   * already runs Spark jobs — and an action on what it built; the two are
-  * timed separately. A throw in either is a failure that keeps its cause
-  * and carries no time: time-to-exception is never timed as a success. */
+  * timed separately, and each counts the classes codegen compiled while it
+  * ran. A throw in either is a failure that keeps its cause and carries no
+  * time: time-to-exception is never timed as a success. */
 object Runs {
 
-  /** One timed run: the action's result, build and action seconds. */
-  final case class Run[B](result: B, buildS: Double, runS: Double) {
+  /** One timed run: the action's result, build and action seconds, and the
+    * classes codegen compiled during the build and during the action. */
+  final case class Run[B](result: B, buildS: Double, runS: Double,
+      buildCompiles: Long, runCompiles: Long) {
     def totalS: Double = buildS + runS
   }
+
+  /** Classes the JVM's codegen has compiled so far: the compile-time
+    * histogram's count, which counts every compile (its snapshot is a
+    * sampled reservoir, so its sum does not). A warm query whose classes
+    * the codegen cache holds compiles none. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** `reps` back-to-back runs: the median run (by total seconds), the
     * relative spread (max − min) / median of the warm runs, and every
@@ -26,12 +36,12 @@ object Runs {
 
   def time[A, B](build: => A)(action: A => B): Either[Throwable, Run[B]] =
     try {
-      val t0 = System.nanoTime()
+      val (c0, t0) = (compiles(), System.nanoTime())
       val built = build
-      val t1 = System.nanoTime()
+      val (c1, t1) = (compiles(), System.nanoTime())
       val out = action(built)
-      val t2 = System.nanoTime()
-      Right(Run(out, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
+      val (c2, t2) = (compiles(), System.nanoTime())
+      Right(Run(out, (t1 - t0) / 1e9, (t2 - t1) / 1e9, c1 - c0, c2 - c1))
     } catch { case e: Throwable => Left(e) }
 
   /** [[time]] `reps` times; stops at the first failure and returns it.

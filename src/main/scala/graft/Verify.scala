@@ -18,7 +18,8 @@ object Verify {
       Runs.time(fn(spark, sfDir))(
           _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")) match {
         case Right(r) =>
-          println(f"[verify] $name build_s=${r.buildS}%.3f write_s=${r.runS}%.3f")
+          println(f"[verify] $name build_s=${r.buildS}%.3f write_s=${r.runS}%.3f " +
+            s"build_compiles=${r.buildCompiles} write_compiles=${r.runCompiles}")
         case Left(e) =>
           System.err.println(s"[verify] $name failed: ${Runs.cause(e)}")
       }

@@ -22,6 +22,24 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle.partitions sized to the local core count, not the 200 default;
   *     on a real cluster this would be set to ~2-3x total executor cores (or
   *     left to AQE's coalescing with a high initial value).
+  *   - A codegen class cache that holds the engine's working set, so a warm
+  *     query compiles no generated class. Every whole-stage codegen stage and
+  *     generated projection is a Janino compile, and Spark keeps the compiled
+  *     classes in ONE JVM-wide LRU. `CodeGenerator`'s static initializer
+  *     reads its size (`spark.sql.codegen.cache.maxEntries`, a static conf)
+  *     once per JVM, so the first session that triggers codegen fixes it,
+  *     and Spark ignores the setting on a session built over a running
+  *     SparkContext. At Spark's default of 100, a warm session kept
+  *     evicting classes and compiling them again: graftbench's relational
+  *     pool recompiled about 87 of its 140 classes every round. Distinct
+  *     classes measured: the nine relational pool rows 140; a whole
+  *     relational benchmark run at sf0.01 155; one ingest batch about 110;
+  *     a ten-batch ingest run with its checks 816, most of them BM25 serve
+  *     classes that never recur; one full [[graft.Verify]] pass at sf0.01
+  *     3 773. 2000 holds every benchmark run's working set with more than
+  *     twice the largest. A Verify pass is larger, but its rows share few
+  *     classes: at 2000 it compiles 3 960 classes (6 678 at 100). A caller
+  *     whose working set exceeds the cache gets the LRU's behaviour.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` when set (the deployment setting), else every
@@ -73,6 +91,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // The codegen class cache, sized from measurement (see above).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Shared session for tests / ad-hoc runs. */
   def local(appName: String = "graft"): SparkSession = {

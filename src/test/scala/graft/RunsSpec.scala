@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** The harnesses' one run loop: what `Runs.measure` reports as the median
-  * and spread, that a throw is a failure with its cause and no time, and
-  * that the build and action seconds account for the whole timed call. */
+  * and spread, that a throw is a failure with its cause and no time, that
+  * the build and action seconds account for the whole timed call, and that
+  * a run counts the classes codegen compiled in each part. */
 class RunsSpec extends SparkSpec {
 
   test("measure: median run over reps, spread over the warm reps only") {
@@ -55,5 +56,16 @@ class RunsSpec extends SparkSpec {
     val Right((m, _)) = Runs.measure(3)(spark.range(5))(_.count())
     assert(m.medianS === m.median.buildS + m.median.runS)
     assert(m.totalsS.contains(m.medianS))
+  }
+
+  test("a run counts the classes codegen compiled in its build and its action") {
+    // The literal is inlined into the generated code, so this expression's
+    // classes are new to the JVM on the first run and cached on the second.
+    val salt = System.nanoTime()
+    def q = spark.range(100).selectExpr(s"id * 7 + $salt AS v").filter("v % 3 = 0")
+    val Right(first) = Runs.time(q)(_.collect())
+    assert(first.buildCompiles === 0L && first.runCompiles >= 1L, first)
+    val Right(again) = Runs.time(q)(_.collect())
+    assert(again.buildCompiles === 0L && again.runCompiles === 0L, again)
   }
 }
