@@ -56,13 +56,14 @@ object Bench {
     def ok(rows: Map[String, Either[Throwable, Runs.Measured]]) =
       rows.collect { case (k, Right(m)) => k -> m }
     val resultsOk = ok(results)
-    def noisy(m: Runs.Measured) = m.warmSpread > 0.5 && m.medianS > 0.3
+    def noisy(m: Runs.Measured) =
+      m.warmSpread > PlanGate.TimeSpreadCeiling && m.medianS > PlanGate.TimeFloorS
     // SELF-HEAL noisy rows: a row whose warm reps disagreed by more than
-    // half its median was hit by box contention mid-run. Re-measure the 8
-    // largest such rows with 5 fresh reps. A heal REPLACES the measurement
-    // only when it moved the median >20% lower: contention only inflates,
-    // and a retry that fails or lands on the original median keeps the
-    // original successful measurement.
+    // the time gate's spread ceiling was hit by box contention mid-run.
+    // Re-measure the 8 largest such rows with 5 fresh reps. A heal REPLACES
+    // the measurement only when it moved the median >20% lower: contention
+    // only inflates, and a retry that fails or lands on the original median
+    // keeps the original successful measurement.
     val healNames = resultsOk.toSeq.collect {
       case (name, m) if noisy(m) => (name, m.medianS)
     }.sortBy(-_._2).take(8).map(_._1).sorted
@@ -185,47 +186,35 @@ object Bench {
     val baselinePath = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_BASELINE", "PLAN_BASELINE.json"))
     // SPARK_GRAFT_WRITE_PLAN_BASELINE=<path> re-authors the baseline from
-    // this run (clean box only). Rows measuring far above the previous
-    // baseline's tightest epoch carry that clean median as "cmed"
-    // (PlanGate.carryCleanMedians), so an interference plateau cannot
-    // widen the time allowance.
+    // this run.
     sys.env.get("SPARK_GRAFT_WRITE_PLAN_BASELINE").foreach { p =>
       val plFp = pipelineTimes.map { case (k, _) => k -> PlanGate.Fp(0, 0) }
       val meds = (gateTimes ++ pipelineGateTimes).map { case (k, (med, _)) => k -> med }
-      val prev = try {
-        if (Files.exists(baselinePath))
-          PlanGate.parseBaseline(Files.readString(baselinePath))
-        else Map.empty[String, PlanGate.Base]
-      } catch { case e: Throwable =>
-        // A prior baseline that exists but cannot be parsed must not
-        // silently drop every clean-epoch carry.
-        println("[bench] WARNING: previous plan baseline exists but failed " +
-          s"to parse — NO clean-epoch (cmed) carries this re-author: ${Runs.cause(e)}")
-        Map.empty[String, PlanGate.Base]
-      }
-      val cmeds = PlanGate.carryCleanMedians(prev, meds)
-      Files.writeString(Paths.get(p), PlanGate.render(fpNums ++ plFp, meds, cmeds))
+      Files.writeString(Paths.get(p), PlanGate.render(fpNums ++ plFp, meds))
       println(s"[bench] wrote plan baseline $p " +
-        s"(${fpNums.size} query + ${plFp.size} pipeline rows; " +
-        s"${cmeds.size} clean-epoch carry: ${cmeds.keys.toSeq.sorted.mkString(",")})")
+        s"(${fpNums.size} query + ${plFp.size} pipeline rows)")
     }
-    val (gateViolations, gateInfo): (Seq[String], Seq[String]) =
-      if (Runs.subset) (Seq.empty, Seq.empty)
+    val (gateViolations, gateDivisor): (Seq[String], Option[Double]) =
+      if (Runs.subset) (Seq.empty, None)
       else try {
         if (!Files.exists(baselinePath)) {
           println(s"[bench] no plan baseline at $baselinePath - gate skipped")
-          (Seq.empty, Seq.empty)
+          (Seq.empty, None)
         } else {
           val base = PlanGate.parseBaseline(Files.readString(baselinePath))
+          // One divisor per run, from the main-loop times: it picks the
+          // rows to re-measure and gives the verdict.
+          val divisor = PlanGate.timeDivisor(base, gateTimes ++ pipelineGateTimes)
+          println(f"BENCH_DETAIL plan_gate time_divisor $divisor%.3f")
           def fires(name: String, med: Double, spread: Double) =
-            base.get(name).exists(b => PlanGate.timeRegressionFires(b, med, spread))
+            base.get(name).exists(b => PlanGate.timeRegressionFires(b, med, spread, divisor))
           // TIME-VIOLATION RE-MEASURE: a main-loop median is measured
           // minutes from its baseline twin, so an episode onset mid-run
           // ships one-shot violations. Any QUERY row whose median would
-          // fire is re-run back-to-back, medians-of-3 (spread over all
-          // three), and the gate verdicts on the LOWER median. Pipeline
-          // rows are session-cached builds (a re-run is a no-op), so their
-          // firings stand as one-shots with a printed note.
+          // fire is re-run back-to-back, medians-of-3, and the gate
+          // verdicts on the LOWER median. Pipeline rows are session-cached
+          // builds (a re-run is a no-op), so their firings stand as
+          // one-shots with a printed note.
           pipelineGateTimes.toSeq.sortBy(_._1).foreach { case (name, (med, spread)) =>
             if (fires(name, med, spread))
               println(s"BENCH_DETAIL time_violation_note $name fires as a " +
@@ -244,12 +233,12 @@ object Bench {
                   "retry failed - main-loop verdict stands")
                 None
               case Right(m) if m.medianS < orig =>
-                val med2 = m.medianS
-                val spread2 = (m.totalsS.max - m.totalsS.min) / med2
-                val verdict = if (fires(name, med2, spread2)) "CONFIRMED" else "cleared"
+                val verdict =
+                  if (fires(name, m.medianS, m.warmSpread)) "CONFIRMED" else "cleared"
                 println(f"BENCH_DETAIL time_violation_remeasure $name " +
-                  f"main=$orig%.2f retry_med3=$med2%.2f spread=$spread2%.2f -> $verdict")
-                Some(name -> ((med2, spread2)))
+                  f"main=$orig%.2f retry_med3=${m.medianS}%.2f " +
+                  f"spread=${m.warmSpread}%.2f -> $verdict")
+                Some(name -> ((m.medianS, m.warmSpread)))
               case Right(m) =>
                 println(f"BENCH_DETAIL time_violation_remeasure $name " +
                   f"main=$orig%.2f retry_med3=${m.medianS}%.2f -> CONFIRMED " +
@@ -257,15 +246,12 @@ object Bench {
                 None
             }
           }.toMap
-          val verdictTimes = gateTimes ++ pipelineGateTimes ++ reTimes
           (PlanGate.violations(fpNums, base,
             graft.queries.Q.designHxMap(SparkEntry.allQueries),
             graft.queries.Q.layoutRowsMap(SparkEntry.allQueries),
             graft.ops.Bucketing.registeredLayouts,
-            verdictTimes),
-            // Non-gating clean-floor exceedances: visible in the artifact,
-            // never in the violations list.
-            PlanGate.infoLines(base, verdictTimes))
+            gateTimes ++ pipelineGateTimes ++ reTimes, divisor),
+            Some(divisor))
         }
       } catch {
         // A gate-machinery failure (e.g. a mangled baseline row tripping
@@ -273,7 +259,7 @@ object Bench {
         // a clean run with every channel silently disabled.
         case e: Throwable =>
           println(s"[bench] plan gate failed: ${Runs.cause(e)}")
-          (Seq(s"plan_gate_error: ${Runs.cause(e)}"), Seq.empty)
+          (Seq(s"plan_gate_error: ${Runs.cause(e)}"), None)
       }
     // SCAN AUDIT: every index-serving row's "pruned by design" claim as
     // per-run data — one extra execution per audited row (collect, so the
@@ -348,7 +334,6 @@ object Bench {
     }
     val allViolations = gateViolations ++ servePins
     allViolations.foreach(v => println(s"BENCH_DETAIL plan_gate VIOLATION $v"))
-    gateInfo.foreach(v => println(s"BENCH_DETAIL plan_gate INFO $v"))
     // Full per-query detail for humans (NOT the machine-read line).
     pipelineTimes.foreach { case (k, v) => println(f"BENCH_DETAIL $k $v%.3f") }
     val healedNames = (healApplied.keySet ++ secondHeal.keySet).toSeq.sorted
@@ -394,7 +379,7 @@ object Bench {
       Files.writeString(Paths.get(out),
         s"""{"reps":$Reps,"sf":"$sfDir","failed":$failedJson,"pipelines_s":$pls,"recall_at_10":$rec,""" +
           s""""plan_gate_violations":${allViolations.map(jq).mkString("[", ",", "]")},""" +
-          s""""plan_gate_info":${gateInfo.map(jq).mkString("[", ",", "]")},""" +
+          s""""plan_gate_divisor":${gateDivisor.fold("null")(d => r3(d).toString)},""" +
           s""""scan_audit":$audit,"queries":{$rows}}""")
       println(s"[bench] wrote $out")
     }

@@ -5,7 +5,7 @@ package graft.engine
   * (`basket_part_pairs`, `triangleCount`) — but only because a human
   * diffed the artifact. This gate makes the diff mechanical: the bench
   * compares every query's live fingerprint against the committed baseline
-  * (`PLAN_BASELINE.json`, authored from a clean-box run) and reports
+  * (`PLAN_BASELINE.json`, authored from a full bench run) and reports
   * violations in the artifact; PlanGateSpec proves the rules fire on an
   * injected regression.
   *
@@ -32,92 +32,38 @@ package graft.engine
   *     regression in.
   *   - other `hashExchanges` changes are NOT violations (AQE may
   *     legitimately re-stage); they stay visible in the artifact diff.
-  *   - TIME channel (round 10): a row whose warm median exceeds its
-  *     committed clean-box baseline median by more than
-  *     [[TimeRegressionFactor]] is a violation even when its plan
-  *     fingerprint is bit-identical — the r9 `dedup_ngram_jaccard` ×2.3
-  *     regression class, which fingerprint diffs are structurally blind
-  *     to. Spread-aware: rows whose warm reps disagreed by more than
-  *     [[TimeSpreadCeiling]] are exempt (that is box contention, and the
-  *     bench self-heal already re-measures them), as are rows under
-  *     [[TimeFloorS]] baseline seconds (relative time on a 50 ms row is
-  *     scheduler noise). Build pipelines ride the same rule as
-  *     `pipeline:<name>` rows (round 11) — single-shot timings with
-  *     spread 0.0 and zeroed fingerprint columns that no rule reads.
+  *   - TIME channel: a row whose warm median is more than
+  *     [[TimeRegressionFactor]]× its committed baseline median, after the
+  *     run's calibration, is a violation even when its plan fingerprint is
+  *     bit-identical — the r9 `dedup_ngram_jaccard` ×2.3 regression class,
+  *     which fingerprint diffs are structurally blind to. The calibration
+  *     is one divisor per run ([[timeDivisor]]): the median of measured ÷
+  *     baseline over the time-eligible rows, clamped at a minimum of 1. A
+  *     slower box or a host-wide interference episode moves the divisor,
+  *     not the verdict; the clamp keeps a faster box (or a small-scale
+  *     smoke against the sf0.1 baseline) from tightening the gate.
+  *     Whole-system slowdowns are the bench total's job, not this rule's.
+  *     A row is time-eligible when its baseline median is at least
+  *     [[TimeFloorS]] (relative time on a 50 ms row is scheduler noise) and
+  *     its warm reps agreed within [[TimeSpreadCeiling]] (beyond it is box
+  *     contention, which the bench self-heal re-measures). Build pipelines
+  *     ride the same rule as `pipeline:<name>` rows — single-shot timings
+  *     with spread 0.0 and zeroed fingerprint columns that no rule reads.
   *
   * New queries (no baseline row) pass — the gate guards regressions, not
-  * coverage; the baseline is re-authored each round from the clean box.
+  * coverage; the baseline is re-authored from a full bench run.
   */
 object PlanGate {
 
   final case class Fp(hashExchanges: Int, cachedBroadcasts: Int)
 
-  /** Committed clean-box baseline row: fingerprint + warm median seconds
-    * (med < 0 = no time baseline, e.g. a hand-edited row).
-    *
-    * `cleanMedianS` (round 12, optional "cmed") is the DUAL-MEDIAN
-    * interference defense: round 11 re-authored the baseline while two rows
-    * sat on a host-interference plateau (×2-3 their clean cost), so the
-    * committed `med` carried the inflated numbers and a real CODE
-    * regression landing inside that allowance would have been invisible.
-    * When a re-author measures a row >[[EpochFamilyFactor]]× its last
-    * known clean cost, the clean value rides along as `cmed` and the time
-    * rule originally gated on min(med, cmed) — the inflated epoch could
-    * never widen the allowance.
-    *
-    * EPISODE RE-BASE (round 16): after a FIFTH consecutive multi-hour
-    * host-interference episode (r11, r13, r14, r15, r16 — each canaried
-    * on unmodified HEAD), gating on the clean floor produced a violations
-    * list that was 100% known-noise every round (9 local + 3 driver in
-    * r15, every one fingerprint-identical and episode-attributed) — a
-    * gate nobody can act on trains people to ignore it. The time rule now
-    * gates on the RE-AUTHORED median (`med` — the box's operative steady
-    * state), while the clean epoch stays carried as a HISTORICAL FLOOR:
-    * [[carryCleanMedians]] still propagates the tightest epoch across
-    * re-authors (so one quiet round auto-restores the tight gate), and
-    * [[infoLines]] keeps floor exceedances visible in the artifact as
-    * non-gating observations. The cost accepted: a real code regression
-    * that hides inside the episode allowance fires only as INFO until the
-    * box quiets — the price of an actionable violations list. A
-    * DELIBERATE slowdown (algorithm change) is the one case that must
-    * hand-remove the row's cmed — the hardened parse makes a bad edit
-    * loud. */
-  final case class Base(fp: Fp, medianS: Double, cleanMedianS: Double = -1.0) {
-    /** The median the time rule GATES on: the re-authored epoch (the
-      * box's operative steady state; episode re-base, round 16), CAPPED at
-      * [[EpisodeAllowanceCap]]× the historical clean floor (round 17, the
-      * r16 advice): an unbounded re-base let rows like
-      * retrieval_maxsim_topk (med 8.243, cmed 1.689) fire only above
-      * ~16.5 s — ~10× the clean cost — so a real multi-× code regression
-      * could ride the episode allowance indefinitely. The cap bounds how
-      * far any episode can widen the allowance while keeping the gate
-      * actionable on a noisy box. */
-    def gateMedianS: Double =
-      if (medianS < 0) cleanMedianS
-      else math.min(medianS, EpisodeAllowanceCap * floorMedianS)
-    /** The tightest epoch we know — the historical floor: what
-      * [[carryCleanMedians]] preserves across re-authors and
-      * [[infoLines]] reports exceedances against. */
-    def floorMedianS: Double =
-      if (cleanMedianS >= 0 && medianS >= 0) math.min(medianS, cleanMedianS)
-      else if (medianS >= 0) medianS
-      else cleanMedianS
-  }
+  /** Committed baseline row: fingerprint + warm median seconds (med < 0 =
+    * no time baseline, e.g. a hand-edited row). */
+  final case class Base(fp: Fp, medianS: Double)
 
   val TimeRegressionFactor = 2.0
   val TimeSpreadCeiling = 0.5
   val TimeFloorS = 0.3
-  /** A re-authored median beyond this factor of the last known clean epoch
-    * is treated as environment-elevated: the clean median is carried as
-    * "cmed" instead of being forgotten. Below it, the row is back in family
-    * and the current measurement becomes the (only) epoch. */
-  val EpochFamilyFactor = 1.3
-  /** Episode re-bases may widen the operative time allowance only to this
-    * factor of the historical clean floor (so the fire threshold is at most
-    * [[TimeRegressionFactor]]·this × the clean cost). Chosen above every
-    * observed episode plateau ratio that was genuinely environment (×2-3 in
-    * r11-r15) and below the unbounded ~10× the r16 re-base allowed. */
-  val EpisodeAllowanceCap = 4.0
 
   /** SERVE-AMORTIZATION PINS: (persisted-index serve, the in-session path
     * it amortizes). A persisted index whose serve costs more than the path
@@ -157,8 +103,7 @@ object PlanGate {
 
   private val Row =
     ("\"([A-Za-z0-9_:]+)\"\\s*:\\s*\\{\\s*\"hx\"\\s*:\\s*(\\d+)\\s*,\\s*" +
-      "\"cb\"\\s*:\\s*(\\d+)\\s*(?:,\\s*\"med\"\\s*:\\s*([0-9.eE+-]+)\\s*)?" +
-      "(?:,\\s*\"cmed\"\\s*:\\s*([0-9.eE+-]+)\\s*)?\\}").r
+      "\"cb\"\\s*:\\s*(\\d+)\\s*(?:,\\s*\"med\"\\s*:\\s*([0-9.eE+-]+)\\s*)?\\}").r
 
   /** Parse a baseline JSON of shape {"query":{"hx":N,"cb":N,"med":X},...}
     * ("med" optional — pre-round-10 baselines parse with no time channel).
@@ -169,13 +114,13 @@ object PlanGate {
     * notation (an unparseable med degrades to "no time baseline" for that
     * row instead of dropping the ROW from both channels), and the parsed
     * row count is asserted against a simple `"hx"` occurrence count — a
-    * hand-edited row that stops matching the row regex fails LOUDLY here
-    * rather than silently vanishing from the gate. */
+    * hand-edited row that stops matching the row regex — or a legacy row
+    * carrying a field the format no longer has — fails LOUDLY here rather
+    * than silently vanishing from the gate. */
   def parseBaseline(json: String): Map[String, Base] = {
     val rows = Row.findAllMatchIn(json).map { m =>
       m.group(1) -> Base(Fp(m.group(2).toInt, m.group(3).toInt),
-        Option(m.group(4)).flatMap(_.toDoubleOption).getOrElse(-1.0),
-        Option(m.group(5)).flatMap(_.toDoubleOption).getOrElse(-1.0))
+        Option(m.group(4)).flatMap(_.toDoubleOption).getOrElse(-1.0))
     }.toMap
     val expected = "\"hx\"".r.findAllMatchIn(json).size
     require(rows.size == expected,
@@ -185,46 +130,47 @@ object PlanGate {
   }
 
   /** Render current fingerprints + warm medians as baseline JSON (sorted,
-    * stable). Rows with no timing (e.g. failed) get no "med" field; rows
-    * with a carried clean epoch get a "cmed" field after it. */
+    * stable). Rows with no timing (e.g. failed) get no "med" field. */
   def render(current: Map[String, Fp],
-      medians: Map[String, Double] = Map.empty,
-      cleanMedians: Map[String, Double] = Map.empty): String =
+      medians: Map[String, Double] = Map.empty): String =
     current.toSeq.sortBy(_._1).map { case (name, fp) =>
       val med = medians.get(name).filter(_ >= 0)
         .map(m => s""","med":${math.round(m * 1000.0) / 1000.0}""").getOrElse("")
-      val cmed = cleanMedians.get(name).filter(_ >= 0)
-        .map(m => s""","cmed":${math.round(m * 1000.0) / 1000.0}""").getOrElse("")
-      s""""$name":{"hx":${fp.hashExchanges},"cb":${fp.cachedBroadcasts}$med$cmed}"""
+      s""""$name":{"hx":${fp.hashExchanges},"cb":${fp.cachedBroadcasts}$med}"""
     }.mkString("{\n", ",\n", "\n}")
 
-  /** Epoch carry for baseline re-authoring: for each row whose fresh median
-    * sits more than [[EpochFamilyFactor]]× above the previous baseline's
-    * tightest known epoch (min of its med/cmed), keep that clean epoch as
-    * the row's "cmed". A row measured back in family carries nothing — the
-    * fresh median IS the epoch (the auto-restore the round-11 verdict
-    * asked for). */
-  def carryCleanMedians(prev: Map[String, Base],
-      medians: Map[String, Double]): Map[String, Double] =
-    medians.flatMap { case (name, m) =>
-      prev.get(name).flatMap { b =>
-        val clean = b.floorMedianS
-        if (clean >= 0 && m >= 0 && m > EpochFamilyFactor * clean)
-          Some(name -> clean)
-        else None
-      }
-    }
+  /** A row the time rule reads: a baseline median at or above
+    * [[TimeFloorS]], a measured median, and warm reps that agreed within
+    * [[TimeSpreadCeiling]]. */
+  private def timeEligible(b: Base, med: Double, spread: Double): Boolean =
+    b.medianS >= TimeFloorS && med > 0 && spread <= TimeSpreadCeiling
 
-  /** The time rule's firing predicate, exposed so the bench can identify
-    * rows whose main-loop median WOULD fire and re-measure them
-    * back-to-back before the gate renders its verdict (round 17 — the
-    * serve-pin re-measure discipline ported to the time channel; a
-    * main-loop median is measured minutes from its neighbors, so an
-    * episode onset mid-run produced one-shot violations like r16's q18
-    * 13.43 s that the same session later measured at 1.16 s). */
-  def timeRegressionFires(b: Base, med: Double, spread: Double): Boolean =
-    b.gateMedianS >= TimeFloorS && med > 0 && spread <= TimeSpreadCeiling &&
-      med > TimeRegressionFactor * b.gateMedianS
+  /** The run's time calibration: the median of measured ÷ baseline over
+    * the time-eligible rows of `times` (`name -> (warm median s, warm
+    * spread)`), clamped at a minimum of 1; 1 when no row is eligible.
+    * Without the clamp a faster box, or a small-scale smoke against the
+    * sf0.1 baseline, would tighten the gate: replaying the committed r11 →
+    * r12 artifacts, the unclamped rule fired on `feature_robust_scale` and
+    * `graph_common_neighbors` (raw ×1.80 and ×1.93 at a run-wide 0.83),
+    * both back in family a round later. */
+  def timeDivisor(baseline: Map[String, Base],
+      times: Map[String, (Double, Double)]): Double = {
+    val ratios = times.toSeq.flatMap { case (name, (med, spread)) =>
+      baseline.get(name).collect {
+        case b if timeEligible(b, med, spread) => med / b.medianS
+      }
+    }.sorted
+    val n = ratios.size
+    if (n == 0) 1.0 else math.max(1.0, (ratios((n - 1) / 2) + ratios(n / 2)) / 2)
+  }
+
+  /** The time rule: a time-eligible row fires when measured ÷ baseline is
+    * more than [[TimeRegressionFactor]] × the run's [[timeDivisor]].
+    * Exposed so the bench can re-measure the rows whose main-loop median
+    * would fire, back-to-back, before the gate renders its verdict. */
+  def timeRegressionFires(b: Base, med: Double, spread: Double,
+      divisor: Double): Boolean =
+    timeEligible(b, med, spread) && med / b.medianS > TimeRegressionFactor * divisor
 
   /** The gate: violation messages for `current` vs `baseline` (empty =
     * clean).
@@ -233,13 +179,15 @@ object PlanGate {
     *  - `registeredLayouts`: layout names actually registered this session
     *    ([[graft.ops.Bucketing.registeredLayouts]])
     *  - `times`: per-row (warm median s, warm spread) from this run
+    *  - `divisor`: the run's [[timeDivisor]]
     */
   def violations(
       current: Map[String, Fp], baseline: Map[String, Base],
       designHx: Map[String, Int] = Map.empty,
       layoutRows: Map[String, String] = Map.empty,
       registeredLayouts: Set[String] = Set.empty,
-      times: Map[String, (Double, Double)] = Map.empty): Seq[String] = {
+      times: Map[String, (Double, Double)] = Map.empty,
+      divisor: Double): Seq[String] = {
     val cbRises = current.toSeq.sortBy(_._1).flatMap { case (name, fp) =>
       baseline.get(name).collect {
         case b if fp.cachedBroadcasts > b.fp.cachedBroadcasts =>
@@ -269,38 +217,13 @@ object PlanGate {
     val timeRegressions = times.toSeq.sortBy(_._1).flatMap {
       case (name, (med, spread)) =>
         baseline.get(name).collect {
-          case b if timeRegressionFires(b, med, spread) =>
-            val epoch = if (b.cleanMedianS >= 0 && b.cleanMedianS < b.medianS)
-              f" (clean floor ${b.cleanMedianS}%.2f s rides as cmed)"
-            else ""
-            f"$name: warm median ${med}%.2f s vs baseline ${b.gateMedianS}%.2f s$epoch" +
-              f" (>${TimeRegressionFactor}%.1fx at warm spread ${spread}%.2f" +
+          case b if timeRegressionFires(b, med, spread, divisor) =>
+            f"$name: warm median ${med}%.2f s vs baseline ${b.medianS}%.2f s" +
+              f" (×${med / b.medianS}%.2f raw, >${TimeRegressionFactor}%.1fx" +
+              f" the run divisor ${divisor}%.2f at warm spread ${spread}%.2f" +
               " — a pure-time regression the fingerprint diff cannot see)"
         }
     }
     cbRises ++ undeclared ++ unregistered ++ bucketedHx ++ timeRegressions
   }
-
-  /** NON-GATING floor observations (episode re-base, round 16): rows that
-    * pass the operative-epoch gate but exceed [[TimeRegressionFactor]]× the
-    * HISTORICAL FLOOR (the carried clean epoch). These keep the clean-box
-    * cost visible in the artifact while the box sits on an interference
-    * plateau — a regression hiding inside the episode allowance shows up
-    * here, and the first quiet round's re-author (auto-restore) promotes
-    * it back to a gating violation. Same spread/floor exemptions as the
-    * gate. */
-  def infoLines(baseline: Map[String, Base],
-      times: Map[String, (Double, Double)] = Map.empty): Seq[String] =
-    times.toSeq.sortBy(_._1).flatMap { case (name, (med, spread)) =>
-      baseline.get(name).collect {
-        case b if b.floorMedianS >= TimeFloorS && med > 0 &&
-            spread <= TimeSpreadCeiling &&
-            med <= TimeRegressionFactor * b.gateMedianS &&
-            med > TimeRegressionFactor * b.floorMedianS =>
-          f"$name: warm median ${med}%.2f s is >${TimeRegressionFactor}%.1fx" +
-            f" the clean floor ${b.floorMedianS}%.2f s (inside the carried" +
-            f" episode epoch ${b.gateMedianS}%.2f s — non-gating; a quiet" +
-            " round's re-author restores the tight gate)"
-      }
-    }
 }

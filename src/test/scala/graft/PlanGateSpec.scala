@@ -29,7 +29,12 @@ class PlanGateSpec extends AnyFunSuite {
       layoutRows: Map[String, String] = q18Layout,
       registered: Set[String] = layouts,
       times: Map[String, (Double, Double)] = Map.empty) =
-    PlanGate.violations(current, base, design, layoutRows, registered, times)
+    PlanGate.violations(current, base, design, layoutRows, registered, times,
+      PlanGate.timeDivisor(base, times))
+
+  // Every baseline row measured at its baseline median (ratio 1.0), low
+  // spread: the calibration backdrop a single-row injection runs against.
+  private val flat = baseline.map { case (k, b) => k -> (b.medianS, 0.1) }
 
   test("clean run (equal or improved fingerprints) passes") {
     assert(gate(baselineFp).isEmpty)
@@ -123,20 +128,21 @@ class PlanGateSpec extends AnyFunSuite {
   }
 
   test("time channel: >2x warm median at low spread fires; exemptions hold") {
-    val times = Map("plain_query" -> (2.5, 0.1)) // baseline med 1.0
+    val times = flat.updated("plain_query", (2.5, 0.1)) // baseline med 1.0
     val v = gate(baselineFp, times = times)
     assert(v.size === 1 && v.head.contains("pure-time regression"), v)
+    assert(v.head.contains("×2.50 raw") && v.head.contains("divisor 1.00"), v)
     // Same ratio at high warm spread = box contention, exempt.
-    assert(gate(baselineFp, times = Map("plain_query" -> (2.5, 0.8))).isEmpty)
+    assert(gate(baselineFp, times = flat.updated("plain_query", (2.5, 0.8))).isEmpty)
     // Tiny-row exemption: baseline under the floor never fires.
     val tinyBase = baseline.updated("plain_query", Base(Fp(5, 0), 0.05))
     assert(gate(baselineFp, tinyBase,
-      times = Map("plain_query" -> (0.2, 0.0))).isEmpty)
+      times = flat.updated("plain_query", (0.2, 0.0))).isEmpty)
     // Pre-round-10 baselines (no med field) have no time channel.
     val noMed = baseline.updated("plain_query", Base(Fp(5, 0), -1.0))
     assert(gate(baselineFp, noMed, times = times).isEmpty)
     // Within 2x passes.
-    assert(gate(baselineFp, times = Map("plain_query" -> (1.9, 0.1))).isEmpty)
+    assert(gate(baselineFp, times = flat.updated("plain_query", (1.9, 0.1))).isEmpty)
   }
 
   test("hardened parse: sci-notation med degrades to no-time-channel; " +
@@ -152,6 +158,11 @@ class PlanGateSpec extends AnyFunSuite {
     // throw, not silently vanish from both gate channels.
     val mangled = """{"q":{"hx":one,"cb":0},"r":{"hx":2,"cb":0}}"""
     assertThrows[IllegalArgumentException](PlanGate.parseBaseline(mangled))
+    // A legacy row still carrying the retired clean-epoch field must throw
+    // too, not parse with the field silently ignored.
+    val legacy = """{"q":{"hx":1,"cb":0,"med":3.12,"cmed":0.95},"r":{"hx":2,"cb":0}}"""
+    val e = intercept[IllegalArgumentException](PlanGate.parseBaseline(legacy))
+    assert(e.getMessage.contains("matched 1 of 2"), e.getMessage)
     // Pipeline time-channel rows (round 11) carry a colon in the name.
     val pl = PlanGate.parseBaseline(
       PlanGate.render(Map("pipeline:lloyd_kmeans" -> Fp(0, 0)),
@@ -165,87 +176,83 @@ class PlanGateSpec extends AnyFunSuite {
       ("pipeline:ivf_pq_promoted" -> Base(Fp(0, 0), 28.8))
     // Build doubled: fires via the shared time rule.
     val v = gate(baselineFp, base,
-      times = Map("pipeline:ivf_pq_promoted" -> (60.0, 0.0)))
+      times = flat.updated("pipeline:ivf_pq_promoted", (60.0, 0.0)))
     assert(v.size === 1 && v.head.startsWith("pipeline:ivf_pq_promoted:"), v)
     // Within 2x: clean. The zeroed fingerprint columns trigger nothing
     // (pipeline names never appear in `current`).
     assert(gate(baselineFp, base,
-      times = Map("pipeline:ivf_pq_promoted" -> (40.0, 0.0))).isEmpty)
+      times = flat.updated("pipeline:ivf_pq_promoted", (40.0, 0.0))).isEmpty)
   }
 
-  test("episode re-base (round 16): the gate takes the re-authored median; " +
-      "the clean floor stays visible as a NON-GATING info line") {
-    // The fifth-consecutive-episode policy: baseline re-authored on the
-    // interference plateau carries med 3.12 with the clean epoch 0.95
-    // riding as cmed. A 2.1 s measurement (2.2x the clean floor, inside
-    // the operative epoch) must NOT gate — for four rounds this class was
-    // 100% known-noise — but MUST surface as an info observation.
-    val b = baseline.updated("plain_query", Base(Fp(5, 0), 3.12, 0.95))
-    assert(gate(baselineFp, b, times = Map("plain_query" -> (2.1, 0.1))).isEmpty)
-    val info = PlanGate.infoLines(b, Map("plain_query" -> (2.1, 0.1)))
-    assert(info.size === 1 && info.head.contains("clean floor 0.95"), info)
-    // Below 2x of the clean floor: no gate, no info.
-    assert(gate(baselineFp, b, times = Map("plain_query" -> (1.8, 0.1))).isEmpty)
-    assert(PlanGate.infoLines(b, Map("plain_query" -> (1.8, 0.1))).isEmpty)
-    // Beyond 2x of the OPERATIVE epoch (a regression even by episode
-    // standards): gates, and the message names the carried floor.
-    val v = gate(baselineFp, b, times = Map("plain_query" -> (7.0, 0.1)))
-    assert(v.size === 1 && v.head.contains("clean floor 0.95"), v)
-    assert(PlanGate.infoLines(b, Map("plain_query" -> (7.0, 0.1))).isEmpty)
-    // A cmed LARGER than med (stale hand edit) still never loosens the
-    // gate: med is the operative epoch.
-    val b2 = baseline.updated("plain_query", Base(Fp(5, 0), 1.0, 5.0))
-    assert(gate(baselineFp, b2, times = Map("plain_query" -> (2.5, 0.1))).size === 1)
+  test("calibrated time rule: the run's median ratio is the divisor, clamped at 1") {
+    def scaled(f: Double) = flat.map { case (k, (m, sp)) => k -> (m * f, sp) }
+    // A uniformly x3 slower box fires nothing: the divisor absorbs it.
+    assert(PlanGate.timeDivisor(baseline, scaled(3.0)) === 3.0)
+    assert(gate(baselineFp, times = scaled(3.0)).isEmpty)
+    // One row at x2.1 among rows at x1.0 fires.
+    val v = gate(baselineFp, times = flat.updated("plain_query", (2.1, 0.1)))
+    assert(v.size === 1 && v.head.startsWith("plain_query:"), v)
+    // One row at x6.3 in a x3 run fires (6.3 > 2 x 3).
+    val v3 = gate(baselineFp, times = scaled(3.0).updated("plain_query", (6.3, 0.1)))
+    assert(v3.size === 1 && v3.head.contains("divisor 3.00"), v3)
+    // A uniformly x0.5 run (a faster box, or a small-scale smoke) never
+    // tightens the gate: the divisor clamps at 1, so x1.9 stays quiet.
+    assert(PlanGate.timeDivisor(baseline, scaled(0.5)) === 1.0)
+    assert(gate(baselineFp, times = scaled(0.5).updated("plain_query", (1.9, 0.1))).isEmpty)
+    // Rows the rule cannot read (warm spread over the ceiling) never move
+    // the divisor.
+    assert(PlanGate.timeDivisor(baseline, scaled(3.0).map { case (k, (m, _)) =>
+      k -> (m, 0.8) }) === 1.0)
   }
 
-  test("episode allowance is CAPPED relative to the clean floor (round 17): " +
-      "a re-base cannot widen the gate past EpisodeAllowanceCap x floor") {
-    // r16 state: maxsim_topk re-based at med 8.243 with floor 1.689 fired
-    // only above ~16.5 s (~10x clean). With the cap the operative gate is
-    // min(med, 4 x floor): a measurement at ~9 s — inside the old unbounded
-    // allowance, > 2x the capped gate — now FIRES.
-    val b = baseline.updated("plain_query", Base(Fp(5, 0), 8.243, 1.689))
-    assert(b("plain_query").gateMedianS === 4.0 * 1.689)
-    val v = gate(baselineFp, b, times = Map("plain_query" -> (14.0, 0.1)))
-    assert(v.size === 1 && v.head.contains("pure-time regression"), v)
-    // Below 2x the capped gate: non-gating (still an info-line floor
-    // exceedance, as before).
-    assert(gate(baselineFp, b, times = Map("plain_query" -> (13.0, 0.1))).isEmpty)
-    assert(PlanGate.infoLines(b,
-      Map("plain_query" -> (13.0, 0.1))).size === 1)
-    // A mild re-base (med within the cap) is unaffected: gate = med.
-    val mild = baseline.updated("plain_query", Base(Fp(5, 0), 3.12, 0.95))
-    assert(mild("plain_query").gateMedianS === 3.12)
-    // No carried floor: gate = med (the cap needs a floor to bite).
-    assert(baseline("plain_query").gateMedianS === 1.0)
-  }
-
-  test("the COMMITTED baseline: historical floors survive the episode " +
-      "re-base, and a 2x-of-gate slowdown still fires") {
-    // Reads the real PLAN_BASELINE.json. These rows spent rounds 11-15 on
-    // recurring interference plateaus. Under the round-16 episode re-base
-    // the GATE median is the re-authored (possibly in-episode) epoch, but
-    // the committed file must never LOSE the clean floor: floorMedianS
-    // stays within the epoch-carry family factor of the last known clean
-    // cost, so one quiet round's re-author auto-restores the tight gate.
+  test("the COMMITTED baseline: a 2.05x slowdown fires at divisor 1, med is quiet") {
+    // Reads the real PLAN_BASELINE.json. Both rows spent rounds 11-16 on
+    // host-interference plateaus; their committed med is what the gate
+    // read before the calibrated rule.
     val base = PlanGate.parseBaseline(java.nio.file.Files.readString(
       java.nio.file.Paths.get("PLAN_BASELINE.json")))
-    for ((row, r10clean) <- Seq("dedup_ngram_jaccard_exact" -> 0.951,
-                                "retrieval_maxsim_topk" -> 2.509)) {
-      val floor = base(row).floorMedianS
-      assert(floor >= PlanGate.TimeFloorS, s"$row: no time channel")
-      assert(floor <= PlanGate.EpochFamilyFactor * r10clean,
-        s"$row: historical floor $floor lost the clean epoch" +
-          s" (r10 clean $r10clean)")
-      val gateMed = base(row).gateMedianS
+    for ((row, med) <- Seq("dedup_ngram_jaccard_exact" -> 3.272,
+                           "retrieval_maxsim_topk" -> 8.312)) {
+      assert(base(row).medianS === med)
       val v = PlanGate.violations(Map.empty, base,
-        times = Map(row -> (2.05 * gateMed, 0.1)))
+        times = Map(row -> (2.05 * med, 0.1)), divisor = 1.0)
       assert(v.size === 1 && v.head.startsWith(s"$row:"), v)
-      // A measurement back at the clean floor is quiet on BOTH channels.
       assert(PlanGate.violations(Map.empty, base,
-        times = Map(row -> (floor, 0.1))).isEmpty)
-      assert(PlanGate.infoLines(base, Map(row -> (floor, 0.1))).isEmpty)
+        times = Map(row -> (med, 0.1)), divisor = 1.0).isEmpty)
     }
+  }
+
+  test("replay of BENCH_LOCAL r08-r17 round over round fires only the pinned rows") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    // (baseline, times) of one artifact: every timed query row and every
+    // pipeline build (single-shot, spread 0).
+    def round(r: Int) = {
+      val root = json.readTree(new java.io.File(f"BENCH_LOCAL_r$r%02d.json"))
+      val qs = root.get("queries").properties.asScala.collect {
+        case e if e.getValue.has("median_s") => e.getKey ->
+          (e.getValue.get("median_s").asDouble, e.getValue.get("warm_spread").asDouble)
+      }
+      val pls = root.get("pipelines_s").properties.asScala
+        .map(e => s"pipeline:${e.getKey}" -> (e.getValue.asDouble, 0.0))
+      (qs ++ pls).toMap
+    }
+    val fired = (9 to 17).map { r =>
+      val base = round(r - 1).map { case (k, (m, _)) => k -> Base(Fp(0, 0), m) }
+      val times = round(r)
+      val v = PlanGate.violations(Map.empty, base, times = times,
+        divisor = PlanGate.timeDivisor(base, times))
+      r -> v.map(_.split(": ").head).toSet
+    }.toMap
+    val ngram = Set("dedup_ngram_jaccard", "dedup_ngram_jaccard_exact")
+    val expected = Map(
+      9 -> ngram,
+      11 -> (ngram ++ Set("retrieval_maxsim_topk",
+        "tpch_q11_important_suppliers", "tpch_q12_priority_lines")),
+      13 -> (ngram ++ Set("retrieval_maxsim_ivf",
+        "retrieval_maxsim_ivf_persisted", "retrieval_maxsim_topk")),
+      15 -> Set("s10_merge_sink")).withDefaultValue(Set.empty[String])
+    for (r <- 9 to 17) assert(fired(r) === expected(r), s"r$r")
   }
 
   test("the COMMITTED baseline has one time-gate row per shared build, " +
@@ -260,33 +267,6 @@ class PlanGateSpec extends AnyFunSuite {
     assert(rows.size === 41)
     assert(names.toSet === rows,
       s"no baseline row: ${names.toSet -- rows}; no build: ${rows -- names}")
-  }
-
-  test("epoch carry on re-author: elevated rows keep the clean median, " +
-      "in-family rows auto-restore, carried epochs propagate") {
-    val prev = Map(
-      "elevated" -> Base(Fp(1, 0), 0.95),        // clean epoch, about to inflate
-      "carried"  -> Base(Fp(1, 0), 3.1, 0.95),   // already carrying
-      "flat"     -> Base(Fp(1, 0), 1.0))
-    val fresh = Map(
-      "elevated" -> 3.0,  // > 1.3x of 0.95 -> carry 0.95
-      "carried"  -> 2.8,  // still > 1.3x of min(3.1, 0.95) -> keep carrying 0.95
-      "flat"     -> 1.1,  // in family -> no cmed
-      "new_row"  -> 5.0)  // no prior epoch -> nothing to carry
-    assert(PlanGate.carryCleanMedians(prev, fresh) ===
-      Map("elevated" -> 0.95, "carried" -> 0.95))
-    // Auto-restore: the carried row re-measures in family -> cmed dropped.
-    assert(PlanGate.carryCleanMedians(prev, Map("carried" -> 1.0)) === Map.empty)
-  }
-
-  test("baseline render/parse round-trips cmed rows") {
-    val fp = Map("q" -> Fp(2, 1))
-    val rendered = PlanGate.render(fp, Map("q" -> 3.061), Map("q" -> 1.181))
-    assert(PlanGate.parseBaseline(rendered) ===
-      Map("q" -> Base(Fp(2, 1), 3.061, 1.181)))
-    // cmed-less rows are unchanged by the widened regex.
-    assert(PlanGate.parseBaseline(PlanGate.render(fp, Map("q" -> 3.061))) ===
-      Map("q" -> Base(Fp(2, 1), 3.061)))
   }
 
   test("serve pins: the 1.25x ratio and the 0.3 s gap are both strict; " +
