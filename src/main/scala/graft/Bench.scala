@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, PlanGate, PlanNodes, ScanMetrics}
@@ -10,8 +11,10 @@ import graft.ops.AnnSweep.overlap
 /** The bench gates: per-row warm medians and plan fingerprints against the
   * committed baseline (`PLAN_BASELINE.json`, rules in [[PlanGate]]), the
   * serve-amortization pins, the scan audit and the recall@10 rows. Every
-  * timing goes through [[Runs]]; the evidence sweeps (operating points,
-  * segment counts, probe axis, BPE) ride [[ScaleSweep]]'s 1× pass. */
+  * timing goes through [[Runs]]: a row's build, then [[Runs.materialize]]
+  * on what it built, and the fingerprint and scan audit read the plan of
+  * that timed execution. The evidence sweeps (operating points, segment
+  * counts, probe axis, BPE) ride [[ScaleSweep]]'s 1× pass. */
 object Bench {
 
   /** MEDIANS-OF-3: single-shot timings proved untrustworthy (a contended
@@ -33,53 +36,71 @@ object Bench {
       Runs.frontPipelines(spark, sfDir, "BENCH_DETAIL", SparkEntry.pipelines)
     def failure(row: String, e: Throwable): Unit =
       println(s"BENCH_DETAIL $row FAILED: ${Runs.cause(e)}")
-    // One row timed `reps` times: fn(spark, dir) then count() — the action
-    // PLAN_BASELINE's time channel was authored on.
+    // One row timed `reps` times: fn(spark, dir), then its whole result
+    // materialized. Also returns the last rep's frame, whose executed plan
+    // is the final adaptive plan that ran.
     def measure(name: String, reps: Int) =
-      Runs.measure(reps)(selected(name)(spark, sfDir))(_.count())
-        .map(_._1)
+      Runs.measure(reps)(selected(name)(spark, sfDir)) { df => Runs.materialize(df); df }
+
+    // SCAN AUDIT: every index-serving row's "pruned by design" claim as
+    // per-run data. Every file scan of the row's timed execution prints
+    // files read vs the layout's on-disk total and staticFilesNum (live
+    // DPP). Plan-string pins stayed green while two pruning claims were
+    // decorative at runtime; executed metrics cannot.
+    // (row, layout tail, files, status, staticFilesNum, on-disk files)
+    val auditRows = scala.collection.mutable.Buffer
+      .empty[(String, String, Long, String, Long, Long)]
+    val scanAudit = Set("ann_ivf_persisted", "ann_ivf_kmeans_persisted",
+      "ann_ivf_pq_persisted", "ann_ivf_pq_append", "ann_ivf_pq_promoted",
+      "retrieval_hybrid_served", "retrieval_maxsim_ivf_fwd",
+      "retrieval_maxsim_ivf_persisted", "text_bm25_impact_topk",
+      "tpch_q18_bucketed")
+    def audit(name: String, df: DataFrame): Unit = {
+      val seen = scala.collection.mutable.Set.empty[String]
+      for (f <- ScanMetrics.scans(df.queryExecution.executedPlan)) {
+        val root = f.relation.location.rootPaths.headOption
+          .map(_.toString).getOrElse("?")
+        val local = root.stripPrefix("file:")
+        if (local.startsWith("/tmp/") && seen.add(root)) {
+          def m(n: String) = f.metrics.get(n).map(_.value).getOrElse(-1L)
+          val total = ScanMetrics.parquetFilesUnder(local)
+          val tail = local.split('/').takeRight(2).mkString("/")
+          // numFiles <= 0 on a BUCKETED layout scan is the catalog relation
+          // cache: the table's file listing is computed once per session,
+          // so its driver metrics belong to the layout-build execution. The
+          // scan itself ran; the relation's own listing is exactly the file
+          // set a bucketed serve reads ("listed").
+          val nf = m("numFiles")
+          val (filesVal, status) =
+            if (nf > 0) (nf, "executed")
+            else (f.relation.location.inputFiles
+              .count(_.endsWith(".parquet")).toLong, "listed")
+          println(s"BENCH_DETAIL scan_audit $name $tail " +
+            s"files=$filesVal($status) staticDpp=${m("staticFilesNum")} " +
+            s"onDisk=$total")
+          auditRows += ((name, tail, filesVal, status, m("staticFilesNum"), total))
+        }
+      }
+    }
 
     // Fixed (sorted) execution order pins the session's cold-start costs
     // (codegen/JIT of the first big expression trees) to the same rows
-    // every run. The PLAN FINGERPRINT comes from the last rep's finalized
-    // plan.
+    // every run.
     val fingerprints = scala.collection.mutable.Map.empty[String, Seq[(String, Int)]]
     val results: Map[String, Either[Throwable, Runs.Measured]] =
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val r = Runs.measure(Reps)(fn(spark, sfDir)) { df => df.count(); df }
+      selected.keys.toSeq.sorted.map { name =>
+        val r = measure(name, Reps)
         r.foreach { case (_, df) =>
           try fingerprints(name) = PlanNodes.fingerprint(df)
           catch { case e: Throwable => failure(s"$name fingerprint", e) }
+          if (scanAudit(name)) try audit(name, df)
+          catch { case e: Throwable => failure(s"scan_audit $name", e) }
         }
         name -> r.map(_._1)
       }.toMap
     def ok(rows: Map[String, Either[Throwable, Runs.Measured]]) =
       rows.collect { case (k, Right(m)) => k -> m }
-    val resultsOk = ok(results)
-    def noisy(m: Runs.Measured) =
-      m.warmSpread > PlanGate.TimeSpreadCeiling && m.medianS > PlanGate.TimeFloorS
-    // SELF-HEAL noisy rows: a row whose warm reps disagreed by more than
-    // the time gate's spread ceiling was hit by box contention mid-run.
-    // Re-measure the 8 largest such rows with 5 fresh reps. A heal REPLACES
-    // the measurement only when it moved the median >20% lower: contention
-    // only inflates, and a retry that fails or lands on the original median
-    // keeps the original successful measurement.
-    val healNames = resultsOk.toSeq.collect {
-      case (name, m) if noisy(m) => (name, m.medianS)
-    }.sortBy(-_._2).take(8).map(_._1).sorted
-    val healed = healNames.map(n => n -> measure(n, 5)).toMap
-    val healApplied: Map[String, Runs.Measured] = healed.flatMap {
-      case (name, Right(m)) if m.medianS < 0.8 * resultsOk(name).medianS =>
-        Some(name -> m)
-      case (name, Right(m)) =>
-        println(f"BENCH_DETAIL heal_noop $name orig=${resultsOk(name).medianS}%.3f " +
-          f"retry=${m.medianS}%.3f (kept original)")
-        None
-      case (name, Left(e)) =>
-        failure(name, e)
-        println(s"BENCH_DETAIL heal_noop $name retry failed (kept original)")
-        None
-    }
+    val mainTimes = ok(results).map { case (k, m) => k -> (m.medianS, m.warmSpread) }
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
     def pairs(name: String, a: String, b: String): Set[(Long, Long)] =
       selected(name)(spark, sfDir).select(a, b).collect()
@@ -100,7 +121,6 @@ object Bench {
     val recall: Seq[(String, Double)] =
       if (!lifecycleServes.forall(selected.contains)) Seq.empty
       else try {
-        import org.apache.spark.sql.DataFrame
         def truth(corpus: DataFrame, deleted: Boolean = false,
             appended: Boolean = false): Set[(Long, Long)] = {
           val delta = corpus.filter(col("vec_id") % 10 === 3).select(
@@ -155,36 +175,58 @@ object Bench {
     recallAll.foreach { case (k, v) =>
       println(f"BENCH_DETAIL recall@10:$k $v%.3f")
     }
-    // SECOND-CHANCE HEAL: the first heal runs back-to-back with the
-    // contended measurement, so an interference episode re-measures inside
-    // itself. Rows whose healed spread still exceeds the threshold get one
-    // more 5-rep attempt here, minutes later; it must beat the best
-    // successful measurement so far by the same >20% rule.
-    def bestSoFar(name: String): Double = math.min(resultsOk(name).medianS,
-      healApplied.get(name).map(_.medianS).getOrElse(Double.MaxValue))
-    val stillNoisy = ok(healed).collect { case (n, m) if noisy(m) => n }.toSeq.sorted
-    val secondHeal: Map[String, Runs.Measured] = stillNoisy.flatMap { name =>
-      measure(name, 5) match {
-        case Left(e) => failure(name, e); None
-        case Right(m) =>
-          println(f"BENCH_DETAIL second_heal $name first=${bestSoFar(name)}%.3f " +
-            f"retry=${m.medianS}%.3f spread=${m.warmSpread}%.2f")
-          if (m.medianS < 0.8 * bestSoFar(name)) Some(name -> m) else None
-      }
-    }.toMap
-    val finalResults = results ++ (healApplied ++ secondHeal).map {
-      case (k, m) => k -> Right(m) }
+    val pipelineGateTimes = pipelineTimes.map { case (k, v) => k -> (v, 0.0) }.toMap
+    val baselinePath = Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_PLAN_BASELINE", "PLAN_BASELINE.json"))
+    // The plan gate runs on a full run against the committed baseline, with
+    // one divisor per run from the main-loop times: it picks the rows to
+    // re-measure and gives the verdict. Pipeline rows ride the same time
+    // rule as `pipeline:<name>` rows, single-shot by design (spread 0.0,
+    // always time-eligible, fingerprint columns never read). A gate-
+    // machinery failure (e.g. a mangled baseline row tripping
+    // parseBaseline's require) must SURFACE as a violation, not read as a
+    // clean run with every channel silently disabled.
+    val gate: Option[Either[String, (Map[String, PlanGate.Base], Double)]] =
+      if (Runs.subset) None
+      else if (!Files.exists(baselinePath)) {
+        println(s"[bench] no plan baseline at $baselinePath - gate skipped")
+        None
+      } else Some(try {
+        val base = PlanGate.parseBaseline(Files.readString(baselinePath))
+        val divisor = PlanGate.timeDivisor(base, mainTimes ++ pipelineGateTimes)
+        println(f"BENCH_DETAIL plan_gate time_divisor $divisor%.3f")
+        Right((base, divisor))
+      } catch { case e: Throwable =>
+        println(s"[bench] plan gate failed: ${Runs.cause(e)}")
+        Left(Runs.cause(e))
+      })
+    val (base, divisor) = gate.flatMap(_.toOption).getOrElse((Map.empty[String, PlanGate.Base], 1.0))
+    // THE RE-MEASURE PASS, once, minutes after the main loop: the rows
+    // PlanGate.remeasure picks re-run medians-of-Reps and keep the lower
+    // median. Contention only inflates, so a retry that fails or lands
+    // higher keeps the main-loop measurement. Pipeline rows are
+    // session-cached builds (a re-run is a no-op), so they are not picked.
+    val replaced: Map[String, Runs.Measured] =
+      PlanGate.remeasure(mainTimes, base, divisor).flatMap { name =>
+        val main = mainTimes(name)._1
+        val detail = f"BENCH_DETAIL remeasure $name main=$main%.3f"
+        measure(name, Reps) match {
+          case Left(e) =>
+            failure(name, e)
+            println(s"$detail retry=failed -> kept")
+            None
+          case Right((m, _)) =>
+            val lower = m.medianS < main
+            println(f"$detail retry=${m.medianS}%.3f -> ${if (lower) "replaced" else "kept"}")
+            if (lower) Some(name -> m) else None
+        }
+      }.toMap
+    val finalResults = results ++ replaced.map { case (k, m) => k -> Right(m) }
     val finalOk = ok(finalResults)
     val gateTimes = finalOk.map { case (k, m) => k -> (m.medianS, m.warmSpread) }
     val fpNums = fingerprints.map { case (k, fp) =>
       k -> PlanGate.Fp(fp.toMap.apply("hashExchanges"), fp.toMap.apply("cachedBroadcast"))
     }.toMap
-    // PIPELINE time channel: builds ride the same time rule as
-    // `pipeline:<name>` rows — single-shot by design (spread 0.0, always
-    // time-eligible), fingerprint columns zero and never read.
-    val pipelineGateTimes = pipelineTimes.map { case (k, v) => k -> (v, 0.0) }.toMap
-    val baselinePath = Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_BASELINE", "PLAN_BASELINE.json"))
     // SPARK_GRAFT_WRITE_PLAN_BASELINE=<path> re-authors the baseline from
     // this run.
     sys.env.get("SPARK_GRAFT_WRITE_PLAN_BASELINE").foreach { p =>
@@ -194,149 +236,22 @@ object Bench {
       println(s"[bench] wrote plan baseline $p " +
         s"(${fpNums.size} query + ${plFp.size} pipeline rows)")
     }
-    val (gateViolations, gateDivisor): (Seq[String], Option[Double]) =
-      if (Runs.subset) (Seq.empty, None)
-      else try {
-        if (!Files.exists(baselinePath)) {
-          println(s"[bench] no plan baseline at $baselinePath - gate skipped")
-          (Seq.empty, None)
-        } else {
-          val base = PlanGate.parseBaseline(Files.readString(baselinePath))
-          // One divisor per run, from the main-loop times: it picks the
-          // rows to re-measure and gives the verdict.
-          val divisor = PlanGate.timeDivisor(base, gateTimes ++ pipelineGateTimes)
-          println(f"BENCH_DETAIL plan_gate time_divisor $divisor%.3f")
-          def fires(name: String, med: Double, spread: Double) =
-            base.get(name).exists(b => PlanGate.timeRegressionFires(b, med, spread, divisor))
-          // TIME-VIOLATION RE-MEASURE: a main-loop median is measured
-          // minutes from its baseline twin, so an episode onset mid-run
-          // ships one-shot violations. Any QUERY row whose median would
-          // fire is re-run back-to-back, medians-of-3, and the gate
-          // verdicts on the LOWER median. Pipeline rows are session-cached
-          // builds (a re-run is a no-op), so their firings stand as
-          // one-shots with a printed note.
-          pipelineGateTimes.toSeq.sortBy(_._1).foreach { case (name, (med, spread)) =>
-            if (fires(name, med, spread))
-              println(s"BENCH_DETAIL time_violation_note $name fires as a " +
-                "one-shot (session-cached pipeline build - not " +
-                "re-measurable in-run)")
-          }
-          val suspects = gateTimes.toSeq.sortBy(_._1).collect {
-            case (name, (med, spread)) if fires(name, med, spread) => name
-          }
-          val reTimes: Map[String, (Double, Double)] = suspects.flatMap { name =>
-            val orig = gateTimes(name)._1
-            measure(name, 3) match {
-              case Left(e) =>
-                failure(name, e)
-                println(s"BENCH_DETAIL time_violation_remeasure $name " +
-                  "retry failed - main-loop verdict stands")
-                None
-              case Right(m) if m.medianS < orig =>
-                val verdict =
-                  if (fires(name, m.medianS, m.warmSpread)) "CONFIRMED" else "cleared"
-                println(f"BENCH_DETAIL time_violation_remeasure $name " +
-                  f"main=$orig%.2f retry_med3=${m.medianS}%.2f " +
-                  f"spread=${m.warmSpread}%.2f -> $verdict")
-                Some(name -> ((m.medianS, m.warmSpread)))
-              case Right(m) =>
-                println(f"BENCH_DETAIL time_violation_remeasure $name " +
-                  f"main=$orig%.2f retry_med3=${m.medianS}%.2f -> CONFIRMED " +
-                  "(retry not lower)")
-                None
-            }
-          }.toMap
-          (PlanGate.violations(fpNums, base,
-            graft.queries.Q.designHxMap(SparkEntry.allQueries),
-            graft.queries.Q.layoutRowsMap(SparkEntry.allQueries),
-            graft.ops.Bucketing.registeredLayouts,
-            gateTimes ++ pipelineGateTimes ++ reTimes, divisor),
-            Some(divisor))
-        }
-      } catch {
-        // A gate-machinery failure (e.g. a mangled baseline row tripping
-        // parseBaseline's require) must SURFACE as a violation, not read as
-        // a clean run with every channel silently disabled.
-        case e: Throwable =>
-          println(s"[bench] plan gate failed: ${Runs.cause(e)}")
-          (Seq(s"plan_gate_error: ${Runs.cause(e)}"), None)
-      }
-    // SCAN AUDIT: every index-serving row's "pruned by design" claim as
-    // per-run data — one extra execution per audited row (collect, so the
-    // row's OWN plan runs and carries metrics), then every file scan of the
-    // executed plan prints files read vs the layout's on-disk total and
-    // staticFilesNum (live DPP). Plan-string pins stayed green while two
-    // pruning claims were decorative at runtime; executed metrics cannot.
-    // (row, layout tail, files, status, staticFilesNum, on-disk files)
-    val auditRows = scala.collection.mutable.Buffer
-      .empty[(String, String, Long, String, Long, Long)]
-    val scanAudit = Seq("ann_ivf_persisted", "ann_ivf_kmeans_persisted",
-      "ann_ivf_pq_persisted", "ann_ivf_pq_append", "ann_ivf_pq_promoted",
-      "retrieval_hybrid_served", "retrieval_maxsim_ivf_fwd",
-      "retrieval_maxsim_ivf_persisted", "text_bm25_impact_topk",
-      "tpch_q18_bucketed")
-    for (name <- scanAudit if selected.contains(name)) try {
-      val df = selected(name)(spark, sfDir)
-      df.collect()
-      val seen = scala.collection.mutable.Set.empty[String]
-      for (f <- ScanMetrics.scans(df.queryExecution.executedPlan)) {
-        val root = f.relation.location.rootPaths.headOption
-          .map(_.toString).getOrElse("?")
-        val local = root.stripPrefix("file:")
-        if (local.startsWith("/tmp/") && seen.add(root)) {
-          def m(n: String) = f.metrics.get(n).map(_.value).getOrElse(-1L)
-          val total = ScanMetrics.parquetFilesUnder(local)
-          val tail = local.split('/').takeRight(2).mkString("/")
-          // numFiles <= 0 on a BUCKETED layout scan is the catalog relation
-          // cache: the table's file listing is computed once per session,
-          // so its driver metrics belong to the layout-build execution. The
-          // scan itself ran; the relation's own listing is exactly the file
-          // set a bucketed serve reads ("listed").
-          val nf = m("numFiles")
-          val (filesVal, status) =
-            if (nf > 0) (nf, "executed")
-            else (f.relation.location.inputFiles
-              .count(_.endsWith(".parquet")).toLong, "listed")
-          println(s"BENCH_DETAIL scan_audit $name $tail " +
-            s"files=$filesVal($status) staticDpp=${m("staticFilesNum")} " +
-            s"onDisk=$total")
-          auditRows += ((name, tail, filesVal, status, m("staticFilesNum"), total))
-        }
-      }
-    } catch { case e: Throwable => failure(s"scan_audit $name", e) }
-    // SERVE-AMORTIZATION PINS (pairs and rule in PlanGate). The main-loop
-    // medians of a pair are measured minutes apart, so an episode onset
-    // between them skews the ratio: a firing pair is re-run back-to-back,
-    // both rows medians-of-3, and the verdict is on those; a cleared firing
-    // is recorded as detail, not hidden.
-    def med3(name: String): Option[Double] = measure(name, 3) match {
-      case Left(e) => failure(name, e); None
-      case Right(m) => Some(m.medianS)
+    val gateViolations = gate.fold(Seq.empty[String]) {
+      case Left(cause) => Seq(s"plan_gate_error: $cause")
+      case Right(_) => PlanGate.violations(fpNums, base,
+        graft.queries.Q.designHxMap(SparkEntry.allQueries),
+        graft.queries.Q.layoutRowsMap(SparkEntry.allQueries),
+        graft.ops.Bucketing.registeredLayouts,
+        gateTimes ++ pipelineGateTimes, divisor)
     }
-    val servePins: Seq[String] = PlanGate.ServePins.flatMap { case (per, ins) =>
-      (finalOk.get(per).map(_.medianS), finalOk.get(ins).map(_.medianS)) match {
-        case (Some(p), Some(i)) if PlanGate.servePinFires(p, i) =>
-          (med3(per), med3(ins)) match {
-            case (Some(p2), Some(i2)) if PlanGate.servePinFires(p2, i2) =>
-              Some(f"serve_pin: $per $p2%.2fs > 1.25x $ins $i2%.2fs" +
-                f" (per-pair medians-of-3; main-loop $p%.2f vs $i%.2f)")
-            case (Some(p2), Some(i2)) =>
-              println(f"BENCH_DETAIL serve_pin_cleared $per $p2%.2fs vs" +
-                f" $ins $i2%.2fs (main-loop firing $p%.2f > 1.25x" +
-                f" $i%.2f was adjacent-measurement skew)")
-              None
-            case _ =>
-              Some(f"serve_pin: $per $p%.2fs > 1.25x $ins $i%.2fs" +
-                " (re-measure failed; main-loop verdict stands)")
-          }
-        case _ => None
-      }
-    }
-    val allViolations = gateViolations ++ servePins
+    // SERVE-AMORTIZATION PINS (pairs and rule in PlanGate), on the final
+    // medians: a firing pair's both rows were re-measured above.
+    val allViolations = gateViolations ++
+      PlanGate.servePinViolations(finalOk.map { case (k, m) => k -> m.medianS })
     allViolations.foreach(v => println(s"BENCH_DETAIL plan_gate VIOLATION $v"))
     // Full per-query detail for humans (NOT the machine-read line).
     pipelineTimes.foreach { case (k, v) => println(f"BENCH_DETAIL $k $v%.3f") }
-    val healedNames = (healApplied.keySet ++ secondHeal.keySet).toSeq.sorted
+    val healedNames = replaced.keySet.toSeq.sorted
     def fpJson(k: String) = fingerprints.get(k)
       .map(_.map { case (n, v) => s""""$n":$v""" }.mkString(",")).getOrElse("")
     finalResults.toSeq.sortBy(_._2.fold(_ => 0.0, -_.medianS)).foreach {
@@ -354,7 +269,7 @@ object Bench {
     val rec = recallAll.map { case (k, v) => s""""$k":${r3(v)}""" }
       .mkString("{", ",", "}")
     // Full machine-readable detail (SPARK_GRAFT_BENCH_OUT=<file>): every
-    // row's median/spread, the median rep's build and count() seconds
+    // row's median/spread, the median rep's build and materialize seconds
     // (median_s = build_s + run_s, the sum the time gate reads), its
     // compiled classes and the plan fingerprint — deliberately NOT on
     // stdout (the tail budget below).
@@ -379,7 +294,7 @@ object Bench {
       Files.writeString(Paths.get(out),
         s"""{"reps":$Reps,"sf":"$sfDir","failed":$failedJson,"pipelines_s":$pls,"recall_at_10":$rec,""" +
           s""""plan_gate_violations":${allViolations.map(jq).mkString("[", ",", "]")},""" +
-          s""""plan_gate_divisor":${gateDivisor.fold("null")(d => r3(d).toString)},""" +
+          s""""plan_gate_divisor":${gate.flatMap(_.toOption).fold("null")(g => r3(g._2).toString)},""" +
           s""""scan_audit":$audit,"queries":{$rows}}""")
       println(s"[bench] wrote $out")
     }

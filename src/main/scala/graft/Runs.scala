@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The one run loop of the harnesses (Bench, ScaleSweep, Verify,
   * StressBench). A row is a build — `fn(spark, dir)`, which for many rows
@@ -64,6 +65,18 @@ object Runs {
       (Measured(med.copy(result = ()), spread, runs.map(_.totalS)),
         runs.last.result)
     }
+  }
+
+  /** The harnesses' timed action: runs `df`'s own plan to completion under
+    * a SQL execution id, every row of every output column, as a caller's
+    * action does, and returns the row count. `count()` would plan a new
+    * aggregate that Catalyst prunes to the columns it needs, and leave
+    * `df`'s plan unexecuted; after this, `df.queryExecution.executedPlan`
+    * is the final adaptive plan that ran, and its scans carry their
+    * metrics. */
+  def materialize(df: DataFrame): Long = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("materialize"))(qe.executedPlan.execute().count())
   }
 
   /** First line of a failure's message, with its class. */

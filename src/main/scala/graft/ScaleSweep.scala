@@ -357,7 +357,7 @@ object ScaleSweep {
         SparkEntry.pipelines.filter { case (name, _) => factor <= 10 || linearPipelines(name) })
       failed ++= pipelineFailures
       val queries = names.flatMap { name =>
-        row(name, dir)(SparkEntry.queries(name)(spark, dir))(_.count())
+        row(name, dir)(SparkEntry.queries(name)(spark, dir))(Runs.materialize)
           .map(name -> _.totalS)
       }
       // kc AXIS for the token-IVF serve (§9's sizing claim: kc scales with
@@ -398,11 +398,9 @@ object ScaleSweep {
         Seq(32, 128).map(b => s"maxsim_fwd_b$b" -> b).filter(r => Runs.picked(r._1))
           .flatMap { case (name, b) =>
             untimed(name, dir)(SimilarityQ.maxsimFwdLayoutAtBuckets(spark, dir, b))
-              // collect, not count: count() spawns a NEW QueryExecution, so
-              // df's own plan (whose scan metrics we read) would never run.
               .flatMap(layout => row(name, dir)(
                 SimilarityQ.maxsimFwdServeAtBuckets(spark, dir, layout, b)) { df =>
-                df.collect(); df })
+                Runs.materialize(df); df })
               .map { r =>
                 graft.engine.ScanMetrics.forPath(r.result, "graft_msfwd_b").foreach {
                   // staticFilesSize exists only when a live dynamic filter
@@ -460,7 +458,7 @@ object ScaleSweep {
     // size" as a measurement.
     section("bm25_seg_sweep") {
       Seq(0, 1, 2, 3).map(nseg => s"nseg$nseg" -> Seq("serve_s" ->
-        min2(CorpusQ.bm25MultisegServeAt(spark, sfDir, nseg))(_.count())))
+        min2(CorpusQ.bm25MultisegServeAt(spark, sfDir, nseg))(Runs.materialize)))
     }
     // PROBE AXIS: serve cost vs WORKLOAD size at fixed corpus for the three
     // persisted serves — the axis the scale passes hold fixed. Expected:
@@ -474,7 +472,7 @@ object ScaleSweep {
         Seq(10, 100, 1000).map(n => math.max(1, total / n) -> n)
       }
       def point(fam: String, n: Int)(serve: => DataFrame) =
-        s"$fam:q$n" -> Seq("serve_s" -> min2(serve)(_.count()))
+        s"$fam:q$n" -> Seq("serve_s" -> min2(serve)(Runs.materialize))
       pts("embeddings").map { case (mod, n) =>
         point("ivf_dense", n)(TrainQ.kmeansServeAtProbes(spark, sfDir, mod)) } ++
       pts("documents").take(2).map { case (mod, n) =>
@@ -561,7 +559,7 @@ object ScaleSweep {
       .filter(SparkEntry.queries.contains)
     // A re-measure that fails falls back to the single-shot ratio.
     def median3(dir: String, name: String): Option[Double] =
-      Runs.measure(3)(SparkEntry.queries(name)(spark, dir))(_.count()) match {
+      Runs.measure(3)(SparkEntry.queries(name)(spark, dir))(Runs.materialize) match {
         case Right((m, _)) => Some(m.medianS)
         case Left(e) =>
           println(s"[sweep] median3 FAILED for $name in $dir: ${Runs.cause(e)}" +

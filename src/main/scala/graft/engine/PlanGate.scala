@@ -46,7 +46,7 @@ package graft.engine
   *     A row is time-eligible when its baseline median is at least
   *     [[TimeFloorS]] (relative time on a 50 ms row is scheduler noise) and
   *     its warm reps agreed within [[TimeSpreadCeiling]] (beyond it is box
-  *     contention, which the bench self-heal re-measures). Build pipelines
+  *     contention, which the bench re-measures, see [[remeasure]]). Build pipelines
   *     ride the same rule as `pipeline:<name>` rows — single-shot timings
   *     with spread 0.0 and zeroed fingerprint columns that no rule reads.
   *
@@ -93,6 +93,17 @@ object PlanGate {
   def servePinFires(persistedS: Double, inSessionS: Double): Boolean =
     persistedS > inSessionS * ServePinRatio &&
       persistedS - inSessionS > TimeFloorS
+
+  /** The serve pins that fire on `medians` (row -> warm median s). */
+  def firingPins(medians: Map[String, Double]): Seq[(String, String)] =
+    ServePins.filter { case (per, ins) =>
+      medians.get(per).zip(medians.get(ins)).exists { case (p, i) => servePinFires(p, i) }
+    }
+
+  def servePinViolations(medians: Map[String, Double]): Seq[String] =
+    firingPins(medians).map { case (per, ins) =>
+      f"serve_pin: $per ${medians(per)}%.2fs > ${ServePinRatio}x $ins ${medians(ins)}%.2fs"
+    }
 
   // Designed-exchange declarations live ON the row definitions
   // (`graft.queries.Q.designHx`, assembled by `Q.designHxMap`) — a
@@ -165,12 +176,33 @@ object PlanGate {
   }
 
   /** The time rule: a time-eligible row fires when measured ÷ baseline is
-    * more than [[TimeRegressionFactor]] × the run's [[timeDivisor]].
-    * Exposed so the bench can re-measure the rows whose main-loop median
-    * would fire, back-to-back, before the gate renders its verdict. */
+    * more than [[TimeRegressionFactor]] × the run's [[timeDivisor]]. */
   def timeRegressionFires(b: Base, med: Double, spread: Double,
       divisor: Double): Boolean =
     timeEligible(b, med, spread) && med / b.medianS > TimeRegressionFactor * divisor
+
+  /** The rows the bench re-measures, in one pass before the verdict, from
+    * its main-loop query rows (`times`: name -> (warm median s, warm
+    * spread)): the 8 slowest noisy rows (warm spread over
+    * [[TimeSpreadCeiling]], median over [[TimeFloorS]]: contention hit
+    * them mid-run), every row the time rule fires on at `divisor`, and
+    * both rows of every firing serve pin. A main-loop median is measured
+    * minutes from its baseline twin and from its pin sibling, so an
+    * interference episode starting mid-run would otherwise ship as a
+    * violation. Sorted, each row once. */
+  def remeasure(times: Map[String, (Double, Double)],
+      baseline: Map[String, Base], divisor: Double): Seq[String] = {
+    val noisy = times.toSeq.collect {
+      case (name, (med, spread)) if spread > TimeSpreadCeiling && med > TimeFloorS =>
+        (name, med)
+    }.sortBy(-_._2).take(8).map(_._1)
+    val fired = times.collect { case (name, (med, spread))
+      if baseline.get(name).exists(timeRegressionFires(_, med, spread, divisor)) => name
+    }
+    val pinned = firingPins(times.map { case (k, (med, _)) => k -> med })
+      .flatMap { case (per, ins) => Seq(per, ins) }
+    (noisy ++ fired ++ pinned).distinct.sorted
+  }
 
   /** The gate: violation messages for `current` vs `baseline` (empty =
     * clean).

@@ -15,8 +15,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * site, which inflates string-grep counts ~5× on cache-heavy queries. */
 object PlanNodes {
 
-  /** All serve-plan nodes of `df`'s executed plan (run the query first so
-    * AQE has finalized; cached-build subplans excluded). */
+  /** All serve-plan nodes of `df`'s executed plan, cached-build subplans
+    * excluded. Execute `df`'s own plan first (`graft.Runs.materialize`,
+    * `collect()`) so AQE has finalized it: `count()` runs a new plan and
+    * leaves `df`'s initial plan in place. */
   def serveNodes(df: DataFrame): Seq[SparkPlan] =
     walk(df.queryExecution.executedPlan)
 
@@ -62,7 +64,8 @@ object PlanNodes {
 
   /** The per-row plan fingerprint the bench records and the plan gate
     * reads (`hashExchanges`, `cachedBroadcast`): exchange, join-strategy
-    * and AQE shuffle-read counts of `df`'s serve plan, in a fixed order.
+    * and AQE shuffle-read counts of `df`'s serve plan, in a fixed order;
+    * the bench reads it after its timed execution.
     * A string scan of the executed plan, not a Spark job. */
   def fingerprint(df: DataFrame): Seq[(String, Int)] = {
     val all = serveNodes(df)

@@ -206,13 +206,12 @@ class PlanGateSpec extends AnyFunSuite {
   }
 
   test("the COMMITTED baseline: a 2.05x slowdown fires at divisor 1, med is quiet") {
-    // Reads the real PLAN_BASELINE.json. Both rows spent rounds 11-16 on
-    // host-interference plateaus; their committed med is what the gate
-    // read before the calibrated rule.
+    // Reads the real PLAN_BASELINE.json: two heavy rows at their committed
+    // med, from the sf0.1 baseline timed over each row's whole result.
     val base = PlanGate.parseBaseline(java.nio.file.Files.readString(
       java.nio.file.Paths.get("PLAN_BASELINE.json")))
-    for ((row, med) <- Seq("dedup_ngram_jaccard_exact" -> 3.272,
-                           "retrieval_maxsim_topk" -> 8.312)) {
+    for ((row, med) <- Seq("dedup_ngram_jaccard_exact" -> 6.144,
+                           "retrieval_maxsim_topk" -> 13.912)) {
       assert(base(row).medianS === med)
       val v = PlanGate.violations(Map.empty, base,
         times = Map(row -> (2.05 * med, 0.1)), divisor = 1.0)
@@ -261,12 +260,20 @@ class PlanGateSpec extends AnyFunSuite {
     // `pipeline:<name>` time-gate row instead of failing here.
     val names = SparkEntry.pipelines.map(_._1)
     assert(names.distinct === names, names.diff(names.distinct))
-    val rows = PlanGate.parseBaseline(java.nio.file.Files.readString(
-        java.nio.file.Paths.get("PLAN_BASELINE.json")))
-      .keySet.collect { case k if k.startsWith("pipeline:") => k.stripPrefix("pipeline:") }
+    val base = PlanGate.parseBaseline(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("PLAN_BASELINE.json")))
+    val rows = base.keySet
+      .collect { case k if k.startsWith("pipeline:") => k.stripPrefix("pipeline:") }
     assert(rows.size === 41)
     assert(names.toSet === rows,
       s"no baseline row: ${names.toSet -- rows}; no build: ${rows -- names}")
+    // ...and exactly one row, with a time baseline, per conformance query.
+    val queryRows = base.filter { case (k, _) => !k.startsWith("pipeline:") }
+    assert(SparkEntry.queries.size === 292)
+    assert(queryRows.keySet === SparkEntry.queries.keySet,
+      s"no baseline row: ${SparkEntry.queries.keySet -- queryRows.keySet}; " +
+        s"no query: ${queryRows.keySet -- SparkEntry.queries.keySet}")
+    assert(queryRows.forall(_._2.medianS >= 0), queryRows.filter(_._2.medianS < 0).keys)
   }
 
   test("serve pins: the 1.25x ratio and the 0.3 s gap are both strict; " +
@@ -282,6 +289,32 @@ class PlanGateSpec extends AnyFunSuite {
     val dead = PlanGate.ServePins.flatMap { case (p, i) => Seq(p, i) }
       .filterNot(rows)
     assert(dead.isEmpty, dead)
+  }
+
+  test("re-measure picker: noisy, time-fired and both serve-pin rows; not quiet rows") {
+    val times = flat ++ Map(
+      "plain_query" -> (1.0, 0.8), // noisy: warm spread over the ceiling
+      "basket_part_pairs" -> (2.5, 0.1), // the time rule fires: x2.5 at divisor 1
+      "retrieval_maxsim_ivf_fwd" -> (3.0, 0.1), // the pin fires: 1.5x
+      "retrieval_maxsim_ivf" -> (2.0, 0.1),
+      "tiny_noisy" -> (0.2, 0.9)) // noisy, but under the time floor
+    val divisor = PlanGate.timeDivisor(baseline, times)
+    assert(divisor === 1.0)
+    assert(PlanGate.remeasure(times, baseline, divisor) === Seq("basket_part_pairs",
+      "plain_query", "retrieval_maxsim_ivf", "retrieval_maxsim_ivf_fwd"))
+    // Quiet rows (dedup_containment, tpch_q18_bucketed at ratio 1.0) alone
+    // pick nothing, and with no baseline (a subset run) the time rule
+    // picks nothing either.
+    assert(PlanGate.remeasure(flat, baseline, 1.0).isEmpty)
+    assert(PlanGate.remeasure(times, Map.empty, 1.0) === Seq("plain_query",
+      "retrieval_maxsim_ivf", "retrieval_maxsim_ivf_fwd"))
+    // Noisy rows: the 8 slowest only.
+    val noisy = (1 to 10).map(i => s"noisy$i" -> (i.toDouble, 0.9)).toMap
+    assert(PlanGate.remeasure(noisy, Map.empty, 1.0) ===
+      (3 to 10).map(i => s"noisy$i").sorted)
+    // The verdict reads the same pins on the final medians.
+    assert(PlanGate.servePinViolations(times.map { case (k, (m, _)) => k -> m }) ===
+      Seq("serve_pin: retrieval_maxsim_ivf_fwd 3.00s > 1.25x retrieval_maxsim_ivf 2.00s"))
   }
 
   test("baseline render/parse round-trips, with and without medians") {

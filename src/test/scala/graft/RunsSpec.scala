@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.engine.PlanNodes
 
 /** The harnesses' one run loop: what `Runs.measure` reports as the median
   * and spread, that a throw is a failure with its cause and no time, that
   * the build and action seconds account for the whole timed call, and that
-  * a run counts the classes codegen compiled in each part. */
+  * a run counts the classes codegen compiled in each part, and that the
+  * harnesses' action executes the frame's own plan, whole. */
 class RunsSpec extends SparkSpec {
 
   test("measure: median run over reps, spread over the warm reps only") {
@@ -67,5 +74,48 @@ class RunsSpec extends SparkSpec {
     assert(first.buildCompiles === 0L && first.runCompiles >= 1L, first)
     val Right(again) = Runs.time(q)(_.collect())
     assert(again.buildCompiles === 0L && again.runCompiles === 0L, again)
+  }
+
+  test("materialize executes the frame's own plan: final adaptive plan, every column") {
+    val dir = "/root/testdata/sf0.001"
+    val ran = scala.collection.mutable.Buffer.empty[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = ran.synchronized(ran += qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def run(name: String) = {
+      val Right(r) = Runs.time(SparkEntry.queries(name)(spark, dir)) { df =>
+        Runs.materialize(df); df }
+      r
+    }
+    spark.listenerManager.register(listener)
+    val (q1, fp) =
+      try (run("tpch_q1_pricing_summary"), run("text_fingerprint"))
+      finally {
+        org.apache.spark.graftx.ListenerDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    // The execution that ran is each frame's own QueryExecution (count()
+    // would have run a new one), and its adaptive plan is final.
+    for (r <- Seq(q1, fp)) {
+      assert(ran.exists(_ eq r.result.queryExecution))
+      r.result.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan)
+        case p => fail(s"not an adaptive plan: ${p.nodeName}")
+      }
+    }
+    // q1's eight aggregate functions (four sums, the two averages' sums and
+    // counts, less the shared sum(l_quantity), and count(1)) and
+    // text_fingerprint's fp_min8 projection ran; count() prunes both.
+    val aggs = PlanNodes.serveNodes(q1.result)
+      .collect { case a: BaseAggregateExec => a.aggregateExpressions.size }
+    assert(aggs.nonEmpty && aggs.forall(_ == 8), aggs)
+    assert(PlanNodes.serveNodes(fp.result).exists {
+      case p: ProjectExec => p.projectList.exists(_.name == "fp_min8")
+      case _ => false
+    })
+    // Build and run seconds are still split around the one action.
+    for (r <- Seq(q1, fp))
+      assert(r.buildS > 0 && r.runS > 0 && r.totalS === r.buildS + r.runS, r)
   }
 }
